@@ -12,10 +12,12 @@
 #                      highest-yield bug-finder here)
 #   make plan-lint   - forbidden-physical-plan scan
 #   make bench       - headline suite at sf0.1 (one JSON line)
+#   make perfbench   - the performance measure (BENCHMARK.json): its
+#                      own tests, then both workloads once at seed 1
 
 PY ?= python
 
-.PHONY: verify test oracles plan-lint bench rotation
+.PHONY: verify test oracles plan-lint bench perfbench rotation
 
 # run at round start, right after the driver writes CORRECTNESS_r*.json
 # (check_oracles refuses to sweep while ROTATION.json is stale)
@@ -37,3 +39,8 @@ plan-lint:
 
 bench:
 	$(PY) bench.py
+
+perfbench:
+	$(PY) -m pytest perfbench -q
+	$(PY) perfbench/run.py --workload warehouse_daily --seed 1 --seconds 36 --trace 0
+	$(PY) perfbench/run.py --workload pipeline_ops --seed 1 --seconds 36 --trace 0

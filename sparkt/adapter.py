@@ -19,8 +19,17 @@ layer is pluggable):
 - Views are catalog views (`CREATE OR REPLACE VIEW`).
 
 Thread-safety: many scheduler threads share the session (Spark is
-thread-safe); catalog DDL is serialized with a lock, mirroring the
-reference's relation-cache locking (SURVEY.md §7 "Concurrency").
+thread-safe). ``_ddl_lock`` guards only the adapter's catalog
+bookkeeping, mirroring the reference's relation-cache locking
+(SURVEY.md §7 "Concurrency"): the catalog swap of a rebuilt relation
+(drop the old entry, rename the tmp table, record), ``_catalog`` and
+its catalog.json writes, the per-schema listing behind
+``_cached_relation_type``, and the ensured-schema memo. Data jobs run
+outside it: a table (re)build writes a fresh version directory under a
+private ``__sparkt_tmp_<hex>`` name, so independent builds overlap.
+Invariant: one writer per relation — two threads never replace the
+same relation at once. Each relation belongs to one DAG node, and a
+microbatch model's concurrent batches run inside one job.
 """
 
 from __future__ import annotations
@@ -478,9 +487,9 @@ class SparkAdapter:
             ensured.add(schema)
 
     def drop_schema(self, schema: str) -> None:
-        getattr(self, "_schemas_ensured", set()).discard(schema)
-        getattr(self, "_listing", {}).pop(schema, None)
         with self._ddl_lock:
+            getattr(self, "_schemas_ensured", set()).discard(schema)
+            getattr(self, "_listing", {}).pop(schema, None)
             self.spark.sql(
                 f"DROP DATABASE IF EXISTS {self.quote(schema)} CASCADE"
             )
@@ -501,11 +510,12 @@ class SparkAdapter:
         on_configuration_change hash must persist across CLI
         invocations)."""
         key = f"{relation.schema}.{relation.identifier}"
-        entry = self._catalog.get(key)
-        if entry is None:
-            return
-        entry.setdefault("meta", {}).update(meta)
-        self._save_catalog()
+        with self._ddl_lock:
+            entry = self._catalog.get(key)
+            if entry is None:
+                return
+            entry.setdefault("meta", {}).update(meta)
+            self._save_catalog()
 
     def get_relation_meta(self, relation: Relation) -> dict:
         entry = (
@@ -666,12 +676,20 @@ class SparkAdapter:
         with self._ddl_lock:
             # the pre-drop matters only when a non-view occupies the
             # name (CREATE OR REPLACE VIEW cannot replace a table).
-            # The managed catalog answers that without a JVM getTable
-            # roundtrip (~12 ms, serialized under this lock) — only an
-            # unknown name pays the probe.
-            existing_type = self._cached_relation_type(
-                relation.schema, relation.identifier
-            )
+            # The managed catalog answers that without a JVM roundtrip
+            # (serialized under this lock). An external entry may be a
+            # table or a repair view, so it pays a getTable probe; only
+            # a name the catalog does not know pays the schema listing.
+            entry = self._catalog.get(f"{relation.schema}.{relation.identifier}")
+            if entry is None:
+                existing_type = self._cached_relation_type(
+                    relation.schema, relation.identifier
+                )
+            elif entry["kind"] == "external":
+                existing = self.get_relation(relation.schema, relation.identifier)
+                existing_type = existing and existing.type
+            else:
+                existing_type = "view" if entry["kind"] == "view" else "table"
             if existing_type == "table":
                 self.drop_relation(
                     Relation(schema=relation.schema,
@@ -711,12 +729,18 @@ class SparkAdapter:
         old files are only dropped after the new ones are fully written),
         which the incremental/snapshot rewrite paths rely on.
 
+        Only the swap (drop, rename ``__sparkt_tmp_<hex>``, record) holds
+        ``_ddl_lock``; the data job runs outside it. Invariant: no two
+        threads replace the SAME relation at once — each relation belongs
+        to one DAG node and microbatch concurrency stays inside one job.
+
         ``bucket_by``/``buckets``/``sort_by`` hash-bucket the table on
         write (Spark ``CLUSTERED BY ... INTO n BUCKETS``): two tables
         bucketed the same way join WITHOUT a shuffle — the co-located
         join path for repeated large joins at 100 TB.
         """
         assert (select_sql is None) != (df is None)
+        self.create_schema(relation.schema)
         loc = self._new_location(relation)
         part = (
             f" PARTITIONED BY ({', '.join(partition_by)})" if partition_by else ""
@@ -725,48 +749,42 @@ class SparkAdapter:
         tmp = relation.incorporate(
             identifier=f"{relation.identifier}__sparkt_tmp_{uuid.uuid4().hex[:6]}"
         )
-        if df is not None and not bucket_by:
+        if df is None:
+            self.spark.sql(
+                f"CREATE TABLE {tmp.render()} USING parquet{part}{buck} "
+                f"LOCATION '{_sql_str(self.spark, loc)}' AS {select_sql}"
+            )
+        elif bucket_by:
+            # saveAsTable: the bucket spec lives in the catalog
+            writer = (
+                df.write.mode("overwrite").format("parquet")
+                .option("path", loc)
+                .bucketBy(int(buckets or 8), *bucket_by)
+            )
+            if sort_by:
+                writer = writer.sortBy(*sort_by)
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.saveAsTable(tmp.render())
+        else:
             writer = df.write.mode("overwrite")
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(loc)
-        with self._ddl_lock:
-            self.create_schema(relation.schema)
-            if df is not None and bucket_by:
-                # bucketed writes go through saveAsTable (bucket spec
-                # lives in the catalog, bucket-id file naming on disk)
-                writer = (
-                    df.write.mode("overwrite").format("parquet")
-                    .option("path", loc)
-                    .bucketBy(int(buckets or 8), *bucket_by)
-                )
-                if sort_by:
-                    writer = writer.sortBy(*sort_by)
-                if partition_by:
-                    writer = writer.partitionBy(*partition_by)
-                writer.saveAsTable(tmp.render())
-            elif df is not None:
-                self.spark.sql(
-                    f"CREATE TABLE {tmp.render()} USING parquet "
-                    f"LOCATION '{_sql_str(self.spark, loc)}'"
-                )
-                if partition_by:
-                    # in-memory catalog doesn't auto-track partitions of a
-                    # location-registered table (scan would see 0 rows)
-                    self.spark.sql(
-                        f"ALTER TABLE {tmp.render()} RECOVER PARTITIONS"
-                    )
-            else:
-                self.spark.sql(
-                    f"CREATE TABLE {tmp.render()} USING parquet{part}{buck} "
-                    f"LOCATION '{_sql_str(self.spark, loc)}' AS {select_sql}"
-                )
-            # replaying a bucketed table needs an explicit column list
-            # (Spark refuses CLUSTERED BY on schema-inferred CREATE)
-            schema_ddl = (
-                self.spark.table(tmp.render()).schema.toDDL()
-                if bucket_by else None
+            self.spark.sql(
+                f"CREATE TABLE {tmp.render()} USING parquet "
+                f"LOCATION '{_sql_str(self.spark, loc)}'"
             )
+            if partition_by:
+                # in-memory catalog doesn't auto-track partitions of a
+                # location-registered table (scan would see 0 rows)
+                self.spark.sql(f"ALTER TABLE {tmp.render()} RECOVER PARTITIONS")
+        # replaying a bucketed table needs an explicit column list
+        # (Spark refuses CLUSTERED BY on schema-inferred CREATE)
+        schema_ddl = (
+            self.spark.table(tmp.render()).schema.toDDL() if bucket_by else None
+        )
+        with self._ddl_lock:
             existing = self.get_relation(relation.schema, relation.identifier)
             if existing is not None:
                 self.drop_relation(existing)
@@ -875,7 +893,8 @@ class SparkAdapter:
         # branch KeyError'd on entry['location'] — the fixpoint loop
         # then silently dropped the clone (and its grants) from the
         # catalog on every restart
-        self._record(target, kind="clone", cloned_from=source_name)
+        with self._ddl_lock:
+            self._record(target, kind="clone", cloned_from=source_name)
 
     @staticmethod
     def merge_into_sql(

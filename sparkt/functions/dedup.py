@@ -747,7 +747,11 @@ def duplicate_clusters(
     costs two full Spark jobs of fixed latency. A 100 TB corpus whose
     pair stage emits billions of edges takes the distributed path
     automatically; ``driver_threshold=0`` forces it (the d9 gate pins
-    it that way). Both paths produce identical labels (pytest-pinned).
+    it that way). ``driver_threshold`` counts RAW pairs — distinct
+    (id_a, id_b) rows as given, self-pairs and both orientations
+    included — not canonical edges. Both paths produce identical
+    labels (pytest-pinned), null ids included: a null id joins no
+    component and comes back once as its own (null, null) singleton.
 
     Alternating large-star/small-star contraction (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14):
@@ -828,8 +832,10 @@ def duplicate_clusters(
             u, v = r["u"], r["v"]
             members.add(u)
             members.add(v)
-            if u == v:
-                continue  # self-pair: singleton unless edged elsewhere
+            if u == v or u is None or v is None:
+                # self-pair or null id: singleton unless edged elsewhere
+                # (a null never equals anything, as in the equijoins)
+                continue
             ra, rb = _find(u), _find(v)
             if ra != rb:
                 if rb < ra:
@@ -840,10 +846,13 @@ def duplicate_clusters(
             [StructField("doc", utype), StructField("cluster", utype)]
         )
         # edge-less members label themselves: the singleton clusters
-        # the old anti-join branch produced, now for free
-        return pairs.sparkSession.createDataFrame(
-            [(x, _find(x)) for x in sorted(members)], schema
-        )
+        # the old anti-join branch produced, now for free; a null id
+        # is one (null, null) row, as the distributed path's distinct
+        # singles branch emits it
+        rows = [(x, _find(x)) for x in sorted(members - {None})]
+        if None in members:
+            rows.append((None, None))
+        return pairs.sparkSession.createDataFrame(rows, schema)
 
     # canonical (child > parent) orientation; both star steps preserve it
     edges = (

@@ -95,3 +95,108 @@ def test_deferred_version_gc_protects_inflight_readers(spark, tmp_path):
     assert v1[0] not in v3
     assert spark.table("t_gc.tbl").count() == 300
     adapter.drop_schema("t_gc")
+
+
+def test_create_table_as_builds_overlap(spark, tmp_path):
+    """Only the catalog swap holds the adapter's DDL lock, so two
+    threads building DIFFERENT tables run their CTAS data jobs at the
+    same time. Every CTAS waits on a two-party barrier before it runs;
+    if the statements ran one after the other the barrier would break
+    and both builds would fail."""
+    import threading
+
+    from sparkt.adapter import SparkAdapter
+    from sparkt.relation import Relation
+
+    barrier = threading.Barrier(2, timeout=30)
+
+    class BarrierSpark:
+        """The session, except that ``CREATE TABLE ... AS`` meets the
+        other builder at the barrier first."""
+
+        def sql(self, text, *args, **kwargs):
+            if text.startswith("CREATE TABLE") and " AS " in text:
+                barrier.wait()
+            return spark.sql(text, *args, **kwargs)
+
+        def __getattr__(self, name):
+            return getattr(spark, name)
+
+    adapter = SparkAdapter(spark, str(tmp_path / "wh"))
+    adapter.spark = BarrierSpark()
+    rels = [Relation(schema="t_overlap", identifier=f"m{i}") for i in (1, 2)]
+    errors = []
+
+    def build(rel, n):
+        try:
+            adapter.create_table_as(rel, select_sql=f"select id from range({n})")
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    threads = [
+        threading.Thread(target=build, args=(rel, 10 * i))
+        for i, rel in enumerate(rels, start=1)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert not barrier.broken
+    assert [spark.table(r.render()).count() for r in rels] == [10, 20]
+    adapter.drop_schema("t_overlap")
+
+
+def test_parallel_rebuilds_restore_newest_versions(make_project, spark):
+    """k independent table models rebuilt on k threads (more threads
+    than cores, with frequent interpreter thread switches), twice: a
+    fresh adapter over the same warehouse restores every table, with its
+    row count, from a catalog.json entry that points at the table's
+    newest version directory. A lost catalog update breaks this."""
+    import json
+    import os
+    import sys
+
+    from sparkt.adapter import SparkAdapter
+
+    k = 8
+    files = {
+        "dbt_project.yml": "name: rebuild\nmodel-paths: [models]\nseed-paths: [seeds]\n",
+        "seeds/base.csv": "id\n" + "".join(f"{i}\n" for i in range(1, 81)),
+    }
+    for i in range(1, k + 1):
+        files[f"models/t{i}.sql"] = (
+            "{{ config(materialized='table') }}\n"
+            f"select id from {{{{ ref('base') }}}} where id <= {10 * i}"
+        )
+    runner = make_project(files, schema="t_rebuild")
+    assert runner.seed().ok
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for _ in range(2):
+            res = runner.run(threads=k)
+            assert res.ok, [
+                r.message for r in res.results if r.status == "error"
+            ]
+    finally:
+        sys.setswitchinterval(interval)
+    wh = runner.project.warehouse_dir
+    with open(os.path.join(wh, "catalog.json")) as f:
+        catalog = json.load(f)
+    for i in range(1, k + 1):
+        spark.sql(f"DROP TABLE t_rebuild.t{i}")  # as if a new process
+
+    SparkAdapter(spark, wh)
+    for i in range(1, k + 1):
+        loc = catalog[f"t_rebuild.t{i}"]["location"]
+        versions = sorted(os.listdir(os.path.dirname(loc)))
+        assert len(versions) == 2  # the rebuild kept one previous version
+        assert os.path.basename(loc) == versions[-1]
+        assert spark.table(f"t_rebuild.t{i}").count() == 10 * i
+    assert not [
+        t.name for t in spark.catalog.listTables("t_rebuild")
+        if "__sparkt_tmp_" in t.name
+    ]
+    runner.adapter.drop_schema("t_rebuild")

@@ -1673,6 +1673,23 @@ def test_duplicate_clusters_self_pairs_singletons(spark):
     assert got == {1: 1, 2: 1, 3: 3, 4: 4}
 
 
+def test_duplicate_clusters_null_ids_singletons(spark):
+    """Null ids join no component and come back as one (null, null)
+    singleton on BOTH paths; the driver union-find used to raise
+    TypeError comparing None with an int."""
+    from sparkt.functions.dedup import duplicate_clusters
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (None, None), (4, 4)],
+        "id_a long, id_b long",
+    )
+    for threshold in (1_000_000, 0):  # driver path, distributed path
+        rows = duplicate_clusters(pairs, driver_threshold=threshold).collect()
+        assert sorted(
+            (tuple(r) for r in rows), key=lambda t: (t[0] is None, t[0] or 0)
+        ) == [(1, 1), (2, 1), (3, 3), (4, 4), (None, None)], threshold
+
+
 def test_minhash_family_distinct_above_eight(spark):
     """Regression (review finding, verified): n_hashes=16 previously
     duplicated offsets (mh8..15 == mh0..7); all members must be
