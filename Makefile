@@ -20,9 +20,11 @@ PY ?= python
 .PHONY: verify test oracles plan-lint bench perfbench rotation
 
 # run at round start, right after the driver writes CORRECTNESS_r*.json
-# (check_oracles refuses to sweep while ROTATION.json is stale)
+# (check_oracles refuses to sweep while ROTATION.json is stale);
+# `make rotation RESET="gate_a gate_b"` forces gates whose path changed
+# to the front of the run order
 rotation:
-	$(PY) scripts/update_rotation.py
+	$(PY) scripts/update_rotation.py $(if $(RESET),--reset $(RESET))
 
 verify: test oracles plan-lint
 

@@ -138,18 +138,6 @@ def hash_family_member(digest: Column, i: int, n_hashes: int = 8) -> Column:
     )
 
 
-def _seeded_md5(seed: int):
-    # retained for callers wanting an explicit seeded family (n_hashes
-    # md5s per element — the rotation family above is the cheap path).
-    # NB: must be a 1-arg lambda — pyspark treats a 2-parameter lambda
-    # as (element, index), so a `lambda s, i=i:` closure silently
-    # hashes with the POSITION as part of the captured variable
-    def fn(s: Column) -> Column:
-        return F.md5(F.concat(F.lit(f"{seed}|"), s))
-
-    return fn
-
-
 def _rot_md5(i: int, n_hashes: int):
     # 1-arg factory (a 2-param lambda would be treated as (element, index))
     def fn(s: Column) -> Column:

@@ -143,7 +143,8 @@ def extract_image_features(df: DataFrame, n_features: int = 8) -> DataFrame:
 
 def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
     """Video frame-sampling *plan*: expands (item, n_frames) into frame
-    tasks without touching bytes (decode stub raises)."""
+    tasks without touching bytes (:func:`sample_video_frames` runs the
+    stubbed decode)."""
     return (
         df.withColumn("n_frames", (F.length("content") % 100) + 1)
         .withColumn(
@@ -151,12 +152,6 @@ def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
             F.explode(F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))),
         )
         .select("item_id", "frame_idx")
-    )
-
-
-def decode_video_frame(item_id: int, frame_idx: int) -> bytes:
-    raise NotImplementedError(
-        "video decode requires ffmpeg bindings not present in this container"
     )
 
 

@@ -429,24 +429,24 @@ def ivf_topk(
 def _pair_scores_arrow(
     left: DataFrame, right: DataFrame, threshold: float, id_type
 ) -> DataFrame:
-    """Cell-cogrouped Arrow pair scorer — the scale twin of the
-    expression path's per-pair HOF cosine in
-    :func:`cosine_neardup_pairs` (guide §4: hand whole batches to
-    numpy instead of interpreting a 64-term fold per candidate pair;
-    r15 measured the HOF fold at 785 s for the 500k/256-cell rung's
-    ~3.9 G pairs, dominated by per-pair interpretation AND by
-    materializing every joined pair row in the JVM).
+    """Cell-cogrouped Arrow pair scorer of :func:`cosine_neardup_pairs`
+    (guide §4: hand whole batches to numpy instead of interpreting a
+    64-term fold per candidate pair; the per-pair HOF join this
+    replaced took 785 s for the 500k/256-cell rung's ~3.9 G pairs,
+    dominated by per-pair interpretation AND by materializing every
+    joined pair row in the JVM — this scorer took 45.5 s).
 
     Each vector crosses the Python boundary ONCE PER CELL MEMBERSHIP
     (n·(1+n_probe) rows), never once per pair — the §8 rule: decide
     with a matmul, don't move payloads per decision. Only surviving
     pairs come back.
 
-    BIT-EXACT parity with the expression path (pytest-pinned), in two
-    phases per block: (1) a BLAS matmul computes PREFILTER scores only
-    — reassociated summation, never returned; its deviation from the
-    sequential fold is ≤ dim·eps (Cauchy-Schwarz), nine orders below
-    the prefilter margin; (2) pairs surviving the prefilter (the
+    BIT-EXACT parity with Spark's ``dot(va, vb) / (na * nb)``
+    (pytest-pinned), in two phases per block: (1) a BLAS matmul
+    computes PREFILTER scores only — reassociated summation, never
+    returned; its deviation from the sequential fold is ≤ dim·eps
+    (Cauchy-Schwarz), nine orders below the prefilter margin; (2)
+    pairs surviving the prefilter (the
     ~0.1-1% near the threshold at production settings) get their dot
     recomputed as the exact left-assoc fold, one dimension at a time
     (``acc += Ai[:, d] * Bj[:, d]``) — the identical IEEE-double op
@@ -525,30 +525,27 @@ def cosine_neardup_pairs(
     dim: int = 64,
     n_cells: int = 8,
     n_probe: int | None = None,
-    scorer: str = "auto",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cos ≥
-    threshold) via an IVF-cell bucketed EQUIJOIN — never an all-pairs
-    nested-loop join.
+    threshold) scored per IVF cell — never an all-pairs nested-loop
+    join.
 
     Every row is assigned its argmax-dot pseudo-centroid cell (the
-    join's right side); the left side emits one row per probed cell.
+    right side); the left side emits one row per probed cell.
     ``n_probe=None`` probes ALL cells: every pair then co-occurs in the
     right row's home cell exactly once, so the result is provably
     identical to brute force (same trick as ``ivf_topk`` full-probe) —
-    that's the oracle-parity mode the gate runs. At 100 TB you set
-    ``n_probe`` small: cells become the partition key, the shuffle is an
-    equijoin on cell id, and only nearby cells are compared.
+    that's the oracle-parity mode the gates run. At 100 TB you set
+    ``n_probe`` small: cells become the cogroup key and only nearby
+    cells are compared.
 
-    ``scorer``: how candidate pairs are scored. ``"expr"`` = the
-    engine-portable per-pair HOF cosine inside the cell equijoin (the
-    oracle gates' path); ``"arrow"`` = :func:`_pair_scores_arrow`, a
-    cell-cogrouped numpy block scorer that is bit-identical by
-    construction (pytest-pinned) and orders of magnitude faster when
-    within-cell candidate volume is large; ``"auto"`` (default)
-    follows the ``_PANDAS_ASSIGN_MIN_CELLS`` convention — large cell
-    counts mark the scale configuration, small ones the oracle-parity
-    gates."""
+    Candidate pairs are scored by :func:`_pair_scores_arrow`, a
+    cell-cogrouped numpy block scorer whose cosines are bit-identical
+    to the ``dot``/``norm`` expression by construction; the 4dp HALF_UP
+    round and the threshold filter stay in the JVM. Rows with a null
+    id or vector never pair; a zero vector's cosine is NaN and never
+    passes the threshold."""
+    df = df.filter(F.col(id_col).isNotNull() & F.col(vec).isNotNull())
     cents = _pseudo_centroids(dim, n_cells)
     big = n_cells >= _PANDAS_ASSIGN_MIN_CELLS
     assign = (
@@ -580,26 +577,11 @@ def cosine_neardup_pairs(
         norm(F.col(vec)).alias("na"),
         F.explode(probes).alias("cell"),
     )
-    if scorer not in ("auto", "expr", "arrow"):
-        raise ValueError(f"scorer must be auto|expr|arrow, got {scorer!r}")
-    if scorer == "arrow" or (scorer == "auto" and big):
-        raw = _pair_scores_arrow(
-            left, right, threshold, df.schema[id_col].dataType
-        )
-        # authoritative 4dp round + threshold stay JVM-side (HALF_UP)
-        return (
-            raw.withColumn("cos", F.round("cos", 4))
-            .filter(F.col("cos") >= threshold)
-            .select("id_a", "id_b", "cos")
-        )
+    raw = _pair_scores_arrow(
+        left, right, threshold, df.schema[id_col].dataType
+    )
     return (
-        left.join(right, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos",
-            F.round(dot(F.col("va"), F.col("vb"))
-                    / (F.col("na") * F.col("nb")), 4),
-        )
+        raw.withColumn("cos", F.round("cos", 4))
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
     )
@@ -788,17 +770,17 @@ def kmeans_assign_pandas(
 def _argmin_l2_exact_pandas(
     vec: Column, mat: list[list[float]]
 ) -> Column:
-    """Argmin-L2 with the expression path's EXACT arithmetic, one
+    """Argmin-L2 with :func:`kmeans_assign`'s EXACT arithmetic, one
     vectorized numpy pass per Arrow batch: squared L2 accumulates one
     dimension at a time (``acc += (x−y)·(x−y)``, dims ascending — the
-    identical IEEE-double op order as :func:`kmeans_assign`'s
-    zip_with/aggregate fold), so every distance and the first-minimum
-    tie-break (np.argmin = first occurrence = ``array_position``'s
-    lowest index) are bit-identical to the expression path.
+    identical IEEE-double op order as the zip_with/aggregate fold), so
+    every distance and the first-minimum tie-break (np.argmin = first
+    occurrence = ``array_position``'s lowest index) are bit-identical.
     :func:`kmeans_assign_pandas`'s matmul shortcut reassociates the
     sum and is pinned only empirically — fine for the scale configs,
     not for an oracle-hashed gate. This variant is exact by
-    construction (the W1 phase-2 argument applied to argmin)."""
+    construction (the W1 phase-2 argument applied to argmin). A null
+    vector gets a null cell, as the fold's null distances do."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -806,14 +788,16 @@ def _argmin_l2_exact_pandas(
 
     @pandas_udf("int")
     def _assign(v: pd.Series) -> pd.Series:
-        X = np.array(v.tolist(), dtype=np.float64)
-        if X.size == 0:
-            return pd.Series([], dtype="int32")
+        ok = v.notna().to_numpy()
+        X = np.array(v[ok].tolist(), dtype=np.float64)
+        X = X.reshape(len(X), M.shape[1])
         acc = np.zeros((X.shape[0], M.shape[0]))
         for d in range(M.shape[1]):
             diff = X[:, d, None] - M[None, :, d]
             acc += diff * diff
-        return pd.Series(acc.argmin(axis=1).astype("int32"))
+        out = pd.Series(pd.NA, index=v.index, dtype="Int32")
+        out[ok] = acc.argmin(axis=1)
+        return out
 
     return _assign(vec)
 
@@ -922,33 +906,26 @@ def _pq_codebooks(
     return books
 
 
-def _argmin_code(dists: Column) -> Column:
-    """First occurrence of the minimum = lowest-index tie-break (same
-    contract as :func:`kmeans_assign`; DuckDB mirror is
-    ``list_position(d, list_min(d)) - 1``)."""
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-
 def _pq_codes_pandas(
     vec: Column, books: list[list[list[float]]]
 ) -> Column:
-    """PQ code array via one vectorized numpy pass per Arrow batch —
-    the scale twin of :func:`pq_encode`'s per-subspace expression
-    argmin. BIT-EXACT: per subspace the squared L2 to all codes
-    accumulates one dimension at a time (identical IEEE op order as
-    :func:`_l2sq`'s fold) and np.argmin's first-occurrence tie-break
-    equals ``array_position``'s lowest index (pytest-pinned)."""
+    """PQ code array via one vectorized numpy pass per Arrow batch.
+    BIT-EXACT against the per-subspace ``_l2sq`` fold the DuckDB
+    oracle replays: the squared L2 to all codes accumulates one
+    dimension at a time (identical IEEE op order) and np.argmin's
+    first-occurrence tie-break equals ``array_position``'s lowest index
+    (pytest-pinned). A null vector encodes as ``m`` null codes."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     B = np.array(books, dtype=np.float64)  # (m, n_codes, sub)
+    m, n_codes, sub = B.shape
 
     @pandas_udf("array<int>")
     def _codes(v: pd.Series) -> pd.Series:
-        X = np.array(v.tolist(), dtype=np.float64)
-        if X.size == 0:
-            return pd.Series([], dtype=object)
-        m, n_codes, sub = B.shape
+        ok = v.notna().to_numpy()
+        X = np.array(v[ok].tolist(), dtype=np.float64)
+        X = X.reshape(len(X), m * sub)
         out = np.empty((X.shape[0], m), dtype=np.int32)
         for j in range(m):
             Xs = X[:, j * sub:(j + 1) * sub]
@@ -957,7 +934,10 @@ def _pq_codes_pandas(
                 diff = Xs[:, d, None] - B[j, None, :, d]
                 acc += diff * diff
             out[:, j] = acc.argmin(axis=1)
-        return pd.Series([r.tolist() for r in out])
+        codes = iter(out.tolist())
+        return pd.Series(
+            [next(codes) if o else [None] * m for o in ok], dtype=object
+        )
 
     return _codes(vec)
 
@@ -970,43 +950,24 @@ def pq_encode(
     m: int = 8,
     n_codes: int = 16,
     keep: list[str] | None = None,
-    encoder: str = "expr",
 ) -> DataFrame:
     """Product-quantization encode: each ``dim``-float vector becomes
     ``m`` small integer codes (argmin-L2 sub-quantizer per subspace) —
-    a PURE PROJECTION, no join, no shuffle, no Python.
+    a PURE PROJECTION, no join, no shuffle. The codes come from one
+    numpy pass per Arrow batch (:func:`_pq_codes_pandas`), bit-exact
+    against the sequential squared-L2 fold; a null vector encodes as
+    ``m`` null codes.
 
     This is the memory scale path for ANN corpora beyond
     :func:`quantize_int8`'s 4×: at dim=64/m=8 the stored row shrinks
     from 256 B of floats to 8 code bytes (32×), so a 100 TB embedding
     corpus's searchable index fits in ~3 TB of executor memory and the
     ADC scan in :func:`ivfpq_topk` reads 32× fewer bytes."""
-    sub = dim // m
     books = _pq_codebooks(dim, m, n_codes)
     cols = [F.col(id_col)] + [F.col(c) for c in (keep or [])]
-    if encoder not in ("expr", "arrow"):
-        raise ValueError(f"encoder must be expr|arrow, got {encoder!r}")
-    if encoder == "arrow":
-        # bit-identical numpy batch encode (guide §4): the expression
-        # path's m·n_codes·sub interpreted fold ops per row cost 23.5 s
-        # for 500k rows at the r16 rung; one vectorized pass per Arrow
-        # batch does the same arithmetic in the same IEEE order
-        return df.select(
-            *cols, _pq_codes_pandas(F.col(vec), books).alias("codes")
-        )
-
-    # closure factory, NOT `lambda c, _sv=sv`: a two-param lambda makes
-    # F.transform pass (element, index) and the INDEX silently replaces
-    # the default — the bug the s12 gate caught on first execution.
-    def _dist_to(sv):
-        return lambda c: _l2sq(sv, c)
-
-    codes = []
-    for j, book in enumerate(books):
-        sv = F.slice(F.col(vec), j * sub + 1, sub)
-        dists = F.transform(_const_matrix(book), _dist_to(sv))
-        codes.append(_argmin_code(dists))
-    return df.select(*cols, F.array(*codes).alias("codes"))
+    return df.select(
+        *cols, _pq_codes_pandas(F.col(vec), books).alias("codes")
+    )
 
 
 def ivfpq_topk(
@@ -1021,7 +982,6 @@ def ivfpq_topk(
     query_id: str = "query_id",
     corpus_id: str = "corpus_id",
     vec: str = "embedding",
-    encoder: str = "expr",
 ) -> DataFrame:
     """IVF-PQ approximate nearest neighbours (the FAISS IVFPQ
     architecture, re-expressed Spark-first): the corpus is coarsely
@@ -1033,28 +993,24 @@ def ivfpq_topk(
 
     100 TB shape: the probe is an EQUIJOIN on cell id (queries
     broadcast, corpus cluster-pruned by cell — never a cartesian scan),
-    and the per-candidate score is ``m`` literal-matrix lookups + an
-    8-float fold, all inside whole-stage codegen over rows 32× smaller
-    than the raw vectors. No residual encoding (FAISS
+    and the per-candidate score is ``m`` lookups into the query's
+    distance table + an ``m``-term fold over rows 32× smaller than the
+    raw vectors. The corpus side — cell assign and PQ encode, the
+    per-row cost that grows with the corpus — runs as numpy batch
+    passes (:func:`_argmin_l2_exact_pandas`, :func:`_pq_codes_pandas`)
+    with the same IEEE fold order and first-minimum tie-break as the
+    query side's ``_l2sq`` expressions; a null corpus vector gets a
+    null cell and never joins. No residual encoding (FAISS
     ``by_residual=false``): codes quantize the raw vector, which keeps
     the codebooks cell-independent and the oracle exact."""
     sub = dim // m
     cents = _pseudo_centroids(dim, n_cells)
     books = _pq_codebooks(dim, m, n_codes)
-    # encoder='arrow' (r16): the corpus-side cell assign + PQ encode —
-    # n_cells·dim + m·n_codes·sub interpreted fold ops per row, 38 s
-    # of the 52 s rung wall — run as bit-exact numpy batch passes
-    # (same IEEE fold order, same first-min tie-break; pytest-pinned)
-    assign = (
-        _argmin_l2_exact_pandas(F.col(vec), cents)
-        if encoder == "arrow"
-        else kmeans_assign(F.col(vec), cents)
-    )
     enc = pq_encode(
         corpus.select(
             F.col(corpus_id),
             F.col(vec),
-            assign.alias("cell"),
+            _argmin_l2_exact_pandas(F.col(vec), cents).alias("cell"),
         ),
         id_col=corpus_id,
         vec=vec,
@@ -1062,7 +1018,6 @@ def ivfpq_topk(
         m=m,
         n_codes=n_codes,
         keep=["cell"],
-        encoder=encoder,
     )
     # query probe list: the n_probe nearest coarse cells by iterated
     # argmin-L2 with lowest-index tie-break — round p masks the p-1

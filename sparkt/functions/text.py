@@ -116,32 +116,6 @@ def _stopword_hits(text: Column, words: list[str]) -> Column:
     return F.size(F.filter(tokens(text), lambda t: t.isin(words)))
 
 
-def quality_features(text: Column) -> dict[str, Column]:
-    """Length / punctuation / stopword / alpha ratios (classic quality
-    filters for pretraining corpora)."""
-    n_chars = F.length(text)
-    n_tokens = token_count(text)
-    alpha_chars = F.length(F.regexp_replace(text, "[^a-zA-Z]", ""))
-    punct_chars = F.length(
-        F.regexp_replace(text, r"[^.,;:!?'\"()\[\]{}-]", "")
-    )
-    stop_hits = _stopword_hits(text, EN_STOPWORDS)
-    return {
-        "n_chars": n_chars,
-        "n_tokens": n_tokens,
-        "alpha_ratio": F.round(alpha_chars / F.greatest(n_chars, F.lit(1)), 6),
-        "punct_ratio": F.round(punct_chars / F.greatest(n_chars, F.lit(1)), 6),
-        "stopword_ratio": F.round(
-            stop_hits / F.greatest(n_tokens, F.lit(1)), 6
-        ),
-        "avg_token_len": F.round(
-            F.length(F.regexp_replace(text, r"\s+", ""))
-            / F.greatest(n_tokens, F.lit(1)),
-            6,
-        ),
-    }
-
-
 def quality_score(text: Column) -> Column:
     """Composite [0,1] quality score (monotone in signals a curation
     pipeline keys on; fixed weights so it is reproducible).

@@ -740,13 +740,9 @@ def s12_ivfpq(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    # encoder='arrow' (r16): corpus-side cell assign + PQ encode run
-    # as bit-exact numpy batch passes (same IEEE fold order and
-    # tie-break as the expression path, pytest-pinned) — the
-    # interpreted fold was 38 s of the 52 s 500k-rung wall
     return S.ivfpq_topk(
         queries, corpus, dim=64, k=5, m=8, n_codes=16,
-        n_cells=8, n_probe=2, encoder="arrow",
+        n_cells=8, n_probe=2,
     ).orderBy("query_id", "rank")
 
 
@@ -861,17 +857,17 @@ def d6_embedding_neardup(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs (threshold 0.35 — random
     vectors top out ≈0.5 cosine).
 
-    scorer='arrow' (r16): bit-identical to the expression path by
-    construction (pinned at full-probe gate shape by
-    test_arrow_pair_scorer_matches_expression_path), and it sidesteps
-    the giant per-pair HOF fold whose generated code costs ~100 s of
-    C2 JIT warm-up on a fresh JVM (isolated walls 99.6/44.6/11.5/2.9 s
-    over four reps; arrow path is flat ~2 s from rep 1)."""
+    Pairs are scored by the cell-cogrouped numpy scorer, bit-identical
+    to the ``dot``/``norm`` expression by construction (pinned at
+    full-probe gate shape in tests/test_scale_plans.py). The per-pair
+    HOF join it replaced cost ~100 s of C2 JIT warm-up for its
+    generated code on a fresh JVM (isolated walls 99.6/44.6/11.5/2.9 s
+    over four reps; the numpy scorer is flat ~2 s from rep 1)."""
     emb = T(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
     return S.cosine_neardup_pairs(
-        emb, "vec_id", "embedding", 0.35, scorer="arrow"
+        emb, "vec_id", "embedding", 0.35
     ).orderBy("id_a", "id_b")
 
 
@@ -1544,11 +1540,7 @@ def sd1_semantic_dedup(spark, sf_dir):
     emb = T(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    # scorer='arrow': bit-identical (pytest-pinned), avoids the d6
-    # expression path's ~100 s fresh-JVM JIT warm-up (see d6 docstring)
-    pairs = S.cosine_neardup_pairs(
-        emb, "vec_id", "embedding", 0.35, scorer="arrow"
-    )
+    pairs = S.cosine_neardup_pairs(emb, "vec_id", "embedding", 0.35)
     clusters = D.duplicate_clusters(pairs)
     return (
         clusters.groupBy("cluster")
@@ -1838,11 +1830,7 @@ def pl2_vector_pipeline(spark, sf_dir):
     # transform chain — Catalyst duplicates non-cheap subtrees
     # wholesale, and the analysis/codegen blowup dominated the gate
     # (35 s -> measured after this change in GATE_BUDGETS)
-    # scorer='arrow': bit-identical (pytest-pinned), avoids the d6
-    # expression path's ~100 s fresh-JVM JIT warm-up (see d6 docstring)
-    pairs = S.cosine_neardup_pairs(
-        deq, "vec_id", "embedding", 0.35, scorer="arrow"
-    )
+    pairs = S.cosine_neardup_pairs(deq, "vec_id", "embedding", 0.35)
     clusters = D.duplicate_clusters(pairs)
     drop = clusters.filter(F.col("doc") != F.col("cluster")).select(
         F.col("doc").alias("vec_id")

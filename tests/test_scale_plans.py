@@ -528,19 +528,24 @@ def test_ivf_recall_vs_brute_force_bounds(spark):
 
 
 def test_arrow_pair_scorer_matches_expression_path(spark):
-    """r16: the cell-cogrouped Arrow pair scorer
-    (similarity._pair_scores_arrow) replaces the per-pair interpreted
-    HOF cosine at large cell counts. Contract: BIT-identical doubles —
-    the numpy block fold accumulates one dimension at a time, which is
-    the same left-assoc IEEE order as aggregate(zip_with(...)); na·nb
-    and the division are single IEEE ops; round/threshold stay in the
-    JVM. Pinned two ways: (1) unrounded cosines of EVERY pair equal the
-    expression join's bit for bit, (2) full gate-shape output parity on
-    both a pruned-probe and a full-probe configuration."""
+    """The cell-cogrouped Arrow pair scorer
+    (similarity._pair_scores_arrow) is cosine_neardup_pairs' only
+    scorer. Contract: BIT-identical doubles — the numpy block fold
+    accumulates one dimension at a time, which is the same left-assoc
+    IEEE order as aggregate(zip_with(...)); na·nb and the division are
+    single IEEE ops; round/threshold stay in the JVM. Pinned two ways:
+    (1) unrounded cosines of EVERY pair equal a hand-written
+    expression join's bit for bit, (2) cosine_neardup_pairs output
+    equals a brute-force dot/norm cross join — restricted, for the
+    pruned-probe configuration, to the pairs whose right-hand home
+    cell is among the left vector's probes (cells and probes computed
+    independently in numpy with the same sequential fold)."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from sparkt.functions.similarity import (
-        _pair_scores_arrow, cosine_neardup_pairs, dot, norm,
+        _pair_scores_arrow, _pseudo_centroids, cosine_neardup_pairs, dot,
+        norm,
     )
     from sparkt.sources import load_parquet
 
@@ -549,7 +554,7 @@ def test_arrow_pair_scorer_matches_expression_path(spark):
     ).withColumn("embedding", F.col("embedding").cast("array<double>"))
     sub = emb.filter(F.col("vec_id") < 400)
 
-    # (1) bit-exactness of the raw scorer: one shared cell, all pairs
+    # (1) bit-exactness of the raw pair scores: one shared cell
     left = sub.select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"),
         norm(F.col("embedding")).alias("na"), F.lit(0).alias("cell"),
@@ -577,41 +582,117 @@ def test_arrow_pair_scorer_matches_expression_path(spark):
     }
     assert arrow == expr  # exact float equality, no tolerance
 
-    # (2) end-to-end output parity, pruned and full probe
-    for kwargs in (
-        {"n_cells": 64, "n_probe": 2},
-        {"n_cells": 8, "n_probe": None},
+    # (2) end-to-end output vs brute force, pruned and full probe
+    brute = sorted(map(tuple, (
+        left.drop("cell").join(right.drop("cell"),
+                               F.col("id_a") < F.col("id_b"))
+        .select(
+            "id_a", "id_b",
+            F.round(dot(F.col("va"), F.col("vb"))
+                    / (F.col("na") * F.col("nb")), 4).alias("cos"),
+        )
+        .filter(F.col("cos") >= 0.35)
+        .collect()
+    )))
+    assert len(brute) > 0  # non-vacuous
+
+    vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
+            for r in sub.collect()}
+    n_cells, n_probe = 64, 2
+    cents = np.array(_pseudo_centroids(64, n_cells), dtype=np.float64)
+
+    def cell_scores(v):
+        acc = np.zeros(n_cells)
+        for d in range(64):  # the dot fold's order, dims ascending
+            acc += v[d] * cents[:, d]
+        return acc
+
+    # (score, cell) descending: ties take the larger cell id
+    ranked = {i: sorted(zip(cell_scores(v), range(n_cells)), reverse=True)
+              for i, v in vecs.items()}
+    home = {i: r[0][1] for i, r in ranked.items()}
+    probes = {i: {c for _, c in r[:n_probe]} for i, r in ranked.items()}
+    pruned = [p for p in brute if home[p[1]] in probes[p[0]]]
+    assert 0 < len(pruned) < len(brute)
+
+    for kwargs, want in (
+        ({"n_cells": n_cells, "n_probe": n_probe}, pruned),
+        ({"n_cells": 8, "n_probe": None}, brute),
     ):
-        rows_expr = sorted(
-            map(tuple, cosine_neardup_pairs(
-                sub, "vec_id", "embedding", 0.35, dim=64,
-                scorer="expr", **kwargs,
-            ).collect())
-        )
-        rows_arrow = sorted(
-            map(tuple, cosine_neardup_pairs(
-                sub, "vec_id", "embedding", 0.35, dim=64,
-                scorer="arrow", **kwargs,
-            ).collect())
-        )
-        assert rows_expr == rows_arrow, kwargs
-        assert len(rows_expr) > 0, kwargs  # non-vacuous
+        got = sorted(map(tuple, cosine_neardup_pairs(
+            sub, "vec_id", "embedding", 0.35, dim=64, **kwargs,
+        ).collect()))
+        assert got == want, kwargs
+
+
+def test_cosine_neardup_plans_cogroup_not_pair_join(spark):
+    """cosine_neardup_pairs has one scorer at every cell count: even at
+    the gate shape (n_cells=8, below _PANDAS_ASSIGN_MIN_CELLS) the plan
+    scores pairs in a cell cogroup, never in a per-pair join."""
+    from pyspark.sql import functions as F
+
+    from sparkt.functions.similarity import cosine_neardup_pairs
+    from sparkt.sources import load_parquet
+
+    emb = load_parquet(
+        spark, "/root/testdata/sf0.001/embeddings.parquet"
+    ).withColumn("embedding", F.col("embedding").cast("array<double>"))
+    plan = cosine_neardup_pairs(
+        emb, "vec_id", "embedding", 0.35, n_cells=8
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInPandas" in plan
+    assert "Join" not in plan and "Cartesian" not in plan
+
+
+def test_cosine_neardup_null_zero_empty_vectors(spark):
+    """Degenerate rows through the one scoring path: a null id or a null
+    vector never pairs; a zero vector's cosine is NaN and never passes
+    the threshold (no DIVIDE_BY_ZERO under ANSI); empty and all-null
+    inputs give no pairs. Both cell regimes: numpy cell assignment
+    (n_cells=64) and expression assignment with full probe
+    (n_cells=8)."""
+    from sparkt.functions.similarity import cosine_neardup_pairs
+
+    schema = "vec_id long, embedding array<double>"
+    rows = [
+        (1, [1.0, 0.0, 0.0, 0.0]),
+        (2, [0.99, 0.1, 0.0, 0.0]),
+        (3, None),
+        (None, [1.0, 0.01, 0.0, 0.0]),
+        (4, [0.0, 0.0, 0.0, 0.0]),
+        (5, [0.0, 0.0, 1.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    empty = spark.createDataFrame([], schema)
+    all_null = spark.createDataFrame([(6, None), (None, None)], schema)
+    for n_cells in (64, 8):
+        got = cosine_neardup_pairs(
+            df, threshold=0.9, dim=4, n_cells=n_cells
+        ).collect()
+        assert [(r["id_a"], r["id_b"]) for r in got] == [(1, 2)], n_cells
+        assert got[0]["cos"] == 0.9949, n_cells  # 0.99/sqrt(0.9901)
+        for src in (empty, all_null):
+            assert cosine_neardup_pairs(
+                src, threshold=0.9, dim=4, n_cells=n_cells
+            ).count() == 0, n_cells
 
 
 def test_arrow_pq_encoder_matches_expression_path(spark):
-    """r16: ivfpq_topk(encoder='arrow') runs the corpus-side cell
-    assign and PQ encode as numpy batch passes. Contract: BIT-exact —
-    squared L2 accumulates one dimension at a time (the _l2sq fold's
-    IEEE order) and np.argmin's first-occurrence tie-break equals
-    array_position's lowest index. Pinned three ways: (1) exact-fold
-    pandas argmin == kmeans_assign on every sf0.1 embedding, (2)
-    arrow PQ codes == expression codes on every embedding, (3) full
-    ivfpq_topk output parity expr vs arrow at the s12 gate shape."""
+    """ivfpq_topk's corpus-side cell assign and PQ encode are numpy
+    batch passes. Contract: BIT-exact — squared L2 accumulates one
+    dimension at a time (the _l2sq fold's IEEE order) and np.argmin's
+    first-occurrence tie-break equals array_position's lowest index.
+    Pinned three ways on every sf0.1 embedding: (1) exact-fold pandas
+    argmin == kmeans_assign's expression fold, (2) PQ codes == a numpy
+    reference with the same sequential fold, (3) ivfpq_topk at the s12
+    gate shape == a numpy IVF-PQ emulation (coarse cells, 2-cell
+    probe, ADC sums, (adc, corpus_id) ranking)."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from sparkt.functions.similarity import (
-        _argmin_l2_exact_pandas, _pq_codes_pandas, _pq_codebooks,
-        _pseudo_centroids, ivfpq_topk, kmeans_assign, pq_encode,
+        _argmin_l2_exact_pandas, _pq_codebooks, _pseudo_centroids,
+        ivfpq_topk, kmeans_assign, pq_encode,
     )
     from sparkt.sources import load_parquet
 
@@ -619,7 +700,9 @@ def test_arrow_pq_encoder_matches_expression_path(spark):
         spark, "/root/testdata/sf0.1/embeddings.parquet"
     ).withColumn("embedding", F.col("embedding").cast("array<double>"))
 
-    cents = _pseudo_centroids(64, 8)
+    dim, m, n_codes, n_cells, k = 64, 8, 16, 8, 5
+    sub = dim // m
+    cents = _pseudo_centroids(dim, n_cells)
     both = emb.select(
         "vec_id",
         kmeans_assign(F.col("embedding"), cents).alias("a_expr"),
@@ -630,27 +713,104 @@ def test_arrow_pq_encoder_matches_expression_path(spark):
     diff = both.filter(F.col("a_expr") != F.col("a_arrow")).count()
     assert diff == 0
 
-    codes_expr = {
-        r["vec_id"]: tuple(r["codes"])
-        for r in pq_encode(emb, "vec_id", "embedding").collect()
-    }
-    codes_arrow = {
-        r["vec_id"]: tuple(r["codes"])
-        for r in pq_encode(
-            emb, "vec_id", "embedding", encoder="arrow"
-        ).collect()
-    }
-    assert codes_expr == codes_arrow
+    vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
+            for r in emb.collect()}
+    books = np.array(_pq_codebooks(dim, m, n_codes))  # m x codes x sub
+    C = np.array(cents)
+
+    def l2sq(x, Y):  # sequential fold over dims: the _l2sq order
+        acc = np.zeros(len(Y))
+        for d in range(Y.shape[1]):
+            acc += (x[d] - Y[:, d]) * (x[d] - Y[:, d])
+        return acc
+
+    codes = {i: [int(np.argmin(l2sq(v[j * sub:(j + 1) * sub], books[j])))
+                 for j in range(m)]
+             for i, v in vecs.items()}
+    got_codes = {r["vec_id"]: list(r["codes"])
+                 for r in pq_encode(emb, "vec_id", "embedding").collect()}
+    assert got_codes == codes
+
+    cell = {i: int(np.argmin(l2sq(v, C))) for i, v in vecs.items()}
+    expected = []
+    for qi in (i for i in vecs if i < 10):
+        d = l2sq(vecs[qi], C)
+        c1 = int(np.argmin(d))
+        d[c1] = np.inf
+        probe = {c1, int(np.argmin(d))}
+        tables = [l2sq(vecs[qi][j * sub:(j + 1) * sub], books[j])
+                  for j in range(m)]
+        cand = []
+        for ci in vecs:
+            if ci == qi or cell[ci] not in probe:
+                continue
+            adc = 0.0
+            for j in range(m):  # the ADC sum's subspace order
+                adc += tables[j][codes[ci][j]]
+            cand.append((adc, ci))
+        cand.sort()
+        expected += [(qi, ci, r + 1) for r, (_, ci) in enumerate(cand[:k])]
 
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    out = {}
-    for enc in ("expr", "arrow"):
-        out[enc] = sorted(map(tuple, ivfpq_topk(
-            queries, corpus, dim=64, k=5, m=8, n_codes=16,
-            n_cells=8, n_probe=2, encoder=enc,
+    got = sorted(
+        (r["query_id"], r["corpus_id"], r["rank"])
+        for r in ivfpq_topk(
+            queries, corpus, dim=dim, k=k, m=m, n_codes=n_codes,
+            n_cells=n_cells, n_probe=2,
+        ).collect()
+    )
+    assert got == sorted(expected)
+    assert len(got) > 0  # non-vacuous
+
+
+def test_pq_null_and_empty_vectors(spark):
+    """Null corpus vectors through the numpy encode keep the old
+    expression encode's output: m null codes and a null coarse cell,
+    so the row leaves ivfpq_topk's cell equijoin; empty input gives
+    empty output."""
+    from pyspark.sql import functions as F
+
+    from sparkt.functions.similarity import (
+        _argmin_l2_exact_pandas, _pseudo_centroids, ivfpq_topk, pq_encode,
+    )
+
+    dim, m = 8, 4
+    schema = "vec_id long, embedding array<double>"
+    rows = [(i, [((i * 7 + d * 3) % 11 - 5) / 5.0 for d in range(dim)])
+            for i in range(12)]
+    df = spark.createDataFrame(rows + [(99, None)], schema)
+    clean = spark.createDataFrame(rows, schema)
+
+    codes = {r["vec_id"]: r["codes"] for r in pq_encode(
+        df, dim=dim, m=m, n_codes=4).collect()}
+    assert codes[99] == [None] * m
+    assert {i: c for i, c in codes.items() if i != 99} == {
+        r["vec_id"]: r["codes"]
+        for r in pq_encode(clean, dim=dim, m=m, n_codes=4).collect()
+    }
+    cells = {r["vec_id"]: r["cell"] for r in df.select(
+        "vec_id",
+        _argmin_l2_exact_pandas(
+            F.col("embedding"), _pseudo_centroids(dim, 4)
+        ).alias("cell"),
+    ).collect()}
+    assert cells[99] is None
+    assert all(c is not None for i, c in cells.items() if i != 99)
+
+    def topk(corpus):
+        return sorted(map(tuple, ivfpq_topk(
+            clean.filter(F.col("vec_id") < 3).withColumnRenamed(
+                "vec_id", "query_id"),
+            corpus.withColumnRenamed("vec_id", "corpus_id"),
+            dim=dim, k=3, m=m, n_codes=4, n_cells=4, n_probe=2,
         ).collect()))
-    assert out["expr"] == out["arrow"]
-    assert len(out["expr"]) > 0  # non-vacuous
+
+    assert topk(df) == topk(clean)
+    assert len(topk(clean)) > 0  # non-vacuous
+
+    empty = spark.createDataFrame([], schema)
+    assert pq_encode(empty, dim=dim, m=m, n_codes=4).count() == 0
+    assert topk(empty) == []
