@@ -14,10 +14,12 @@
 #   make bench       - headline suite at sf0.1 (one JSON line)
 #   make perfbench   - the performance measure (BENCHMARK.json): its
 #                      own tests, then both workloads once at seed 1
+#   make trace       - one traced warehouse_daily run, then the node
+#                      timeline of its first traced iteration
 
 PY ?= python
 
-.PHONY: verify test oracles plan-lint bench perfbench rotation
+.PHONY: verify test oracles plan-lint bench perfbench trace rotation
 
 # run at round start, right after the driver writes CORRECTNESS_r*.json
 # (check_oracles refuses to sweep while ROTATION.json is stale);
@@ -46,3 +48,7 @@ perfbench:
 	$(PY) -m pytest perfbench -q
 	$(PY) perfbench/run.py --workload warehouse_daily --seed 1 --seconds 36 --trace 0
 	$(PY) perfbench/run.py --workload pipeline_ops --seed 1 --seconds 36 --trace 0
+
+trace:
+	$(PY) perfbench/run.py --workload warehouse_daily --seed 1 --seconds 36 --trace 1
+	$(PY) scripts/span_timeline.py .perfbench/runs/warehouse_daily-seed1.spans.jsonl

@@ -42,10 +42,12 @@ import time
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from itertools import takewhile
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-from sparkt.relation import Relation
+from sparkt.relation import Relation, quote_identifier
 
 
 def _sql_str(spark: SparkSession, v) -> str:
@@ -75,6 +77,32 @@ def _is_pure_query(sql: str) -> bool:
     head = body.split(None, 1)
     first = head[0].upper() if head else ""
     return first in ("SELECT", "WITH", "VALUES", "TABLE", "FROM")
+
+
+def _statement_body(sql: str) -> str:
+    """``sql`` up to its last token: without the trailing ``;`` and
+    ``--``/``/* */`` comments a whole statement may end with but a
+    subquery may not. Scans from the start, so a ``;`` or ``--`` inside
+    a quoted literal or identifier stays."""
+    i, n, end = 0, len(sql), 0
+    while i < n:
+        c = sql[i]
+        if c in "'\"`":
+            j = i + 1
+            while j < n and sql[j] != c:
+                j += 2 if sql[j] == "\\" and c != "`" else 1
+            i = end = j + 1
+        elif sql.startswith("--", i):
+            nl = sql.find("\n", i)
+            i = n if nl == -1 else nl + 1
+        elif sql.startswith("/*", i):
+            close = sql.find("*/", i + 2)
+            i = n if close == -1 else close + 2
+        else:
+            i += 1
+            if not c.isspace() and c != ";":
+                end = i
+    return sql[:end]
 
 
 @dataclass
@@ -565,12 +593,23 @@ class SparkAdapter:
         return self.get_relation(relation.schema, relation.identifier) is not None
 
     def partition_columns(self, relation: Relation) -> list[str]:
-        """Partition column names of a catalog table ([] if unpartitioned)."""
+        """Partition column names of a catalog table ([] if unpartitioned
+        or missing). One ``DESCRIBE TABLE``: the names are the rows under
+        its ``# Partition Information`` header (``catalog.listColumns``
+        costs several JVM roundtrips per column)."""
         try:
-            cols = self.spark.catalog.listColumns(relation.render())
-        except Exception:
+            rows = self.spark.sql(f"DESCRIBE TABLE {relation.render()}").collect()
+        except AnalysisException:  # no such relation
             return []
-        return [c.name for c in cols if c.isPartition]
+        names = [r["col_name"] for r in rows]
+        if "# Partition Information" not in names:
+            return []
+        # skip the header and its "# col_name" row; the section ends at
+        # a blank row or the next "#" header
+        start = names.index("# Partition Information") + 2
+        return list(takewhile(
+            lambda n: n and not n.startswith("#"), names[start:]
+        ))
 
     # ---------------------------------------------------------------- paths
     def _new_location(self, relation: Relation) -> str:
@@ -713,6 +752,52 @@ class SparkAdapter:
             f"INTO {int(buckets or 8)} BUCKETS"
         )
 
+    def _fans_out(self, df: DataFrame) -> bool:
+        """True when a partitioned write of ``df`` should give each
+        partition value its own writer task: Spark's size estimate of
+        ``df`` fits in one AQE advisory partition (so AQE would coalesce
+        the write into one task that writes every partition file in
+        turn), and ``df`` promises no row order (a repartition would
+        drop an ORDER BY that the writer's own sort keeps). Any other
+        write keeps Spark's shape: a large write needs no extra shuffle,
+        and a hash shuffle would put each partition value in one task
+        however large it is."""
+        plan = df._jdf.queryExecution().optimizedPlan()
+        advisory = self.spark._jvm.org.apache.spark.network.util.JavaUtils \
+            .byteStringAsBytes(self.spark.conf.get(
+                "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+            ))
+        if plan.stats().sizeInBytes() > advisory:
+            return False
+        # an ORDER BY (or sortWithinPartitions) on top, under only
+        # order-keeping nodes
+        node = plan
+        while node.nodeName() in (
+            "Project", "Filter", "GlobalLimit", "LocalLimit"
+        ):
+            node = node.child()
+        return node.nodeName() != "Sort"
+
+    def _one_writer_per_partition(
+        self, select_sql: str, partition_by: list[str]
+    ) -> str:
+        """``select_sql`` under a ``REPARTITION(n, <partition cols>)``
+        hint, ``n = defaultParallelism``, when ``_fans_out`` says so;
+        else ``select_sql`` unchanged. ``n`` is explicit because AQE
+        coalesces a count-less hint (``REBALANCE(cols)``, even
+        ``REBALANCE(4, cols)``) back into one task on a small result."""
+        try:
+            if not self._fans_out(self.spark.sql(select_sql)):
+                return select_sql
+        except AnalysisException:  # the statement itself reports it
+            return select_sql
+        n = self.spark.sparkContext.defaultParallelism
+        cols = ", ".join(quote_identifier(c) for c in partition_by)
+        return (
+            f"SELECT /*+ REPARTITION({n}, {cols}) */ * FROM "
+            f"({_statement_body(select_sql)}) __sparkt_parts"
+        )
+
     def create_table_as(
         self,
         relation: Relation,
@@ -738,6 +823,16 @@ class SparkAdapter:
         write (Spark ``CLUSTERED BY ... INTO n BUCKETS``): two tables
         bucketed the same way join WITHOUT a shuffle — the co-located
         join path for repeated large joins at 100 TB.
+
+        Invariant: a small, unordered ``partition_by`` write (``_fans_out``:
+        Spark's size estimate fits in one AQE advisory partition, 64 MB
+        by default, and the select has no ORDER BY) gives each partition
+        value exactly one writer task, so it makes one file per
+        partition value (per bucket, if bucketed), and the partitions
+        are written in parallel. A larger or ordered write keeps
+        Spark's shape. Limit: the estimate is the optimizer's, so a
+        write it underestimates still puts each partition value in one
+        task, the skew case ``REBALANCE`` would split.
         """
         assert (select_sql is None) != (df is None)
         self.create_schema(relation.schema)
@@ -749,6 +844,12 @@ class SparkAdapter:
         tmp = relation.incorporate(
             identifier=f"{relation.identifier}__sparkt_tmp_{uuid.uuid4().hex[:6]}"
         )
+        if partition_by and df is None:
+            select_sql = self._one_writer_per_partition(select_sql, partition_by)
+        elif partition_by and self._fans_out(df):
+            df = df.repartition(
+                self.spark.sparkContext.defaultParallelism, *partition_by
+            )
         if df is None:
             self.spark.sql(
                 f"CREATE TABLE {tmp.render()} USING parquet{part}{buck} "
@@ -1105,10 +1206,17 @@ class SparkAdapter:
         """Dynamic-partition overwrite. REQUIRES a partitioned target:
         on an unpartitioned table ``INSERT OVERWRITE`` replaces every
         row, so we refuse rather than silently lose data (the caller
-        should use a table rewrite / full refresh for that intent)."""
+        should use a table rewrite / full refresh for that intent).
+
+        Invariant, as in ``create_table_as``: a small, unordered select
+        gives each partition value exactly one writer task, so the
+        statement writes one file per overwritten partition, and the
+        partitions are written in parallel; a larger or ordered select
+        keeps Spark's shape."""
         from sparkt.exceptions import ExecutionError
 
-        if not self.partition_columns(relation):
+        part_cols = self.partition_columns(relation)
+        if not part_cols:
             raise ExecutionError(
                 f"insert_overwrite on {relation.render()}: target is not "
                 "partitioned — a full-table overwrite would silently drop "
@@ -1118,6 +1226,7 @@ class SparkAdapter:
         # partitionOverwriteMode=dynamic is pinned in __init__
         # (ensure_runtime_conf); under STATIC this statement would
         # replace the whole table.
+        select_sql = self._one_writer_per_partition(select_sql, part_cols)
         self.execute(
             f"INSERT OVERWRITE TABLE {relation.render()} {select_sql}"
         )

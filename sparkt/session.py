@@ -12,11 +12,25 @@ logical plans survive a 1000-executor / 100 TB deployment:
 - shuffle partitions sized for local[32] testing; on a real cluster AQE
   coalesces from ``spark.sql.shuffle.partitions`` downward, so a large
   initial value is safe.
+- on a local master with a local warehouse, partition directories
+  listed on the driver up to 4096 paths
+  (``parallelPartitionDiscovery.threshold``, Spark's default is 32).
+  The first read of a freshly written partitioned table lists every
+  partition directory; above the threshold Spark starts a listing job
+  with one task per directory. On local disk the driver wins at every
+  size measured (first read of a fresh table, local[4] on a 4-core
+  box, driver vs job: 64 dirs 0.23 vs 0.74 s, 256: 0.35 vs 1.48 s,
+  1024: 0.90 vs 5.27 s, 4096: 1.95 vs 13.55 s), because one local
+  listing costs well under a millisecond while a task costs several.
+  Nothing else was measured: on a cluster, or with the warehouse on
+  an object store (one LIST costs tens of ms, and the driver lists
+  one directory after another), Spark's default stays.
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
 
@@ -52,6 +66,12 @@ def get_spark(
     )
     if extra_conf:
         conf.update(extra_conf)
+    warehouse = conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    if master.startswith("local") and urlparse(warehouse).scheme in ("", "file"):
+        # measured only here (module docstring)
+        conf.setdefault(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", "4096"
+        )
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -316,6 +316,177 @@ def test_optimize_table_partitioned_keeps_layout(make_project, spark):
     assert any(d.startswith("day=") for d in _os.listdir(loc))
 
 
+def test_partition_columns_from_describe(make_project, spark):
+    """partition_columns reads the table's partition spec: one column,
+    two columns (one a reserved word), none, and a missing table."""
+    runner = _runner(make_project, "t_partcols")
+    a = runner.adapter
+    df = spark.range(0, 12).select(
+        "id", (F.col("id") % 3).alias("day"), (F.col("id") % 2).alias("order")
+    )
+    one = Relation(schema="t_partcols", identifier="one")
+    two = Relation(schema="t_partcols", identifier="two")
+    flat = Relation(schema="t_partcols", identifier="flat")
+    a.create_table_as(one, df=df, partition_by=["day"])
+    a.create_table_as(two, df=df, partition_by=["day", "order"])
+    a.create_table_as(flat, df=df)
+    assert a.partition_columns(one) == ["day"]
+    assert a.partition_columns(two) == ["day", "order"]
+    assert a.partition_columns(flat) == []
+    assert a.partition_columns(
+        Relation(schema="t_partcols", identifier="missing")
+    ) == []
+    assert spark.table(two.render()).count() == 12
+
+
+def test_partitioned_ctas_keeps_statement_endings(make_project, spark):
+    """The partitioned CTAS wraps the select in a subquery; a trailing
+    `;`, `-- comment` or both, legal after the bare select, must stay
+    legal, and a `;` or `--` inside a literal must stay in it."""
+    runner = _runner(make_project, "t_ends")
+    a = runner.adapter
+    tails = (
+        ("semi", ";\n"), ("comment", " -- last line"),
+        ("semi_comment", " ; -- end"), ("semi_block", "; /* end */ ;"),
+    )
+    for name, tail in tails:
+        rel = Relation(schema="t_ends", identifier=name)
+        a.create_table_as(
+            rel,
+            select_sql="select id, id % 3 as p, 'a;--b' as `s;--` "
+            f"from range(6){tail}",
+            partition_by=["p"],
+        )
+        rows = spark.table(rel.render()).collect()
+        assert len(rows) == 6
+        assert {r["s;--"] for r in rows} == {"a;--b"}
+
+
+def _files_per_partition(location: str) -> dict[str, list[str]]:
+    """partition dir -> its parquet data files."""
+    import os
+
+    return {
+        d: sorted(f for f in os.listdir(os.path.join(location, d))
+                  if f.startswith("part-"))
+        for d in os.listdir(location) if "=" in d
+    }
+
+
+def test_partitioned_ctas_keeps_select_order(make_project, spark):
+    """A select ordered by (partition col, x) writes each partition's
+    file in that order: the write is not re-shuffled."""
+    import os
+
+    runner = _runner(make_project, "t_order")
+    a = runner.adapter
+    rel = Relation(schema="t_order", identifier="ordered")
+    a.create_table_as(
+        rel, select_sql="select id, id % 3 as p from range(300) "
+        "order by p, id desc",
+        partition_by=["p"],
+    )
+    loc = a._catalog["t_order.ordered"]["location"]
+    for d, names in _files_per_partition(loc).items():
+        for name in names:
+            ids = [r.id for r in spark.read.parquet(
+                os.path.join(loc, d, name)).collect()]
+            assert ids == sorted(ids, reverse=True), (d, name)
+
+
+def test_large_partitioned_write_keeps_spark_shape(make_project, spark):
+    """Only a write whose size estimate fits in one AQE advisory
+    partition gets one writer task per partition value; above it the
+    scan's tasks each write their own file per partition, as Spark
+    plans it."""
+    runner = _runner(make_project, "t_large")
+    a = runner.adapter
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(key)
+    src = "select id, id % 3 as p from range(600)"
+    small = Relation(schema="t_large", identifier="small")
+    large = Relation(schema="t_large", identifier="large")
+    a.create_table_as(small, select_sql=src, partition_by=["p"])
+    spark.conf.set(key, "1b")  # every write is now "large"
+    try:
+        a.create_table_as(large, select_sql=src, partition_by=["p"])
+    finally:
+        spark.conf.set(key, before)
+    per_dir = {
+        rel.identifier: {
+            len(v) for v in _files_per_partition(
+                a._catalog[f"t_large.{rel.identifier}"]["location"]
+            ).values()
+        }
+        for rel in (small, large)
+    }
+    assert per_dir["small"] == {1}
+    # range(600) scans in defaultParallelism tasks, each writing to
+    # every partition
+    assert per_dir["large"] == {spark.sparkContext.defaultParallelism}
+    assert spark.table(large.render()).count() == 600
+
+
+def test_failing_insert_overwrite_fails_as_its_statement(make_project, spark):
+    """A select that fails analysis fails as the INSERT OVERWRITE
+    statement, with its SQLQuery event and an ERROR status."""
+    from types import SimpleNamespace
+
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    runner = _runner(make_project, "t_iofail")
+    a = runner.adapter
+    rel = Relation(schema="t_iofail", identifier="t")
+    a.create_table_as(
+        rel, select_sql="select id, id % 2 as p from range(4)",
+        partition_by=["p"],
+    )
+    fired = []
+    events, a.events = getattr(a, "events", None), SimpleNamespace(
+        fire=fired.append)
+    try:
+        with pytest.raises(AnalysisException):
+            a.insert_overwrite(rel, "select nope, 1 as p from range(4)")
+    finally:
+        a.events = events
+    assert [(e.CODE, getattr(e, "status", None)) for e in fired] == [
+        ("E016", None), ("E017", "ERROR")]
+    assert "nope" in fired[0].sql
+
+
+def _read_jobs(spark, table: str) -> int:
+    """Spark jobs started by one filtered count of ``table``."""
+    sc = spark.sparkContext
+    group = f"read-{table}"
+    sc.setJobGroup(group, group)
+    try:
+        spark.sql(f"select count(*) from {table} where id is null").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fresh_partitioned_table_listed_on_driver(make_project, spark):
+    """The first read after overwriting a 40-partition table (more than
+    Spark's default parallel-listing threshold of 32 directories) starts
+    no listing job: it runs as many jobs as the same read of a
+    1-partition table."""
+    runner = _runner(make_project, "t_listing")
+    a = runner.adapter
+    wide = Relation(schema="t_listing", identifier="wide")
+    narrow = Relation(schema="t_listing", identifier="narrow")
+    src = "select id, id % {n} as p from range(400)"
+    for rel, n in ((wide, 40), (narrow, 1)):
+        a.create_table_as(rel, select_sql=src.format(n=n), partition_by=["p"])
+        a.insert_overwrite(rel, src.format(n=n))
+    assert spark.table(wide.render()).select("p").distinct().count() == 40
+    a.insert_overwrite(wide, src.format(n=40))  # fresh listing again
+    assert _read_jobs(spark, wide.render()) == _read_jobs(
+        spark, narrow.render())
+
+
 def test_optimize_table_via_run_operation(make_project, spark):
     """Macro path: {% do adapter.optimize_table('schema.table') %}."""
     files = {

@@ -169,6 +169,59 @@ def test_insert_overwrite_partitions(make_project, spark):
     assert t.filter("batch = 2").count() == 100
 
 
+def _partition_files(location: str) -> dict[str, list[str]]:
+    """partition dir -> its parquet data files (no .crc/_SUCCESS)."""
+    import os
+
+    return {
+        d: sorted(f for f in os.listdir(os.path.join(location, d))
+                  if f.startswith("part-"))
+        for d in os.listdir(location) if "=" in d
+    }
+
+
+def test_insert_overwrite_one_writer_per_partition(make_project, spark):
+    """A small partitioned write gives each partition value one writer
+    task: one file per partition directory, and the files come from
+    several tasks (part-NNNNN indices), not all from one."""
+    files = dict(BASE)
+    files["models/incr_fan.sql"] = (
+        "{{ config(materialized='incremental', "
+        "incremental_strategy='insert_overwrite', partition_by='p') }}\n"
+        "select id, name, id % 20 as p from {{ ref('users') }}\n"
+        "{% if is_incremental() %}where id % 20 >= 10{% endif %}"
+    )
+    runner = make_project(files, schema="t_incr_fan")
+    import os
+
+    def check_shape(dirs):
+        loc = runner.adapter._catalog["t_incr_fan.incr_fan"]["location"]
+        layout = _partition_files(loc)
+        assert len(layout) == 20
+        assert all(len(layout[d]) == 1 for d in layout), layout
+        tasks = {layout[d][0].split("-")[1] for d in dirs}
+        assert len(tasks) > 1, tasks
+
+    with open(os.path.join(runner.project.project_root, "seeds/users.csv"), "w") as f:
+        f.write(_users_csv(150))
+    assert runner.seed().ok
+    assert runner.run().ok  # first run: partitioned CTAS
+    check_shape([f"p={i}" for i in range(20)])
+    with open(os.path.join(runner.project.project_root, "seeds/users.csv"), "w") as f:
+        f.write(_users_csv(200))
+    assert runner.seed().ok
+    assert runner.run().ok  # incremental: overwrites p = 10..19 only
+    check_shape([f"p={i}" for i in range(10, 20)])
+    got = dict(
+        spark.table("t_incr_fan.incr_fan").groupBy("p").count().collect()
+    )
+    # untouched partitions keep the 150-user counts, rewritten ones
+    # hold the 200-user counts
+    want = {p: sum(1 for i in range(1, (150 if p < 10 else 200) + 1)
+                   if i % 20 == p) for p in range(20)}
+    assert got == want
+
+
 def test_on_schema_change_sync_all_columns(make_project, spark):
     files = dict(BASE)
     files["models/incr_sync.sql"] = (
