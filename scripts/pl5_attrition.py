@@ -8,15 +8,12 @@ The gate itself oracle-pins the END state; this script pins the path —
 run it at any SF (including the gitignored .testdata/sf1) and paste
 the table into PLANS.md.
 
-Usage: python scripts/pl5_attrition.py [--method semi|bloom]
-           [--json-out PATH] [sf_dir ...]
+Usage: python scripts/pl5_attrition.py [--json-out PATH] [sf_dir ...]
        (default: /root/testdata/sf0.001 sf0.01 sf0.1 + .testdata/sf1)
 
-``--method bloom`` swaps stage 5's broadcast shingle semi-join for
-the d12 Bloom-probe path (VERDICT r14 ask #3 — the scale knob for the
-stage that dominates the 500k rung). ``--json-out`` appends one JSON
-line per sf_dir (stage walls + doc/token attrition) — the
-machine-diffable bench_scale.json sidecar (VERDICT r14 ask #7).
+``--json-out`` appends one JSON line per sf_dir (stage walls +
+doc/token attrition) — the machine-diffable bench_scale.json sidecar
+(VERDICT r14 ask #7).
 """
 
 from __future__ import annotations
@@ -29,7 +26,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def run(spark, sf_dir: str, method: str = "semi") -> list[tuple]:
+def run(spark, sf_dir: str) -> list[tuple]:
     from pyspark.sql import functions as F
 
     from sparkt.functions import dedup as D
@@ -96,7 +93,6 @@ def run(spark, sf_dir: str, method: str = "semi") -> list[tuple]:
 
     flagged = D.decontaminate(
         uniq, bench, "text", "doc_id", k=3, threshold=0.05,
-        method=method,
     ).select(F.col("doc").alias("doc_id")).localCheckpoint(eager=True)
     clean = uniq.join(flagged, "doc_id", "left_anti").localCheckpoint(
         eager=True
@@ -130,12 +126,7 @@ def run(spark, sf_dir: str, method: str = "semi") -> list[tuple]:
 
 def main() -> int:
     argv = list(sys.argv[1:])
-    method = "semi"
     json_out = None
-    if "--method" in argv:
-        i = argv.index("--method")
-        method = argv[i + 1]
-        del argv[i:i + 2]
     if "--json-out" in argv:
         i = argv.index("--json-out")
         json_out = argv[i + 1]
@@ -155,7 +146,7 @@ def main() -> int:
             print(f"skip {d}: not found")
             continue
         t0 = time.time()
-        rows = run(spark, d, method=method)
+        rows = run(spark, d)
         wall = time.time() - t0
         if json_out:
             import json
@@ -163,7 +154,6 @@ def main() -> int:
             with open(json_out, "a") as f:
                 f.write(json.dumps({
                     "sf_dir": d,
-                    "method": method,
                     "wall_s": round(wall, 1),
                     "stages": [
                         {"stage": name, "docs": n, "tokens": t,
@@ -171,7 +161,7 @@ def main() -> int:
                         for name, n, t, w in rows
                     ],
                 }) + "\n")
-        print(f"\n== {d}  (wall {wall:.1f}s, method={method})")
+        print(f"\n== {d}  (wall {wall:.1f}s)")
         print(f"{'stage':<34}{'docs':>10}{'tokens':>12}{'wall_s':>9}")
         for name, n, t, w in rows:
             print(

@@ -32,20 +32,12 @@ def _norm(t: str) -> str:
     return _TYPE_ALIASES.get(t, t)
 
 
-def enforce_contract(node, df_schema) -> None:
-    """Assert the model's analyzed schema matches its declared columns
-    (names, order-insensitive; types when declared)."""
-    enforce_contract_columns(
-        node,
-        {f.name: f.dataType.simpleString() for f in df_schema.fields},
-    )
-
-
 def enforce_contract_columns(node, actual: dict) -> None:
-    """:func:`enforce_contract` over a ``{name: simpleString-type}``
-    mapping — the shape ``DESCRIBE QUERY`` rows give, so the check can
-    run through the ADAPTER surface (record/replay covered) without a
-    live SparkSession."""
+    """Assert the model's analyzed schema matches its declared columns
+    (names, order-insensitive; types when declared). ``actual`` is a
+    ``{name: simpleString-type}`` mapping — the shape ``DESCRIBE
+    QUERY`` rows give, so the check runs through the ADAPTER surface
+    (record/replay covered) without a live SparkSession."""
     contract = node.config.get("contract") or {}
     if not contract.get("enforced"):
         return

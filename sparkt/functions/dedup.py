@@ -138,63 +138,17 @@ def hash_family_member(digest: Column, i: int, n_hashes: int = 8) -> Column:
     )
 
 
-def _rot_md5(i: int, n_hashes: int):
-    # 1-arg factory (a 2-param lambda would be treated as (element, index))
-    def fn(s: Column) -> Column:
-        return hash_family_member(F.md5(s), i, n_hashes)
-
-    return fn
-
-
-def minhash_signature(text: Column, n_hashes: int = 8, k: int = 3) -> Column:
-    """Array of n_hashes min-hash values (rotated md5-hex strings)."""
-    sh = shingles(text, k)
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, _rot_md5(i, n_hashes)))
-            for i in range(n_hashes)
-        ]
-    )
-
-
-def lsh_bands(signature: Column, n_bands: int = 4, rows_per_band: int = 2,
-              n_hashes: int | None = None) -> Column:
-    """Band keys: md5 of each band's concatenated signature rows.
-    Pass ``n_hashes`` (the signature length) to validate up front:
-    indexing past the signature throws INVALID_ARRAY_INDEX_IN_ELEMENT_AT
-    at runtime under ANSI mode, mid-job instead of at build time."""
-    if n_hashes is not None and n_bands * rows_per_band > n_hashes:
-        raise ValueError(
-            f"lsh_bands: n_bands*rows_per_band = "
-            f"{n_bands * rows_per_band} exceeds the signature length "
-            f"{n_hashes}"
-        )
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.element_at(signature, b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ],
-                )
-            )
-            for b in range(n_bands)
-        ]
-    )
-
-
 def minhash_table(
     df: DataFrame, text_col: str, id_col: str, n_hashes: int = 8, k: int = 3
 ) -> DataFrame:
     """Per-doc minhash signature via explode → groupBy-min.
 
-    This formulation — not the array-lambda one — is the scale path:
-    Spark skips common-subexpression elimination inside higher-order
-    functions, so nesting ``minhash_signature`` under further array ops
-    re-evaluates the whole shingle pipeline per reference (measured
-    ~100× blowup at sf0.1). Exploding shingles once, md5-ing each
+    This formulation — not an array-lambda signature column — is the
+    scale path: Spark skips common-subexpression elimination inside
+    higher-order functions, so a signature built from per-member
+    ``transform`` calls over the shingle array re-evaluates the whole
+    shingle pipeline per reference (measured ~100× blowup at sf0.1).
+    Exploding shingles once, md5-ing each
     shingle ONCE, and taking n_hashes mins over hex rotations of that
     single digest computes one md5 per shingle occurrence total
     (previously n_hashes md5s — the dominant bench cost) and shuffles
@@ -220,10 +174,18 @@ def minhash_candidate_pairs(
     """Candidate near-duplicate pairs: docs sharing ≥1 LSH band.
     Returns (id_a, id_b, n_shared_bands) with id_a < id_b.
 
-    Choosing (n_hashes, n_bands) for a target Jaccard threshold:
-    :func:`lsh_tune` picks the cheapest setting from the closed-form
-    S-curve; :func:`lsh_calibration` then validates the choice
-    empirically on the corpus."""
+    Each of the ``n_bands`` bands keys on ``n_hashes // n_bands``
+    signature rows, so ``n_hashes`` must be a positive multiple of
+    ``n_bands``: a zero-row band keys every document on ``md5('')``
+    (an all-pairs explosion) and a remainder leaves hashes unread.
+    Pairs with Jaccard ``s`` become candidates with probability
+    ``1 - (1 - s^r)^b`` (r rows, b bands); :func:`lsh_calibration`
+    checks a setting empirically on the corpus."""
+    if n_bands < 1 or n_hashes % n_bands:
+        raise ValueError(
+            f"minhash_candidate_pairs: n_hashes={n_hashes} must be a "
+            f"positive multiple of n_bands={n_bands}"
+        )
     rows = n_hashes // n_bands
     mh = minhash_table(df, text_col, id_col, n_hashes)
     bands = mh.select(
@@ -293,32 +255,6 @@ def simhash_table(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             *[F.when(F.col(f"v{j}") > 0, "1").otherwise("0") for j in range(16)]
         ).alias("simhash"),
     )
-
-
-def simhash16(text: Column) -> Column:
-    """16-bit SimHash as a bit-string: per token, md5's 16 hex nibbles
-    vote (high-bit of each nibble = +1/-1); majority per position.
-
-    Portable: identical nibble votes in the DuckDB oracle. Wider
-    (64/128-bit) variants extend the same expression."""
-    toks = tokens(text)
-
-    def voter(j: int):
-        def fn(acc: Column, t: Column) -> Column:
-            return acc + F.when(
-                F.substring(F.md5(t), j + 1, 1).isin(
-                    "8", "9", "a", "b", "c", "d", "e", "f"
-                ),
-                1,
-            ).otherwise(-1)
-
-        return fn
-
-    bits = []
-    for j in range(16):
-        vote = F.aggregate(toks, F.lit(0), voter(j))
-        bits.append(F.when(vote > 0, "1").otherwise("0"))
-    return F.concat(*bits)
 
 
 # ------------------------------------------------- 64-bit simhash
@@ -477,11 +413,10 @@ def simhash_neardup_pairs64(
 ) -> DataFrame:
     """Text near-duplicate pairs within hamming distance ``k`` on the
     64-bit SimHash — :func:`simhash_table64` hashes +
-    :func:`hamming_banded_pairs` pigeonhole banding. Supersedes the
-    16-bit :func:`simhash_neardup_pairs` at corpus scale (VERDICT
-    r11 #1): the 16-bit key space saturates (bucket population grows
-    linearly with the corpus), while the banded 64-bit join key space
-    is 2^16..2^32 per band and collision rates stay data-driven.
+    :func:`hamming_banded_pairs` pigeonhole banding. The 64-bit width
+    keeps the banded join key space at 2^16..2^32 per band, so
+    collision rates stay data-driven at corpus scale instead of
+    saturating a fixed 16-bit key (VERDICT r11 #1).
 
     Returns ``id_a, id_b, hamming`` (exact integers, id_a < id_b).
     """
@@ -579,9 +514,6 @@ def decontaminate(
     id_col: str,
     k: int = 5,
     threshold: float = 0.2,
-    method: str = "semi",
-    m_bits: int = 1 << 22,
-    k_hashes: int = 4,
 ) -> DataFrame:
     """Benchmark decontamination: flag corpus documents whose k-word
     shingles overlap a benchmark/eval set above ``threshold`` (the
@@ -593,48 +525,13 @@ def decontaminate(
     corpus (eval suites are ~1e5 docs vs 1e10), so it BROADCASTS —
     the corpus side is one shingle projection + broadcast hash join +
     one groupBy-doc shuffle. No shuffle of the corpus by shingle, no
-    pair explosion.
-
-    ``method='bloom'`` (VERDICT r14 ask #3) swaps the broadcast
-    shingle SET for d12's mergeable Bloom filter
-    (:func:`sparkt.functions.sketches.bloom_build`): the broadcast
-    payload shrinks from every distinct bench shingle STRING to
-    ``m_bits/32`` long words (512 KB at the 1<<22 default, regardless
-    of bench size), and the probe joins on word_idx instead of the
-    shingle value. Overlap becomes an UPPER bound (false positives at
-    the filter's FPR ≈ (1-e^(-k·n/m))^k — size m_bits for the bench
-    shingle count and the two methods agree exactly; the agreement is
-    pytest-pinned at the default size on the test corpora). Same
-    output schema either way."""
+    pair explosion."""
     corpus_sh = shingle_table(df, text_col, id_col, k)
     bench_sh = (
         shingle_table(bench_df, text_col, id_col, k)
         .select("sh")
         .distinct()
     )
-    if method == "bloom":
-        from sparkt.functions.sketches import bloom_build, bloom_probe
-
-        bloom = bloom_build(bench_sh, "sh", m_bits, k_hashes)
-        probed = bloom_probe(
-            corpus_sh, "doc", "sh", bloom, m_bits, k_hashes,
-            carry_cols=["sz"],
-        )
-        return (
-            probed.groupBy("doc")
-            .agg(
-                F.sum(F.col("maybe_member").cast("long")).alias("overlap"),
-                F.min("sz").alias("n_sh"),
-            )
-            .withColumn(
-                "contamination",
-                F.round(F.col("overlap") / F.col("n_sh"), 6),
-            )
-            .filter(F.col("contamination") >= threshold)
-            .select("doc", "n_sh", "overlap", "contamination")
-        )
-    if method != "semi":
-        raise ValueError(f"decontaminate method '{method}' (semi|bloom)")
     # n_sh rides the posting rows (shingle_table's sz): ONE groupBy-doc
     # shuffle total — no separate sizes aggregation, no sizes⋈hits join
     # (docs with zero overlap can't pass threshold > 0 anyway, matching
@@ -1368,9 +1265,9 @@ def lsh_calibration(
     side's distinct-shingle array rides the id join, bounded by
     document size. The final aggregate is a tiny (bands × 11) grain.
 
-    The decision step this table validates: :func:`lsh_tune` picks
-    (n_hashes, n_bands) from the closed-form S-curve before any
-    distributed work runs.
+    The setting it validates is the one the closed-form S-curve
+    ``1 - (1 - s^r)^b`` predicts; the same ``n_hashes``/``n_bands``
+    check as :func:`minhash_candidate_pairs` applies.
     """
     pairs = minhash_candidate_pairs(
         df, text_col, id_col, n_hashes=n_hashes, n_bands=n_bands
@@ -1409,161 +1306,6 @@ def lsh_calibration(
     )
     return j.groupBy("n_shared_bands", "jaccard_decile").agg(
         F.count(F.lit(1)).alias("n_pairs")
-    )
-
-
-def lsh_candidate_probability(
-    s: float, n_bands: int, rows_per_band: int
-) -> float:
-    """The public LSH S-curve (Leskovec/Rajaraman/Ullman, *Mining of
-    Massive Datasets* ch. 3): probability that a pair with Jaccard
-    similarity ``s`` shares at least one of ``n_bands`` bands of
-    ``rows_per_band`` MinHash rows each —
-    ``P = 1 - (1 - s^r)^b``. Pure closed form, driver-side."""
-    return 1.0 - (1.0 - s**rows_per_band) ** n_bands
-
-
-def lsh_tune(
-    target_s: float,
-    target_recall: float = 0.95,
-    reject_s: float | None = None,
-    max_fp: float = 0.05,
-    max_hashes: int = 32,
-) -> dict:
-    """Pick ``(n_hashes, n_bands, rows_per_band)`` for
-    :func:`minhash_candidate_pairs` from the closed-form S-curve —
-    the decision step that :func:`lsh_calibration`'s measured
-    (bands × Jaccard-decile) table validates empirically (VERDICT
-    r10 ask #5). Driver-side arithmetic only, no distributed work.
-
-    Constraints: candidate probability at ``target_s`` must be
-    ``>= target_recall``; when ``reject_s`` is given (the "clearly
-    not a duplicate" similarity), probability there must be
-    ``<= max_fp``. Among satisfying configs the tuner returns the
-    CHEAPEST — fewest total hashes (b·r), then the lowest
-    false-positive probability at ``reject_s`` (or at ``target_s/2``
-    when no reject point was given) — because n_hashes is the per-row
-    signature cost and bands are the shuffle-key expansion at corpus
-    scale.
-
-    ``max_hashes`` defaults to 32: the rotated-md5 hash family
-    (:func:`hash_family_member`) repeats offsets past 32, so larger
-    signatures need a seeded family first.
-
-    Returns ``{n_hashes, n_bands, rows_per_band, recall_at_target,
-    fp_at_reject, threshold}`` where ``threshold = (1/b)^(1/r)`` is
-    the curve's standard inflection approximation. Raises
-    ``ValueError`` when no config within ``max_hashes`` satisfies the
-    constraints (raise ``max_hashes`` or relax the targets).
-    """
-    if not 0.0 < target_s < 1.0:
-        raise ValueError(f"target_s must be in (0, 1), got {target_s}")
-    if not 0.0 < target_recall < 1.0:
-        raise ValueError(
-            f"target_recall must be in (0, 1), got {target_recall}"
-        )
-    if reject_s is not None and not 0.0 <= reject_s < target_s:
-        raise ValueError(
-            f"reject_s must be in [0, target_s), got {reject_s}"
-        )
-    fp_point = reject_s if reject_s is not None else target_s / 2.0
-    best = None
-    for b in range(1, max_hashes + 1):
-        for r in range(1, max_hashes // b + 1):
-            recall = lsh_candidate_probability(target_s, b, r)
-            if recall < target_recall:
-                continue
-            fp = lsh_candidate_probability(fp_point, b, r)
-            if reject_s is not None and fp > max_fp:
-                continue
-            key = (b * r, fp)
-            if best is None or key < best[0]:
-                best = (key, b, r, recall, fp)
-    if best is None:
-        raise ValueError(
-            f"no (bands, rows) with <= {max_hashes} hashes reaches "
-            f"recall {target_recall} at s={target_s}"
-            + (
-                f" with fp <= {max_fp} at s={reject_s}"
-                if reject_s is not None
-                else ""
-            )
-        )
-    _, b, r, recall, fp = best
-    return {
-        "n_hashes": b * r,
-        "n_bands": b,
-        "rows_per_band": r,
-        "recall_at_target": recall,
-        "fp_at_reject": fp,
-        "threshold": (1.0 / b) ** (1.0 / r),
-    }
-
-
-def simhash_neardup_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    multi_probe: bool = True,
-) -> DataFrame:
-    """Text near-duplicate pairs by SimHash bucket equijoin with
-    hamming-1 multi-probe — the text twin of :func:`sparkt.functions
-    .multimodal.perceptual_neardup_pairs` (multi-probe LSH, Lv et al.
-    2007): each document's 16-bit :func:`simhash16` expands to itself
-    plus its 16 one-bit flips, and probes equijoin against exact
-    hashes, so every pair within hamming distance 1 surfaces without
-    a pairwise hamming scan. ``multi_probe=False`` degrades to the
-    exact-bucket join (hamming 0 only).
-
-    Returns ``id_a, id_b, hamming`` (0 or 1; ``id_a < id_b``; exact
-    integers). SimHash hamming distance tracks cosine similarity of
-    token frequency vectors (Charikar 2002), so hamming ≤ 1 on 16
-    bits is a strong near-dup signal at this width.
-
-    SCALE CEILING (VERDICT r11 #1): the join key is a FIXED
-    65,536-value space, so bucket population grows linearly with the
-    corpus and the pair stage degenerates toward all-pairs
-    (~N²/2^16) once N exceeds the hash space — unlike d3's band keys
-    whose cardinality scales with content. Fine for small/medium
-    corpora and pinned tests; at corpus scale use
-    :func:`simhash_neardup_pairs64` (64-bit hash + pigeonhole
-    banding, the d16 gate's path since r12).
-
-    Plan shape: hashes from :func:`simhash_table` (explode → groupBy
-    bit votes — ONE md5 per token; the inline :func:`simhash16` HOF
-    column re-evaluates the token split per bit vote, the measured
-    minhash_table re-inlining trap), then a 17× probe explode of
-    (id, 16-bit int) rows, one integer equijoin, one exact dedup
-    groupBy.
-    """
-    h = simhash_table(df, text_col, id_col).select(
-        F.col("doc").alias("__id"),
-        F.conv("simhash", 2, 10).cast("int").alias("hv"),
-    )
-    flips = [F.col("hv")]
-    if multi_probe:
-        flips += [
-            F.col("hv").bitwiseXOR(F.lit(1 << b)) for b in range(16)
-        ]
-    left = h.select(
-        F.col("__id").alias("id_a"),
-        F.col("hv").alias("hv_a"),
-        F.explode(F.array(*flips)).alias("probe"),
-    )
-    right = h.select(
-        F.col("__id").alias("id_b"), F.col("hv").alias("probe")
-    )
-    return (
-        left.join(right, "probe")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("hv_a").bitwiseXOR(F.col("probe")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .distinct()
     )
 
 

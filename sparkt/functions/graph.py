@@ -110,7 +110,6 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     n_iter: int = 3,
-    persist_adj: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an UNDIRECTED edge table — the
     web-corpus quality prior (Page et al. 1999; link-authority is a
@@ -141,23 +140,17 @@ def pagerank(
     (default 3), so plan depth is bounded. Known residual cost
     (plan-audited r12): a localCheckpoint reports
     UnknownPartitioning, so Catalyst re-exchanges the edge list once
-    per iteration — at sandbox scale noise, at true corpus scale
-    pass ``persist_adj=True``: the adjacency is then hash-exchanged
-    on ``u`` ONCE and persist()ed, and because an InMemoryRelation
-    PRESERVES its child's outputPartitioning (unlike the
-    checkpoint's LogicalRDD), every iteration's join reuses the
-    layout — only the |nodes|-row rank vector moves per step.
-    Trade-off: cache residue for the session (the dedup module's
-    documented shared-relation persist class), which is why the
-    default stays the residue-free localCheckpoint.
+    per iteration — noise at sandbox scale. A pre-partitioned,
+    recomputable adjacency belongs to the shared-intermediate
+    primitive of ROADMAP open item 5, not to a per-operator switch.
 
     Fault-tolerance note (ADVICE r15): THREE relations are
     localCheckpointed per call (``und``, ``deg``, ``adj``) — their
     blocks live on executors with no lineage for the lifetime of the
     returned rank DataFrame, so an executor loss mid-query fails the
     job instead of recomputing. Fine on a single-box sandbox; on a
-    preemptible/dynamic-allocation fleet use ``persist_adj=True``
-    (recomputable, and the exchange-reuse layout win) or a reliable
+    preemptible/dynamic-allocation fleet that needs the same
+    primitive (ROADMAP open item 5) or a reliable
     ``spark.sparkContext.setCheckpointDir`` + ``checkpoint()`` variant.
     """
     # r15 (guide §1.2 / §2.4): materialize the EDGE LIST once before
@@ -181,10 +174,7 @@ def pagerank(
     deg = both.groupBy("u").agg(
         F.count(F.lit(1)).alias("deg")
     ).localCheckpoint(eager=False)
-    if persist_adj:
-        adj = both.join(deg, "u").repartition(F.col("u")).persist()
-    else:
-        adj = both.join(deg, "u").localCheckpoint(eager=False)
+    adj = both.join(deg, "u").localCheckpoint(eager=False)
 
     from sparkt.functions import join_scalars
 

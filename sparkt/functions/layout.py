@@ -17,7 +17,7 @@ alongside the materializations' partition_by/bucketing options.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -54,31 +54,3 @@ def zorder_key(cols: list[Column], bits: int = 16) -> Column:
                 )
             )
     return key
-
-
-def zorder_layout(
-    df: DataFrame,
-    dims: list[str],
-    bits: int = 16,
-    n_files: int | None = None,
-    key_col: str = "zkey",
-) -> DataFrame:
-    """Attach the Z-order key and arrange rows for a data-skipping
-    write: ``repartitionByRange`` on the key (one output file per
-    contiguous key range — the min-max pruning unit) +
-    ``sortWithinPartitions`` (tight per-file ranges). Follow with
-    ``.write.parquet(...)``; every dimension column then supports
-    footer-stat skipping.
-
-    ``n_files`` defaults to the session's shuffle partitioning.
-    100 TB shape: ONE range-exchange shuffle (sampled boundaries) —
-    exactly what a sorted write costs anyway; the locality is free.
-    """
-    keyed = df.withColumn(
-        key_col, zorder_key([F.col(d) for d in dims], bits=bits)
-    )
-    if n_files is not None:
-        keyed = keyed.repartitionByRange(n_files, F.col(key_col))
-    else:
-        keyed = keyed.repartitionByRange(F.col(key_col))
-    return keyed.sortWithinPartitions(key_col)

@@ -5,8 +5,8 @@ The Spark-side plumbing (schemas, Arrow-batched ``mapInPandas``
 signatures, partition-size control) is real and tested; the actual
 codec calls are stubbed behind ``NotImplementedError`` or a
 deterministic fake because no image/audio libraries exist in this
-container — swap ``_decode_image_bytes`` for PIL/libvips on a real
-cluster.
+container — swap the stubbed decode/probe steps for PIL/libvips or
+ffmpeg on a real cluster.
 
 Scale notes: binary payloads dominate row size, so ``mapInPandas``
 batches are kept small via ``spark.sql.execution.arrow
@@ -21,11 +21,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -43,44 +39,6 @@ IMAGE_META_SCHEMA = StructType(
         StructField("content_hash", StringType()),
     ]
 )
-
-IMAGE_FEATURE_SCHEMA = StructType(
-    [
-        StructField("item_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("features", ArrayType(FloatType())),
-    ]
-)
-
-
-def _decode_image_bytes(data: bytes) -> tuple[int, int]:
-    """STUB: real implementation uses PIL/libvips. Deterministic fake:
-    dimensions derived from the content hash so tests are stable."""
-    import hashlib
-
-    h = hashlib.md5(data).digest()
-    return 64 + h[0] % 64, 64 + h[1] % 64
-
-
-def make_binary_items(spark, n: int = 32) -> DataFrame:
-    """Deterministic synthetic binary column (no image libs in this
-    container; payload = repeated md5 bytes)."""
-    import hashlib
-
-    rows = [
-        (i, "png" if i % 2 == 0 else "jpeg",
-         hashlib.md5(f"item-{i}".encode()).digest() * (8 + i % 8))
-        for i in range(n)
-    ]
-    schema = StructType(
-        [
-            StructField("item_id", LongType()),
-            StructField("format", StringType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
 
 
 def extract_image_metadata(df: DataFrame) -> DataFrame:
@@ -107,52 +65,6 @@ def extract_image_metadata(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(batches, IMAGE_META_SCHEMA)
-
-
-def extract_image_features(df: DataFrame, n_features: int = 8) -> DataFrame:
-    """STUB feature extractor (real one calls a vision model): emits a
-    deterministic feature vector per item with the real batch shape."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        for pdf in it:
-            digests = pdf["content"].map(
-                lambda b: hashlib.md5(bytes(b)).digest()
-            )
-            # vectorized feature block: (n_rows, 16) uint8 -> float32
-            mat = (
-                np.frombuffer(b"".join(digests), dtype=np.uint8)
-                .reshape(len(digests), 16)[:, [j % 16 for j in range(n_features)]]
-                .astype(np.float32)
-                / 255.0
-            ) if len(digests) else np.empty((0, n_features), dtype=np.float32)
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf["item_id"],
-                    "width": digests.map(lambda d: 64 + d[0] % 64),
-                    "height": digests.map(lambda d: 64 + d[1] % 64),
-                    "features": list(mat),
-                }
-            )
-
-    return df.mapInPandas(batches, IMAGE_FEATURE_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling *plan*: expands (item, n_frames) into frame
-    tasks without touching bytes (:func:`sample_video_frames` runs the
-    stubbed decode)."""
-    return (
-        df.withColumn("n_frames", (F.length("content") % 100) + 1)
-        .withColumn(
-            "frame_idx",
-            F.explode(F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))),
-        )
-        .select("item_id", "frame_idx")
-    )
 
 
 VIDEO_FRAME_SCHEMA = StructType(
@@ -282,9 +194,9 @@ def perceptual_hash(df: DataFrame) -> DataFrame:
     grayscale grid, threshold each pixel against the mean, pack the
     bits). Identical/visually-near images share a hash, so dedup is a
     hash-bucket equijoin — the image analogue of the text MinHash
-    bucket join. Hamming-1 multi-probe recall lives in
-    :func:`perceptual_neardup_pairs` (each hash joins its 16 one-bit
-    flips too — implemented r11, gate mm5).
+    bucket join. Near-dup recall beyond exact hash equality lives in
+    :func:`perceptual_neardup_pairs64` (64-bit hash, pigeonhole
+    banding — gate mm5).
 
     DECODE STUB (this container has no image codecs): the "16-pixel
     grayscale thumbnail" is the md5 digest of the payload — 16
@@ -324,66 +236,6 @@ def perceptual_hash(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(batches, out_schema)
-
-
-def perceptual_neardup_pairs(
-    df: DataFrame, multi_probe: bool = True
-) -> DataFrame:
-    """Image near-duplicate pairs by perceptual-hash bucket equijoin
-    with hamming-1 MULTI-PROBE — the mm4 recall extension (VERDICT
-    r10 ask #4): each item's 16-bit aHash expands to itself plus its
-    16 one-bit flips (17 probe keys), and probes equijoin against
-    exact hashes, so every pair within hamming distance 1 is found
-    WITHOUT any pairwise hamming scan. The 17× key expansion is the
-    image analogue of LSH banding (multi-probe LSH, Lv et al. 2007);
-    ``multi_probe=False`` degrades to the exact-bucket join (hamming
-    0 only).
-
-    Returns ``id_a, id_b, hamming`` (0 or 1; ``id_a < id_b``; exact
-    integers — hash-green across engines).
-
-    SCALE CEILING (VERDICT r11 #1): the join key is a FIXED
-    65,536-value space — bucket population grows linearly with the
-    corpus (measured: 399,952 pair rows at just 50k docs at sf1) and
-    the pair stage degenerates toward all-pairs (~N²/2^16) past the
-    hash space. Fine for small/medium corpora; at corpus scale use
-    :func:`perceptual_neardup_pairs64` (64-bit aHash + pigeonhole
-    banding, the mm5 gate's path since r12).
-
-    Plan shape: one Arrow-projection hash pass (bytes never leave
-    the scan), a 17×-row probe explode of (id, 16-bit int) pairs —
-    tiny rows — and one integer equijoin; each qualifying pair is
-    discovered at most twice (a-probe×b and b-probe×a) and deduped
-    by an exact groupBy.
-    """
-    h = perceptual_hash(df).withColumn(
-        "hv", F.conv("ahash", 16, 10).cast("int")
-    )
-    flips = [F.col("hv")]
-    if multi_probe:
-        flips += [
-            F.col("hv").bitwiseXOR(F.lit(1 << b)) for b in range(16)
-        ]
-    left = h.select(
-        F.col("item_id").alias("id_a"),
-        F.col("hv").alias("hv_a"),
-        F.explode(F.array(*flips)).alias("probe"),
-    )
-    right = h.select(
-        F.col("item_id").alias("id_b"), F.col("hv").alias("probe")
-    )
-    return (
-        left.join(right, "probe")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(
-                F.col("hv_a").bitwiseXOR(F.col("probe"))
-            ).cast("int").alias("hamming"),
-        )
-        .distinct()
-    )
 
 
 def perceptual_hash64(df: DataFrame) -> DataFrame:
@@ -440,10 +292,9 @@ def perceptual_neardup_pairs64(df: DataFrame, k: int = 3) -> DataFrame:
     the 64-bit perceptual hash — :func:`perceptual_hash64` +
     :func:`sparkt.functions.dedup.hamming_banded_pairs` pigeonhole
     banding (split into k+1 disjoint bands, per-band equijoin, exact
-    ``bit_count`` verify; zero recall loss). Supersedes the 16-bit
-    one-bit-flip multi-probe :func:`perceptual_neardup_pairs` at
-    corpus scale (VERDICT r11 #1): its fixed 65,536-value key
-    saturates (399,952 pairs at 50k docs at sf1), while banded
+    ``bit_count`` verify; zero recall loss). A 16-bit hash is a
+    fixed 65,536-value join key that saturates at corpus scale
+    (VERDICT r11 #1: 399,952 pairs at 50k docs at sf1), while banded
     64-bit keys collide at data-driven ~ n²/2^width rates.
 
     Returns ``id_a, id_b, hamming`` (exact integers, id_a < id_b).

@@ -1,24 +1,19 @@
-"""Distributed PCA over embedding columns: single-pass covariance,
-driver-side eigendecomposition, codegen projection.
+"""Distributed covariance over embedding columns — the one
+distributed pass of a PCA.
 
 The embedding-compression / whitening step of a vector pipeline
 (public design: PCA dimensionality reduction before IVF/PQ indexing,
-Jegou et al. 2011; standard covariance-eigh PCA). The distributed work
-is ONE pass computing the d×d covariance; the eigendecomposition runs
-on the driver over the d×d matrix — model-scale by construction, the
-same collect policy as ``similarity.kmeans_fit`` (k×dim model). The
-projection is a literal-matrix dot product in whole-stage codegen (no
-UDF, no shuffle).
+Jegou et al. 2011; standard covariance-eigh PCA) needs exactly one
+pass over the data: the d×d covariance. Its eigendecomposition is a
+driver-side ``numpy.linalg.eigh`` over the d(d+1)/2-row result —
+model-scale by construction, the same collect policy as
+``similarity.kmeans_fit`` (k×dim model).
 
 Scale shape of the covariance pass: each row explodes to its
 upper-triangle second-moment contributions (d(d+1)/2 structs — CPU
 work inherent to covariance) and a map-side-combined groupBy reduces
 them to d(d+1)/2 rows total crossing the wire per partition. No step
-materializes more than the model. For d in the hundreds-plus,
-``pca_fit(engine="arrow")`` switches the moment pass to
-:func:`moment_table_arrow` — BLAS partials per Arrow batch, one
-d(d+1)/2-row partial per partition, same aggregation contract
-(pytest-pinned equivalent to the explode path).
+materializes more than the model.
 """
 
 from __future__ import annotations
@@ -56,141 +51,3 @@ def covariance_table(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
         (F.round(F.avg("xy") - F.avg("xi") * F.avg("xj"), 7)
          + F.lit(0.0)).alias("cov")
     )
-
-
-def moment_table_arrow(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
-    """The high-dim covariance path: Arrow ``mapInPandas`` partial
-    second moments — one BLAS ``MᵀM`` per Arrow batch inside the
-    Python worker, ONE d(d+1)/2-row partial per partition crossing the
-    wire, then a map-side-combined groupBy merge. Same aggregation
-    contract as the explode path (``i, j, n, sxy, sxi, sxj`` sums) but
-    the per-row d² work runs vectorized instead of as d² codegen
-    structs — the right trade once d is in the hundreds (the explode
-    path wins below that by staying JVM-side; pca_fit exposes both).
-    """
-    import numpy as np
-
-    iu_i, iu_j = np.triu_indices(dim)
-
-    def batches(it):
-        import pandas as pd_
-
-        s = np.zeros(dim)
-        ss = np.zeros((dim, dim))
-        n = 0
-        for pdf in it:
-            mat = np.asarray(
-                [list(v[:dim]) for v in pdf[vec_col]], dtype=np.float64
-            )
-            if not len(mat):
-                continue
-            n += len(mat)
-            s += mat.sum(axis=0)
-            ss += mat.T @ mat
-        if n:
-            yield pd_.DataFrame(
-                {
-                    "i": (iu_i + 1).astype("int32"),
-                    "j": (iu_j + 1).astype("int32"),
-                    "n": np.full(len(iu_i), n, dtype="int64"),
-                    "sxy": ss[iu_i, iu_j],
-                    "sxi": s[iu_i],
-                    "sxj": s[iu_j],
-                }
-            )
-
-    partials = spread(df).select(vec_col).mapInPandas(
-        batches,
-        "i int, j int, n long, sxy double, sxi double, sxj double",
-    )
-    return partials.groupBy("i", "j").agg(
-        (F.sum("sxy") / F.sum("n")).alias("exy"),
-        (F.sum("sxi") / F.sum("n")).alias("exi"),
-        (F.sum("sxj") / F.sum("n")).alias("exj"),
-    )
-
-
-def pca_fit(
-    df: DataFrame, vec_col: str, dim: int, k: int,
-    engine: str = "explode",
-) -> dict:
-    """Fit a ``k``-component PCA: one distributed covariance pass
-    (UNROUNDED — rounding is only the oracle gate's cross-engine
-    contract), then ``numpy.linalg.eigh`` on the driver over the d×d
-    matrix (model-scale collect). Components are sign-normalized
-    (largest-|weight| entry positive) so the model is deterministic.
-
-    ``engine="explode"`` (default) keeps the moment pass JVM-side —
-    right for d up to the low hundreds; ``engine="arrow"`` switches to
-    :func:`moment_table_arrow` (vectorized BLAS partials) for larger d.
-
-    Returns ``{"mean": [d], "components": [k][d], "variance": [k]}``
-    with components ordered by descending eigenvalue."""
-    import numpy as np
-
-    if engine == "arrow":
-        ex = moment_table_arrow(df, vec_col, dim)
-        rows = ex.collect()  # d(d+1)/2 rows — the model, not the data
-    else:
-        pairs = F.expr(
-            f"""flatten(transform(sequence(1, {int(dim)}), i ->
-                  transform(sequence(i, {int(dim)}), j -> struct(
-                    i AS i, j AS j,
-                    element_at({vec_col}, i) * element_at({vec_col}, j) AS xy,
-                    element_at({vec_col}, i) AS xi,
-                    element_at({vec_col}, j) AS xj))))"""
-        )
-        ex = spread(df).select(F.explode(pairs).alias("p")).select("p.*")
-        rows = ex.groupBy("i", "j").agg(
-            F.avg("xy").alias("exy"),
-            F.avg("xi").alias("exi"),
-            F.avg("xj").alias("exj"),
-        ).collect()  # d(d+1)/2 rows — the model, not the data
-
-    cov = np.zeros((dim, dim))
-    mean = np.zeros(dim)
-    for r in rows:
-        i, j = r["i"] - 1, r["j"] - 1
-        c = r["exy"] - r["exi"] * r["exj"]
-        cov[i, j] = cov[j, i] = c
-        if i == j:
-            mean[i] = r["exi"]
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1][:k]
-    comps = []
-    for idx in order:
-        v = vecs[:, idx]
-        if v[int(np.argmax(np.abs(v)))] < 0:
-            v = -v
-        comps.append([float(x) for x in v])
-    return {
-        "mean": [float(x) for x in mean],
-        "components": comps,
-        "variance": [float(vals[i]) for i in order],
-    }
-
-
-def pca_project(
-    df: DataFrame,
-    vec_col: str,
-    model: dict,
-    out_col: str = "pca",
-) -> DataFrame:
-    """Project vectors onto the fitted components entirely in codegen:
-    each score is a literal-weight dot product minus the precomputed
-    ``mean·w`` offset — no UDF, no shuffle, one narrow projection."""
-    mean = model["mean"]
-    scores = []
-    for w in model["components"]:
-        b = sum(m * wi for m, wi in zip(mean, w))
-        dot_w = F.aggregate(
-            F.zip_with(
-                F.col(vec_col).cast("array<double>"),
-                F.array(*[F.lit(float(x)) for x in w]),
-                lambda x, c: x * c,
-            ),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
-        )
-        scores.append(dot_w - F.lit(float(b)))
-    return df.withColumn(out_col, F.array(*scores))

@@ -57,10 +57,6 @@ def _safe_cos(dot_expr: Column, qn: Column, cn: Column) -> Column:
     return F.round(dot_expr / F.greatest(qn * cn, F.lit(1e-12)), 4)
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / F.greatest(norm(a) * norm(b), F.lit(1e-12))
-
-
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,

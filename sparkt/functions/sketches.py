@@ -25,46 +25,10 @@ def hll_distinct(col: str | Column, lg_k: int = 12) -> Column:
     return F.hll_sketch_estimate(F.hll_sketch_agg(col, F.lit(lg_k)))
 
 
-def hll_sketch(col: str | Column, lg_k: int = 12) -> Column:
-    """The mergeable sketch itself (binary) — persist per
-    partition/day, roll up later with ``hll_merge``."""
-    return F.hll_sketch_agg(col, F.lit(lg_k))
-
-
-def hll_merge(sketch_col: str | Column) -> Column:
-    """Union previously materialized sketches (rollup path: daily
-    sketches → monthly distinct counts with no raw-data re-scan)."""
-    return F.hll_sketch_estimate(F.hll_union_agg(sketch_col))
-
-
 def approx_quantile(col: str | Column, prob: float, accuracy: int = 10000) -> Column:
     """Greenwald-Khanna approximate quantile (error ≤ 1/accuracy of
     rank) — single-pass, mergeable, no sort."""
     return F.percentile_approx(col, prob, accuracy)
-
-
-def approx_distinct_rollup(
-    df: DataFrame,
-    keys: list[str] | str,
-    value_col: str,
-    rollup_keys: list[str] | str | None = None,
-    lg_k: int = 12,
-) -> DataFrame:
-    """Two-level sketch rollup: sketch per fine key, merge to coarse
-    key — the plan shape for 'daily uniques AND monthly uniques from
-    one scan'. Returns the coarse-level estimates."""
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    if rollup_keys is None:
-        rollup_keys = keys[:-1]
-    rollup_keys = (
-        [rollup_keys] if isinstance(rollup_keys, str) else list(rollup_keys)
-    )
-    fine = df.groupBy(*keys).agg(hll_sketch(value_col).alias("__sk"))
-    if not rollup_keys:
-        return fine.agg(hll_merge("__sk").alias("approx_distinct"))
-    return fine.groupBy(*rollup_keys).agg(
-        hll_merge("__sk").alias("approx_distinct")
-    )
 
 
 # ------------------------------------------------------------- bloom

@@ -1,5 +1,4 @@
-"""Skew mitigation for shuffles: salted joins and two-phase
-aggregation.
+"""Skew mitigation for shuffles: salted joins and a key-skew report.
 
 AQE's skew-join handling (``spark.sql.adaptive.skewJoin``) splits
 oversized partitions at runtime and is the first line of defense —
@@ -14,12 +13,6 @@ tenant" shape), where even a split partition re-skews on re-shuffle.
   small side is too big to broadcast but small enough to replicate),
   and equijoin on (key, salt). One hot key fans out across n_salts
   reducers.
-- ``two_phase_count``/``two_phase_sum``: pre-aggregate on (key, salt)
-  so the hot key's map outputs combine in parallel before the final
-  per-key reduce — the manual form of the partial-aggregation Spark
-  already applies to algebraic aggregates; useful when the aggregate
-  is wrapped in something Catalyst won't partial-push (e.g.
-  count-distinct rewrites).
 
 Salting is deterministic (hash-based, no rand()) so retried tasks
 produce identical output — the same property sampling.py relies on.
@@ -82,36 +75,6 @@ def salted_join(
     )
     out = b.join(s, keys + [SALT], how)
     return out.drop(SALT)
-
-
-def two_phase_count(
-    df: DataFrame, keys: list[str] | str, n_salts: int = 32
-) -> DataFrame:
-    """count(*) per key via (key, salt) partial → key final — two
-    small shuffles instead of one skewed one. Returns (keys..., n)."""
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
-    partial = (
-        df.withColumn(SALT, salt)
-        .groupBy(*keys, SALT)
-        .agg(F.count(F.lit(1)).alias("__pn"))
-    )
-    return partial.groupBy(*keys).agg(F.sum("__pn").alias("n"))
-
-
-def two_phase_sum(
-    df: DataFrame, keys: list[str] | str, value_col: str, n_salts: int = 32
-) -> DataFrame:
-    """sum(value) per key with the same two-phase shape. Returns
-    (keys..., total)."""
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
-    partial = (
-        df.withColumn(SALT, salt)
-        .groupBy(*keys, SALT)
-        .agg(F.sum(value_col).alias("__ps"))
-    )
-    return partial.groupBy(*keys).agg(F.sum("__ps").alias("total"))
 
 
 def key_skew_report(

@@ -116,23 +116,6 @@ def _stopword_hits(text: Column, words: list[str]) -> Column:
     return F.size(F.filter(tokens(text), lambda t: t.isin(words)))
 
 
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality score (monotone in signals a curation
-    pipeline keys on; fixed weights so it is reproducible).
-
-    Built from UNROUNDED ratios: combining pre-rounded 6-decimal terms
-    puts ~10% of values exactly on a .xxxxxx5 boundary where engines'
-    round() algorithms (HALF_UP vs nearest-double) disagree."""
-    n_chars = F.length(text)
-    n_tokens = token_count(text)
-    alpha = F.length(F.regexp_replace(text, "[^a-zA-Z]", "")) / F.greatest(
-        n_chars, F.lit(1)
-    )
-    stop = _stopword_hits(text, EN_STOPWORDS) / F.greatest(n_tokens, F.lit(1))
-    length_term = F.least(n_tokens / F.lit(100.0), F.lit(1.0))
-    return F.round(0.4 * length_term + 0.3 * alpha + 0.3 * stop, 6)
-
-
 def lang_id(text: Column, toks: Column | None = None) -> Column:
     """Heuristic language ID: CJK character share, else stopword-hit
     argmax with fixed tie order en > de > fr > es.
@@ -198,7 +181,6 @@ def redact_pii(text: Column) -> Column:
     return F.regexp_replace(red, PII_IPV4_RE, "<IP>")
 
 
-# ---------------------------------------------------------- repetition
 # ------------------------------------------- run-length repetition HOFs
 def dup_token_count(sorted_arr: Column) -> Column:
     """Number of element occurrences belonging to values appearing
@@ -266,34 +248,6 @@ def bigram_array(toks: Column) -> Column:
                 " ", F.element_at(toks, i), F.element_at(toks, i + 1)
             ),
         )
-    )
-
-
-def repetition_table(df, text_col: str, id_col: str):
-    """Gopher-style repetition signals (Rae et al. 2021 §A1.1): the
-    fraction of token occurrences belonging to tokens that repeat
-    within the document, and the fraction of bigram occurrences taken
-    by the document's single most frequent bigram.
-
-    Scale shape (r5 rewrite): run-length ``aggregate`` HOF scans over
-    the sorted token/bigram arrays — ONE narrow codegen projection,
-    zero shuffles, zero Python (was explode -> two doc-keyed
-    double-groupBys + a join). A 100 TB corpus scores at scan speed.
-    """
-    toks = tokens(F.col(text_col))
-    n = F.size(toks)
-    bg = bigram_array(toks)
-    return df.select(
-        F.col(id_col).alias("doc"),
-        n.cast("long").alias("n_tokens"),
-        F.round(
-            dup_token_count(F.array_sort(toks)) / F.greatest(n, F.lit(1)), 6
-        ).alias("dup_token_ratio"),
-        F.round(
-            max_adjacent_run(F.array_sort(bg))
-            / F.greatest(F.size(bg), F.lit(1)),
-            6,
-        ).alias("top_bigram_ratio"),
     )
 
 
@@ -465,19 +419,6 @@ def trigram_familiarity(df, text_col: str, id_col: str):
 
 
 # ----------------------------------------------- word-bigram LM score
-def word_bigrams(text: Column) -> Column:
-    """Array of space-joined word bigrams over the lowercased a-z/space
-    normalization of ``text`` (same feature-space normalization as
-    :func:`char_trigrams`). Words are the non-empty space splits; a
-    document with < 2 words yields an empty array (explicit guard —
-    Spark's ``sequence(1, 0)`` would otherwise count DOWN)."""
-    s = F.regexp_replace(
-        F.regexp_replace(F.lower(text), "[^a-z ]", ""), " +", " "
-    )
-    ws = F.filter(F.split(s, " "), lambda w: w != F.lit(""))
-    return _bigrams_of(ws)
-
-
 def _bigrams_of(ws: Column) -> Column:
     """Bigram array from a words array. Callers on the hot path pass a
     materialized column reference, NOT an inline expression — the
@@ -566,7 +507,7 @@ def collocations(df, text_col: str, min_count: int = 5):
     compares these) and ``pmi = ln(pair_count · N / (c1 · c2))`` is
     ln-based and carries engine last-ulp noise — rank/threshold it,
     never hash it (tfidf/bigram_lm doctrine). Normalization is the
-    shared a-z/space feature space of :func:`word_bigrams`.
+    a-z/space feature space shared with :func:`bigram_lm_table`.
 
     Scale shape: the corpus explodes exactly twice (pair counts +
     unigram counts), both map-side-combined count shuffles whose
@@ -957,9 +898,9 @@ def diversity_stats(text: Column) -> dict[str, Column]:
     """Lexical-diversity quality signals: type–token ratio and the
     Gini–Simpson index over the document's unigram distribution —
     the low-diversity detectors (SEO keyword stuffing, template spam,
-    generation loops) that complement :func:`repetition_table`'s
-    adjacency-based signals (Rae et al. 2021 §A1.1 filter by exactly
-    this family).
+    generation loops) that complement the adjacency-based repetition
+    signals of :func:`dup_token_count` / :func:`max_adjacent_run`
+    (Rae et al. 2021 §A1.1 filter by exactly this family).
 
     Returned columns:
 
@@ -978,7 +919,7 @@ def diversity_stats(text: Column) -> dict[str, Column]:
       doctrine: ln's last ulp differs across engines — exclude from
       oracle hashes, compare by threshold or drop).
 
-    Scale shape (the repetition_table rewrite doctrine): one
+    Scale shape (the run-length repetition HOF doctrine): one
     run-length ``aggregate`` HOF scan over the SORTED token array
     computes Σc², the distinct count, and Σ c·log2 c incrementally
     ((r+1)² − r² = 2r+1; the entropy delta is the two-term log

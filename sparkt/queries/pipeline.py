@@ -2243,9 +2243,8 @@ def s9_pca_cov(spark, sf_dir):
     .covariance_table): single-pass upper-triangle covariance of the
     first 16 embedding dims — per-row moment explode + map-side
     combined groupBy, output d(d+1)/2 rows regardless of corpus size.
-    The driver-side eigh + codegen projection (pca_fit/pca_project)
-    are pytest-pinned vs numpy (eigendecomposition is not
-    SQL-expressible)."""
+    The eigendecomposition of that d×d model runs on the driver
+    (numpy ``eigh``; not SQL-expressible)."""
     from sparkt.functions.pca import covariance_table
 
     emb = T(spark, sf_dir, "embeddings").withColumn(
@@ -4712,7 +4711,7 @@ ORDER BY removed_doc
 
 
 # ----------------------------------------------------------------- pl5
-def pl5_curation_pipeline(spark, sf_dir, decontaminate_method="semi"):
+def pl5_curation_pipeline(spark, sf_dir):
     """END-TO-END pretraining-curation integration gate (VERDICT r12
     ask #5): the full curation surface chained as ONE Catalyst
     dataflow over the documents corpus —
@@ -4792,15 +4791,10 @@ def pl5_curation_pipeline(spark, sf_dir, decontaminate_method="semi"):
     )
     uniq = qual.join(removed, "doc_id", "left_anti")
 
-    # stage 5: decontaminate vs the (normalized) benchmark slice.
-    # method parameterized (VERDICT r14 ask #3): 'semi' (broadcast
-    # shingle-set semi-join — oracle parity) for the gate; 'bloom'
-    # (d12's 512 KB mergeable filter) is the scale path — at 500k docs
-    # this stage dominates the pipeline wall and the bloom broadcast
-    # is constant-size in the bench slice (measured table PLANS.md)
+    # stage 5: decontaminate vs the (normalized) benchmark slice
+    # (broadcast shingle-set semi-join — exact, oracle parity)
     flagged = D.decontaminate(
         uniq, bench, "text", "doc_id", k=3, threshold=0.05,
-        method=decontaminate_method,
     ).select(F.col("doc").alias("doc_id"))
     clean = uniq.join(flagged, "doc_id", "left_anti")
 

@@ -168,9 +168,3 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    return [
-        load_parquet(spark, os.path.join(sf_dir, f"{n}.parquet")) for n in names
-    ]

@@ -239,11 +239,6 @@ def run_windowed_stream(
     query.awaitTermination()
 
 
-def ensure_dir(path: str) -> str:
-    os.makedirs(path, exist_ok=True)
-    return path
-
-
 def shard_assignment(id_col, n_shards: int = 16, seed: str = "shard"):
     """Deterministic per-row shard id: first 4 hex chars of the seeded
     md5 modulo ``n_shards`` — a PURE row function (no cumulative

@@ -41,26 +41,6 @@ def test_minhash_similar_docs_share_bands(spark):
     assert all(3 not in p for p in pair_set)
 
 
-def test_simhash_hamming_correlates(spark):
-    from sparkt.functions.dedup import simhash16
-
-    df = spark.createDataFrame(
-        [
-            (1, "spark sql query engine with distributed execution"),
-            (2, "spark sql query engine with distributed computation"),
-            (3, "bananas oranges apples grapes melons pears kiwis"),
-        ],
-        ["doc_id", "text"],
-    )
-    out = {r["doc_id"]: r["sh"] for r in df.select(
-        "doc_id", simhash16(F.col("text")).alias("sh")).collect()}
-
-    def ham(a, b):
-        return sum(x != y for x, y in zip(a, b))
-
-    assert ham(out[1], out[2]) < ham(out[1], out[3])
-
-
 def test_ngram_jaccard_threshold(spark):
     from sparkt.functions.dedup import ngram_jaccard_pairs
 
@@ -131,7 +111,6 @@ def test_text_operators(spark):
         TX.token_count(F.col("text")).alias("n"),
         TX.fingerprint(F.col("text")).alias("fp"),
         TX.lang_id(F.col("text")).alias("lang"),
-        TX.quality_score(F.col("text")).alias("q"),
     ).collect()
     by_id = {r["doc_id"]: r for r in out}
     assert by_id[1]["n"] == 4
@@ -139,35 +118,29 @@ def test_text_operators(spark):
     assert by_id[3]["n"] == 1
     assert by_id[1]["lang"] == "en"  # 'the' stopword hit
     assert len(by_id[1]["fp"]) == 32
-    assert 0.0 <= by_id[1]["q"] <= 1.0
     # normalization: same fingerprint regardless of case/whitespace
     fp2 = df.select(TX.fingerprint(F.lit("THE QUICK   brown fox.")).alias("f"))
     assert fp2.first()["f"] == by_id[1]["fp"]
 
 
 def test_multimodal_plumbing(spark):
-    from sparkt.functions.multimodal import (
-        extract_image_features,
-        extract_image_metadata,
-        frame_sample_plan,
-        make_binary_items,
-    )
+    import hashlib
 
-    items = make_binary_items(spark, n=16)
+    from sparkt.functions.multimodal import extract_image_metadata
+
+    items = spark.createDataFrame(
+        [
+            (i, "png" if i % 2 == 0 else "jpeg",
+             hashlib.md5(f"item-{i}".encode()).digest() * (8 + i % 8))
+            for i in range(16)
+        ],
+        "item_id long, format string, content binary",
+    )
     meta = extract_image_metadata(items)
     rows = meta.collect()
     assert len(rows) == 16
     assert all(r["n_bytes"] > 0 and len(r["content_hash"]) == 32 for r in rows)
     assert all(64 <= r["width"] < 128 for r in rows)
-
-    feats = extract_image_features(items, n_features=8)
-    frow = feats.first()
-    assert len(frow["features"]) == 8
-    assert all(0.0 <= v <= 1.0 for v in frow["features"])
-
-    plan = frame_sample_plan(items, every_n=10)
-    assert plan.count() >= 16  # at least frame 0 per item
-    assert set(plan.columns) == {"item_id", "frame_idx"}
 
     # determinism (metadata derives from content hash)
     again = extract_image_metadata(items).collect()
@@ -226,7 +199,7 @@ def test_cosine_neardup_bucketed_not_all_pairs(spark):
     """d6 scale contract: candidate generation is a cell EQUIJOIN (no
     nested-loop/cartesian), and full probe is exhaustive (== brute
     force); partial probe returns a subset."""
-    from sparkt.functions.similarity import cosine_neardup_pairs, cosine, dot, norm
+    from sparkt.functions.similarity import cosine_neardup_pairs, dot, norm
     from sparkt.sources import load_parquet
 
     emb = load_parquet(spark, f"{SF}/embeddings.parquet").withColumn(
@@ -315,15 +288,30 @@ def test_pii_counts_and_redaction(spark):
 
 
 def test_repetition_features(spark):
-    """Gopher repetition: an all-repeats doc scores ~1.0 on both
-    signals; an all-unique doc scores 0 dup ratio."""
-    from sparkt.functions.text import repetition_table
+    """Gopher repetition via the run-length HOFs: an all-repeats doc
+    scores 1.0 on both signals; an all-unique doc scores 0 dup
+    ratio."""
+    from sparkt.functions.text import (
+        bigram_array,
+        dup_token_count,
+        max_adjacent_run,
+        tokens,
+    )
 
     df = spark.createDataFrame(
         [(1, "spam spam spam spam spam spam"), (2, "all words here differ")],
         ["doc_id", "text"],
     )
-    out = {r["doc"]: r for r in repetition_table(df, "text", "doc_id").collect()}
+    toks = tokens(F.col("text"))
+    bg = bigram_array(toks)
+    out = {r["doc_id"]: r for r in df.select(
+        "doc_id",
+        F.size(toks).alias("n_tokens"),
+        (dup_token_count(F.array_sort(toks)) / F.size(toks))
+        .alias("dup_token_ratio"),
+        (max_adjacent_run(F.array_sort(bg)) / F.size(bg))
+        .alias("top_bigram_ratio"),
+    ).collect()}
     assert out[1]["dup_token_ratio"] == 1.0
     assert out[1]["top_bigram_ratio"] == 1.0
     assert out[2]["dup_token_ratio"] == 0.0
@@ -374,9 +362,9 @@ def test_decontaminate_flags_overlap(spark):
 
 
 def test_hash_split_deterministic_and_complete(spark):
-    """Split assignment is stable across calls, covers every row, and
-    the sampler keeps a plausible fraction."""
-    from sparkt.functions.sampling import hash_sample, train_val_test_split
+    """Split assignment is stable across calls and covers every
+    row."""
+    from sparkt.functions.sampling import train_val_test_split
 
     df = spark.range(0, 1000).withColumnRenamed("id", "doc_id")
     a = train_val_test_split(df, "doc_id").groupBy("split").count().collect()
@@ -385,32 +373,6 @@ def test_hash_split_deterministic_and_complete(spark):
     counts = dict(map(tuple, a))
     assert sum(counts.values()) == 1000
     assert counts["train"] > counts["val"] and counts["train"] > counts["test"]
-    kept = hash_sample(df, "doc_id", keep_nibbles=4).count()
-    assert 150 < kept < 350  # ~25% of 1000
-
-
-def test_sketch_rollup_merges(spark):
-    """HLL sketches merge across fine groups: daily sketches rolled up
-    to per-type distinct counts match exact within HLL error, without
-    re-scanning raw data."""
-    from pyspark.sql import functions as F
-
-    from sparkt.functions.sketches import approx_distinct_rollup
-    from sparkt.sources import load_parquet
-
-    ev = load_parquet(spark, "/root/testdata/sf0.001/events.parquet")
-    ev = ev.withColumn("day", F.to_date("ts"))
-    rolled = approx_distinct_rollup(
-        ev, ["event_type", "day"], "user_id", rollup_keys="event_type"
-    )
-    exact = {
-        r["event_type"]: r["d"]
-        for r in ev.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("d"))
-        .collect()
-    }
-    for r in rolled.collect():
-        assert abs(r["approx_distinct"] / exact[r["event_type"]] - 1) <= 0.05
 
 
 def test_chunk_table_windows(spark):
@@ -866,30 +828,6 @@ def test_curriculum_order_equals_single_window(spark):
     for pos, (i, stage) in enumerate(want_order):
         assert got[i] == (stage, pos)
     assert sorted(p for _, p in got.values()) == list(range(300))
-
-
-def test_weighted_reservoir_topk_matches_reference(spark):
-    """A-Res exact-k weighted sampling equals the single-machine
-    reference (same md5 u, same log-space key), and the plan is a
-    TakeOrderedAndProject — never a global sort."""
-    import hashlib
-    import math
-
-    from sparkt.functions.sampling import weighted_reservoir_topk
-
-    rows = [(i, (i * 37) % 97 + 3) for i in range(200)]
-
-    def key(i, w):
-        h = int(hashlib.md5(f"wres:{i}".encode()).hexdigest()[:8], 16)
-        return math.log((h + 0.5) / 2 ** 32) / w
-
-    want = [r[0] for r in sorted(rows, key=lambda r: (-key(*r), r[0]))[:10]]
-    df = spark.createDataFrame(rows, ["doc_id", "w"])
-    out = weighted_reservoir_topk(df, "w", "doc_id", k=10)
-    got = [r["doc_id"] for r in out.collect()]
-    assert got == want
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan and "Sort " not in plan
 
 
 def test_weighted_bernoulli_is_monotone_in_weight(spark):
@@ -1374,13 +1312,11 @@ def test_decay_features_matches_python(spark):
 
 
 def test_pca_fit_project_matches_numpy(spark):
-    """pca_fit equals numpy PCA (eigh of the population covariance, up
-    to the shared sign convention); pca_project scores match the numpy
-    projection; the projection plan is a shuffle-free narrow
-    projection (no UDF, no Exchange)."""
+    """The PCA covariance pass (``covariance_table``) equals numpy's
+    population covariance at the oracle's 7dp contract."""
     import numpy as np
 
-    from sparkt.functions.pca import covariance_table, pca_fit, pca_project
+    from sparkt.functions.pca import covariance_table
 
     rng = np.random.RandomState(7)
     # anisotropic data so eigenvalues separate cleanly
@@ -1391,27 +1327,7 @@ def test_pca_fit_project_matches_numpy(spark):
         [(i, [float(x) for x in row]) for i, row in enumerate(data)],
         ["vec_id", "embedding"],
     )
-
-    model = pca_fit(df, "embedding", dim=3, k=2)
     cov_np = np.cov(data, rowvar=False, bias=True)
-    vals, vecs = np.linalg.eigh(cov_np)
-    order = np.argsort(vals)[::-1][:2]
-    for ci, idx in enumerate(order):
-        v = vecs[:, idx]
-        if v[int(np.argmax(np.abs(v)))] < 0:
-            v = -v
-        assert np.allclose(model["components"][ci], v, atol=1e-9)
-        assert abs(model["variance"][ci] - vals[idx]) < 1e-9
-    assert np.allclose(model["mean"], data.mean(axis=0), atol=1e-12)
-
-    out = pca_project(df, "embedding", model)
-    got = {r["vec_id"]: r["pca"] for r in out.collect()}
-    W = np.array(model["components"])
-    expect = (data - data.mean(axis=0)) @ W.T
-    for i in range(len(data)):
-        assert np.allclose(got[i], expect[i], atol=1e-9)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Python" not in plan
 
     # the oracle-facing covariance table agrees with numpy at 7dp
     ct = {(r["i"], r["j"]): r["cov"]
@@ -1419,13 +1335,6 @@ def test_pca_fit_project_matches_numpy(spark):
     for i in range(3):
         for j in range(i, 3):
             assert abs(ct[(i + 1, j + 1)] - round(cov_np[i, j], 7)) < 1e-9
-
-    # the high-dim Arrow moment path fits the SAME model (BLAS
-    # partials vs codegen explode — float-tolerance equivalent)
-    am = pca_fit(df, "embedding", dim=3, k=2, engine="arrow")
-    assert np.allclose(am["mean"], model["mean"], atol=1e-9)
-    assert np.allclose(am["components"], model["components"], atol=1e-7)
-    assert np.allclose(am["variance"], model["variance"], atol=1e-9)
 
 
 def test_count_anomalies_median_mad(spark):
@@ -1696,7 +1605,7 @@ def test_minhash_family_distinct_above_eight(spark):
     distinct now, and >32 raises."""
     import pytest
 
-    from sparkt.functions.dedup import _rot_offset, minhash_signature
+    from sparkt.functions.dedup import _rot_offset, minhash_table
 
     for n in (8, 12, 16, 32):
         offs = [_rot_offset(i, n) for i in range(n)]
@@ -1707,10 +1616,8 @@ def test_minhash_family_distinct_above_eight(spark):
         [(1, "alpha beta gamma delta epsilon zeta eta theta")],
         ["doc_id", "text"],
     )
-    sig = df.select(
-        minhash_signature(F.col("text"), n_hashes=16).alias("s")
-    ).first()["s"]
-    assert len(set(sig)) == 16
+    sig = minhash_table(df, "text", "doc_id", n_hashes=16).first()
+    assert len({sig[f"mh{i}"] for i in range(16)}) == 16
 
 
 def test_zero_norm_embeddings_do_not_crash(spark):
@@ -1734,12 +1641,32 @@ def test_zero_norm_embeddings_do_not_crash(spark):
 
 
 def test_lsh_bands_validates_signature_length(spark):
+    """minhash_candidate_pairs rejects band settings that leave a band
+    empty (n_hashes < n_bands keys every doc on md5('') — all pairs)
+    or leave hashes unread (n_hashes % n_bands != 0), at build time;
+    lsh_calibration inherits the check. Unrelated docs still never
+    pair at the gates' 8/4 setting."""
     import pytest
 
-    from sparkt.functions.dedup import lsh_bands
+    from sparkt.functions.dedup import lsh_calibration, minhash_candidate_pairs
 
-    with pytest.raises(ValueError, match="exceeds the signature"):
-        lsh_bands(F.col("sig"), n_bands=4, rows_per_band=2, n_hashes=4)
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "a completely different sentence about spark"),
+         (3, "bananas oranges apples grapes melons pears"),
+         (4, "distributed query engines plan joins and scans")],
+        ["doc_id", "text"],
+    )
+    for n_hashes, n_bands in ((4, 8), (8, 16), (6, 4), (8, 0)):
+        with pytest.raises(ValueError, match="multiple of n_bands"):
+            minhash_candidate_pairs(
+                df, "text", "doc_id", n_hashes=n_hashes, n_bands=n_bands
+            )
+    with pytest.raises(ValueError, match="multiple of n_bands"):
+        lsh_calibration(df, "text", "doc_id", n_hashes=4, n_bands=8)
+    assert minhash_candidate_pairs(
+        df, "text", "doc_id", n_hashes=8, n_bands=4
+    ).count() == 0
 
 
 def test_ivf_trained_centroids_use_l2_metric(spark):
@@ -1962,46 +1889,6 @@ def test_shuffle_shards_deterministic_and_packed(spark):
         df, "doc_id", "sz", seed="u", shard_size=500, prefix_chars=1
     ).orderBy("shuffle_key").collect()
     assert [r["doc_id"] for r in other] != [r["doc_id"] for r in rows]
-
-
-def test_write_shards_manifest_and_layout(spark, tmp_path):
-    """write_shards: one partition dir per shard, manifest counts
-    match the data, on-disk order within a shard equals the shuffle
-    order."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from sparkt.functions.sampling import write_shards
-
-    df = spark.range(0, 200).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") % 53 + 5).alias("sz"),
-    )
-    out_dir = str(tmp_path / "shards")
-    manifest = write_shards(
-        df, out_dir, "doc_id", "sz", seed="t", shard_size=400
-    )
-    assert manifest["n_docs"] == 200
-    assert manifest["n_shards"] >= 2
-    dirs = sorted(
-        d for d in os.listdir(out_dir) if d.startswith("shard_id=")
-    )
-    assert len(dirs) == manifest["n_shards"]
-    with open(os.path.join(out_dir, "manifest.json")) as f:
-        on_disk = json.load(f)
-    assert on_disk == manifest
-    # per-shard counts line up and in-shard order is the shuffle order
-    for ent in manifest["shards"][:3]:
-        part = spark.read.parquet(
-            os.path.join(out_dir, f"shard_id={ent['shard_id']}")
-        )
-        got = part.collect()
-        assert len(got) == ent["n_docs"]
-        assert sum(r["size"] for r in got) == ent["n_bytes"]
-        keys = [r["shuffle_key"] for r in got]
-        assert keys == sorted(keys)
 
 
 def test_bpe_tokenizer_parity_on_fixed_merges(spark):
@@ -2812,85 +2699,6 @@ def test_ivfpq_matches_numpy(spark):
     assert got == {q: e for q, e in expected.items() if e}
 
 
-def test_perceptual_neardup_multiprobe(spark):
-    """perceptual_neardup_pairs (mm4 recall extension, VERDICT r10
-    ask #4): hamming-1 pairs are caught by the 17-key multi-probe
-    that the exact-bucket join misses; hamming-0 pairs survive both;
-    nothing beyond hamming 1 appears. Payloads img6/img117 differ by
-    exactly one aHash bit and img41/img77 share a hash (deterministic
-    md5-stub facts, brute-searched offline)."""
-    import hashlib
-
-    from sparkt.functions.multimodal import (
-        perceptual_neardup_pairs,
-    )
-
-    def ah(b):
-        px = list(hashlib.md5(b).digest())
-        mean = sum(px) / 16.0
-        return sum(1 << (15 - i) for i, p in enumerate(px) if p > mean)
-
-    ids = [6, 117, 41, 77, 0]
-    assert bin(ah(b"img6") ^ ah(b"img117")).count("1") == 1
-    assert ah(b"img41") == ah(b"img77")
-    rows = [(i, f"img{i}".encode()) for i in ids]
-    df = spark.createDataFrame(rows, "item_id long, content binary")
-
-    multi = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in perceptual_neardup_pairs(df).collect()}
-    exact = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in perceptual_neardup_pairs(
-                 df, multi_probe=False).collect()}
-    assert multi[(6, 117)] == 1          # caught only by multi-probe
-    assert multi[(41, 77)] == 0
-    assert (6, 117) not in exact         # exact-bucket join misses it
-    assert exact == {(41, 77): 0}
-    assert all(h <= 1 for h in multi.values())
-
-
-def test_lsh_tune_matches_closed_form():
-    """lsh_tune (VERDICT r10 ask #5): returned params satisfy the
-    S-curve constraints, are the CHEAPEST satisfying config (verified
-    by exhaustive re-search), and the formula matches an independent
-    python evaluation; infeasible targets raise."""
-    import pytest as _pytest
-
-    from sparkt.functions.dedup import (
-        lsh_candidate_probability,
-        lsh_tune,
-    )
-
-    def curve(s, b, r):
-        return 1.0 - (1.0 - s**r) ** b
-
-    assert lsh_candidate_probability(0.8, 4, 2) == curve(0.8, 4, 2)
-
-    got = lsh_tune(0.8, target_recall=0.9)
-    b, r = got["n_bands"], got["rows_per_band"]
-    assert got["n_hashes"] == b * r <= 32
-    assert curve(0.8, b, r) >= 0.9
-    assert got["recall_at_target"] == curve(0.8, b, r)
-    assert got["threshold"] == (1.0 / b) ** (1.0 / r)
-    # exhaustive minimality: no cheaper (b*r, fp) config satisfies
-    cheaper = [
-        (bb * rr, curve(0.4, bb, rr))
-        for bb in range(1, 33)
-        for rr in range(1, 32 // bb + 1)
-        if curve(0.8, bb, rr) >= 0.9
-    ]
-    assert min(cheaper) == (got["n_hashes"], got["fp_at_reject"])
-
-    # reject constraint: fp at reject_s bounded
-    got2 = lsh_tune(0.8, target_recall=0.9, reject_s=0.3, max_fp=0.2)
-    assert curve(0.3, got2["n_bands"], got2["rows_per_band"]) <= 0.2
-    assert curve(0.8, got2["n_bands"], got2["rows_per_band"]) >= 0.9
-
-    with _pytest.raises(ValueError, match="no \\(bands, rows\\)"):
-        lsh_tune(0.5, target_recall=0.999, reject_s=0.45, max_fp=0.001)
-    with _pytest.raises(ValueError, match="target_s"):
-        lsh_tune(1.5)
-
-
 def test_sentence_stats_matches_python(spark):
     """sentence_stats: [.!?]+ segmentation, empty segments drop, avg
     = one integer division, singletons and trailing terminators."""
@@ -2937,48 +2745,6 @@ def test_calibration_report_matches_python(spark):
     assert got[9] == (2, 2, 1.0, round((0.95 + 1.0) / 2, 4),
                       round(round((0.95 + 1.0) / 2, 4) - 1.0, 4))
     assert set(got) == {0, 5, 9}
-
-
-def test_simhash_neardup_multiprobe(spark):
-    """simhash_neardup_pairs: hamming tags match a python simhash
-    reference; hamming-1 pairs appear only under multi_probe; nothing
-    beyond hamming 1."""
-    import hashlib
-
-    from sparkt.functions.dedup import simhash_neardup_pairs
-
-    def sim16(text):
-        toks = text.lower().strip().split()
-        bits = 0
-        for j in range(16):
-            vote = sum(
-                1 if hashlib.md5(t.encode()).hexdigest()[j] in
-                "89abcdef" else -1 for t in toks)
-            if vote > 0:
-                bits |= 1 << (15 - j)
-        return bits
-
-    rows = [(1, "alpha beta gamma delta"),
-            (2, "alpha beta gamma delta"),       # twin of 1 (h=0)
-            (3, "alpha beta gamma epsilon"),
-            (4, "completely different words here")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    hs = {i: sim16(t) for i, t in rows}
-
-    def hamming(a, b):
-        return bin(hs[a] ^ hs[b]).count("1")
-
-    expected_multi = {(a, b): hamming(a, b)
-                      for a in hs for b in hs
-                      if a < b and hamming(a, b) <= 1}
-    got = {(r["id_a"], r["id_b"]): r["hamming"]
-           for r in simhash_neardup_pairs(df, "text", "doc_id").collect()}
-    assert got == expected_multi
-    assert got[(1, 2)] == 0
-    exact = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in simhash_neardup_pairs(
-                 df, "text", "doc_id", multi_probe=False).collect()}
-    assert exact == {p: h for p, h in expected_multi.items() if h == 0}
 
 
 def test_containment_pairs_matches_python(spark):
@@ -3059,37 +2825,6 @@ def test_cohens_kappa_matches_python(spark):
     same = spark.createDataFrame([("x", "x")] * 4, "r1 string, r2 string")
     rs = cohens_kappa(same, "r1", "r2").collect()[0]
     assert (rs["po"], rs["pe"], rs["kappa"]) == (1.0, 1.0, 0.0)
-
-
-def test_multiprobe_completeness_bruteforce(spark):
-    """Completeness property of the 17-key multi-probe: over 80
-    seeded-random payloads, perceptual_neardup_pairs equals the
-    brute-force all-pairs hamming<=1 set EXACTLY (no missed pair, no
-    extra pair) — the guarantee that makes the equijoin a safe
-    substitute for a pairwise scan."""
-    import hashlib
-    import random
-
-    from sparkt.functions.multimodal import perceptual_neardup_pairs
-
-    rng = random.Random(11)
-    payloads = [bytes(rng.randrange(256) for _ in range(8))
-                for _ in range(80)]
-    rows = [(i, p) for i, p in enumerate(payloads)]
-    df = spark.createDataFrame(rows, "item_id long, content binary")
-
-    def ah(b):
-        px = list(hashlib.md5(b).digest())
-        mean = sum(px) / 16.0
-        return sum(1 << (15 - i) for i, p in enumerate(px) if p > mean)
-
-    hs = [ah(p) for p in payloads]
-    brute = {(a, b): bin(hs[a] ^ hs[b]).count("1")
-             for a in range(80) for b in range(a + 1, 80)
-             if bin(hs[a] ^ hs[b]).count("1") <= 1}
-    got = {(r["id_a"], r["id_b"]): r["hamming"]
-           for r in perceptual_neardup_pairs(df).collect()}
-    assert got == brute
 
 
 def test_active_users_matches_python(spark):
@@ -3767,12 +3502,13 @@ def test_mmr_rerank_matches_python(spark):
 def test_zorder_key_and_layout(spark):
     """zorder_key vs a python Morton reference: bit j of dim d lands
     at output bit j*n+d; locality holds (quadrant-sorted order);
-    zorder_layout produces files whose per-file min-max ranges are
-    TIGHTER on the second dimension than a 1-D sort's — the
-    data-skipping claim, measured; bad arity/width raise."""
+    a range-partitioned write on the key produces files whose
+    per-file min-max ranges are TIGHTER on the second dimension than
+    a 1-D sort's — the data-skipping claim, measured; bad arity/width
+    raise."""
     import pytest as _pytest
 
-    from sparkt.functions.layout import zorder_key, zorder_layout
+    from sparkt.functions.layout import zorder_key
 
     def morton(vals, bits, n):
         key = 0
@@ -3793,7 +3529,10 @@ def test_zorder_key_and_layout(spark):
     # data-skipping: 4 z-ordered files cover y-ranges ~half as wide
     # as 4 x-sorted files do (x-sort leaves y unconstrained per file)
     zparts = (
-        zorder_layout(df, ["x", "y"], bits=3, n_files=4)
+        df.withColumn(
+            "zkey", zorder_key([F.col("x"), F.col("y")], bits=3)
+        )
+        .repartitionByRange(4, "zkey").sortWithinPartitions("zkey")
         .select("y", F.spark_partition_id().alias("p"))
         .groupBy("p").agg((F.max("y") - F.min("y")).alias("span"))
         .collect()
@@ -3981,58 +3720,3 @@ def test_jaro_winkler_join_null_text(spark):
     ids = {(r["id_a"], r["id_b"]) for r in out}
     assert (1, 2) in ids                 # the classic pair survives
     assert all(3 not in p for p in ids)  # NULL rows never pair
-
-
-def test_pagerank_persist_adj_same_ranks_fewer_exchanges(spark):
-    """persist_adj=True (the 100 TB path): identical ranks to the
-    default, and the per-iteration edge-list re-exchange is gone —
-    the persisted plan scans InMemoryTableScan while the default
-    re-exchanges the checkpointed edges every step (the plan-audited
-    r12 residual)."""
-    from sparkt.functions.graph import pagerank
-
-    E = [(1, 2), (1, 3), (1, 4), (2, 3), (4, 5), (5, 6)]
-    df = spark.createDataFrame(E, "src long, dst long")
-    base = pagerank(df, n_iter=3)
-    fast = pagerank(df, n_iter=3, persist_adj=True)
-    try:
-        a = {r["node"]: r["rank"] for r in base.collect()}
-        b = {r["node"]: r["rank"] for r in fast.collect()}
-        assert a == b
-        plan = fast._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan
-    finally:
-        spark.catalog.clearCache()
-
-
-def test_decontaminate_bloom_agrees_with_semi(spark):
-    """VERDICT r14 ask #3: the Bloom-probe decontamination path
-    (d12's 512 KB mergeable filter replacing the broadcast shingle
-    set) must agree with the semi-join path row-for-row at the
-    default m_bits on a real corpus slice — sized so FPR is
-    negligible; any divergence would be a false positive the size
-    choice is documented to eliminate."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from sparkt.functions.dedup import decontaminate
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    corpus = docs.filter(F.col("doc_id") % 97 != 0)
-    kw = dict(k=3, threshold=0.05)
-    semi = {
-        (r["doc"], r["n_sh"], r["overlap"])
-        for r in decontaminate(
-            corpus, bench, "text", "doc_id", **kw
-        ).collect()
-    }
-    bloom = {
-        (r["doc"], r["n_sh"], r["overlap"])
-        for r in decontaminate(
-            corpus, bench, "text", "doc_id", method="bloom", **kw
-        ).collect()
-    }
-    assert semi, "test premise: some docs must flag at sf0.01"
-    assert bloom == semi

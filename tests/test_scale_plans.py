@@ -98,22 +98,6 @@ def test_similarity_plan_size_at_high_dim(spark):
     assert 0 <= cells.first()["c"] < 32
 
 
-def test_two_phase_agg_matches_direct(spark):
-    from sparkt.functions.skew import two_phase_count, two_phase_sum
-
-    df = _skewed(spark)
-    direct = {
-        tuple(r)[0]: tuple(r)[1:]
-        for r in df.groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("total"))
-        .collect()
-    }
-    n2 = {tuple(r)[0]: r["n"] for r in two_phase_count(df, "k").collect()}
-    s2 = {tuple(r)[0]: r["total"] for r in two_phase_sum(df, "k", "v").collect()}
-    assert n2 == {k: v[0] for k, v in direct.items()}
-    assert s2 == {k: v[1] for k, v in direct.items()}
-
-
 def test_partition_pruning_through_materialization(make_project, spark):
     """A partition_by table materialization must produce a layout where
     a filter on the partition column prunes at planning time
@@ -311,28 +295,6 @@ def test_shuffle_shards_bucket_offsets_broadcast_and_no_global_window(
     # the corpus-side window is bucket-partitioned
     assert "windowspecdefinition(__bucket" in plan
     assert "Exchange SinglePartition" not in plan
-
-
-def test_shuffle_shards_scope_single_pass_plan_and_release(spark):
-    """Scoped (single-upstream-pass) variant: inside the ``with`` the
-    narrow base is persisted (InMemoryTableScan in the plan) and the
-    only SinglePartition exchange feeds on the bucket AGGREGATE; on
-    exit the cache is released — no persistent RDD residue."""
-    from sparkt.functions.sampling import shuffle_shards_scope
-
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    df = spark.range(300).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 37 + 5).alias("sz")
-    )
-    with shuffle_shards_scope(
-        df, "doc_id", "sz", seed="p", shard_size=256, prefix_chars=2
-    ) as out:
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan
-        assert plan.count("Exchange SinglePartition") == 1
-        assert out.count() == 300
-    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_gate_callers_leave_no_cache_residue(spark):
