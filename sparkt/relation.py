@@ -15,10 +15,11 @@ from dataclasses import dataclass, replace
 _IDENT_RE = re.compile(r"^[a-z_][a-z0-9_]*$")
 
 #: Spark's ANSI-mode reserved words (ANSI compliance doc, "Reserved
-#: keywords") — ANSI mode is the DEFAULT in Spark 4, so a bare
-#: ``order``/``select`` identifier in generated SQL is a syntax error
-#: on a stock cluster (r9: found by driving sqlcheck.py over
-#: reserved-word relation names)
+#: keywords"). Under ``spark.sql.ansi.enforceReservedKeywords=true`` a
+#: bare ``order``/``select`` identifier in generated SQL is a syntax
+#: error, so these are always backquoted; pinned by
+#: ``tests/test_golden_sql_syntax.py::
+#: test_reserved_relation_identifier_renders_backquoted``
 _ANSI_RESERVED = frozenset("""
     all and any array as at authorization between both case cast
     check collate column constraint create cross current_date

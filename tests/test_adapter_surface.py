@@ -1,7 +1,7 @@
-"""Adapter contract surface (SURVEY.md §2.4): the connection-lifecycle
-no-ops, capability probes, model hooks, batch freshness and filtered
-catalog the reference's core calls (``core/dbt/task/runnable.py:345-360``,
-``core/dbt/task/run.py:258-296``, ``core/dbt/task/freshness.py:107-145``,
+"""Adapter contract surface (SURVEY.md §2.4): model hooks, relation
+listing, batch freshness and filtered catalog the reference's core
+calls (``core/dbt/task/run.py:258-296``,
+``core/dbt/task/freshness.py:107-145``,
 ``core/dbt/task/docs/generate.py:215-366``)."""
 
 from __future__ import annotations
@@ -26,19 +26,6 @@ def _runner(make_project, schema):
     return make_project(files, schema=schema)
 
 
-def test_connection_lifecycle_noops(make_project, spark):
-    runner = _runner(make_project, "t_surf1")
-    a = runner.adapter
-    assert a.type() == "spark"
-    with a.connection_named("model.surf.base") as conn:
-        assert conn is a
-    a.clear_transaction()
-    a.commit_if_has_connection()
-    assert a.is_cancelable() is True
-    assert a.supports("TableLastModifiedMetadata")
-    assert not a.supports("NopeCapability")
-
-
 def test_model_hook_session_conf(make_project, spark):
     """pre_model_hook applies spark_session_conf for the node and
     post_model_hook restores the previous value."""
@@ -59,13 +46,8 @@ def test_relations_cache_and_listing(make_project, spark):
     runner = _runner(make_project, "t_surf3")
     assert runner.run().ok
     a = runner.adapter
-    rels = a.list_relations_without_caching("t_surf3")
-    names = {r.identifier for r in rels}
+    names = {r.identifier for r in a.list_relations("t_surf3")}
     assert {"base", "conf_model"} <= names
-    a.set_relations_cache(rels)
-    extra = Relation(schema="t_surf3", identifier="later")
-    a.cache_added(extra)
-    assert ("t_surf3", "later") in a._relations_cache
 
 
 def test_execute_macro_and_python_job(make_project, spark):

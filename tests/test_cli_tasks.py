@@ -146,16 +146,19 @@ def test_docs_serve_smoke(make_project, spark):
     """docs-serve serves index.html + catalog.json/manifest.json from
     the target dir (reference core/dbt/task/docs/serve.py:28)."""
     import json as _json
+    import threading
     import urllib.request
 
-    from sparkt.docs import serve_in_thread
+    from sparkt.docs import make_server
 
     runner = make_project(FILES, schema="t_docs_serve")
     assert runner.seed().ok
     assert runner.run().ok
     runner.docs_generate()
 
-    httpd, base = serve_in_thread(runner.project.target_dir)
+    httpd = make_server(runner.project.target_dir, port=0)
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    base = f"http://127.0.0.1:{httpd.server_address[1]}"
     try:
         html = urllib.request.urlopen(f"{base}/index.html").read().decode()
         assert "sparkt project docs" in html

@@ -370,63 +370,77 @@ def test_incremental_predicates_delete_insert(make_project, spark):
     """Reference tests/functional/adapter/incremental/
     test_incremental_predicates.py: with predicate 'id != 2' the target
     row id=2 is NOT delete-eligible, so the new id=2 row inserts
-    alongside the old one."""
-    files = {
-        "dbt_project.yml": "name: ip\nmodel-paths: [models]\n",
-        "models/pred_di.sql": (
+    alongside the old one. A predicate ending in a ``--`` comment gives
+    the same rows."""
+    body = (
+        "{% if not is_incremental() %}\n"
+        "select 1 as id, 'hello' as msg, 'blue' as color\n"
+        "union all select 2 as id, 'goodbye' as msg, 'red' as color\n"
+        "{% else %}\n"
+        "select 1 as id, 'hey' as msg, 'blue' as color\n"
+        "union all select 2 as id, 'yo' as msg, 'green' as color\n"
+        "union all select 3 as id, 'anyway' as msg, 'purple' as color\n"
+        "{% endif %}\n"
+    )
+    files = {"dbt_project.yml": "name: ip\nmodel-paths: [models]\n"}
+    for name, pred in [("pred_di", "id != 2"),
+                       ("pred_di_c", "id != 2 -- keep id 2")]:
+        files[f"models/{name}.sql"] = (
             "{{ config(materialized='incremental', unique_key='id', "
             "incremental_strategy='delete+insert', "
-            "incremental_predicates=['id != 2']) }}\n"
-            "{% if not is_incremental() %}\n"
-            "select 1 as id, 'hello' as msg, 'blue' as color\n"
-            "union all select 2 as id, 'goodbye' as msg, 'red' as color\n"
-            "{% else %}\n"
-            "select 1 as id, 'hey' as msg, 'blue' as color\n"
-            "union all select 2 as id, 'yo' as msg, 'green' as color\n"
-            "union all select 3 as id, 'anyway' as msg, 'purple' as color\n"
-            "{% endif %}\n"
-        ),
-    }
+            f"incremental_predicates=['{pred}']) }}}}\n" + body
+        )
     runner = make_project(files, schema="t_ipred")
     assert runner.run().ok
-    assert runner.run().ok  # incremental pass
-    rows = {
-        (r.id, r.msg, r.color)
-        for r in spark.table("t_ipred.pred_di").collect()
-    }
-    assert rows == {
-        (1, "hey", "blue"),
-        (2, "goodbye", "red"),
-        (2, "yo", "green"),
-        (3, "anyway", "purple"),
-    }
+    res = runner.run()  # incremental pass
+    assert res.ok, [r.message for r in res.results]
+    for name in ("pred_di", "pred_di_c"):
+        rows = {
+            (r.id, r.msg, r.color)
+            for r in spark.table(f"t_ipred.{name}").collect()
+        }
+        assert rows == {
+            (1, "hey", "blue"),
+            (2, "goodbye", "red"),
+            (2, "yo", "green"),
+            (3, "anyway", "purple"),
+        }, name
 
 
 def test_incremental_predicates_dest_alias_merge(make_project, spark):
-    """DBT_INTERNAL_DEST-qualified predicates work on the merge path."""
-    files = {
-        "dbt_project.yml": "name: ip2\nmodel-paths: [models]\n",
-        "models/pred_m.sql": (
+    """DBT_INTERNAL_DEST-qualified predicates work on the merge path,
+    also when the predicate ends in a ``--`` comment."""
+    body = (
+        "{% if not is_incremental() %}\n"
+        "select 1 as id, 'a' as v, true as locked\n"
+        "union all select 2 as id, 'b' as v, false as locked\n"
+        "{% else %}\n"
+        "select 1 as id, 'A' as v, true as locked\n"
+        "union all select 2 as id, 'B' as v, false as locked\n"
+        "{% endif %}\n"
+    )
+    files = {"dbt_project.yml": "name: ip2\nmodel-paths: [models]\n"}
+    for name, pred in [
+        ("pred_m", "DBT_INTERNAL_DEST.locked = false"),
+        ("pred_m_c", "DBT_INTERNAL_DEST.locked = false -- unlocked only"),
+    ]:
+        files[f"models/{name}.sql"] = (
             "{{ config(materialized='incremental', unique_key='id', "
             "incremental_strategy='merge', "
-            "incremental_predicates=['DBT_INTERNAL_DEST.locked = false'])"
-            " }}\n"
-            "{% if not is_incremental() %}\n"
-            "select 1 as id, 'a' as v, true as locked\n"
-            "union all select 2 as id, 'b' as v, false as locked\n"
-            "{% else %}\n"
-            "select 1 as id, 'A' as v, true as locked\n"
-            "union all select 2 as id, 'B' as v, false as locked\n"
-            "{% endif %}\n"
-        ),
-    }
+            f"incremental_predicates=['{pred}']) }}}}\n" + body
+        )
     runner = make_project(files, schema="t_ipred2")
     assert runner.run().ok
-    assert runner.run().ok
-    rows = {(r.id, r.v) for r in spark.table("t_ipred2.pred_m").collect()}
-    # id=1 locked: old row survives AND new row merges in (not eligible
-    # for update -> insert path); id=2 unlocked: plain upsert
-    assert rows == {(1, "a"), (1, "A"), (2, "B")}
+    res = runner.run()
+    assert res.ok, [r.message for r in res.results]
+    for name in ("pred_m", "pred_m_c"):
+        rows = {
+            (r.id, r.v) for r in spark.table(f"t_ipred2.{name}").collect()
+        }
+        # id=1 locked: old row survives AND new row merges in (not
+        # eligible for update -> insert path); id=2 unlocked: plain
+        # upsert
+        assert rows == {(1, "a"), (1, "A"), (2, "B")}, name
 
 
 def test_merge_into_sql_emission(spark):
@@ -454,7 +468,7 @@ def test_merge_into_sql_emission(spark):
     )
     assert ("ON (DBT_INTERNAL_DEST.`id` = DBT_INTERNAL_SOURCE.`id` AND "
             "DBT_INTERNAL_DEST.`ds` = DBT_INTERNAL_SOURCE.`ds`) AND "
-            "(DBT_INTERNAL_DEST.ds > current_date() - 7)") in sql
+            "(DBT_INTERNAL_DEST.ds > current_date() - 7\n)") in sql
     assert ("UPDATE SET DBT_INTERNAL_DEST.`id` = DBT_INTERNAL_SOURCE.`id`, "
             "DBT_INTERNAL_DEST.`ds` = DBT_INTERNAL_SOURCE.`ds`, "
             "DBT_INTERNAL_DEST.`v` = DBT_INTERNAL_SOURCE.`v`") in sql

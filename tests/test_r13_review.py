@@ -1,5 +1,5 @@
 """Round-13 review campaign (VERDICT r12 ask #4): path-targeted review
-of deps.py / docs.py / state.py / events.py / sqlcheck.py — every
+of deps.py / docs.py / state.py / events.py — every
 behavioral fix pinned here (selector fqn/path parity has its own file,
 tests/test_selector_parity.py)."""
 
@@ -199,18 +199,3 @@ def test_warn_error_options_exclusive_aliases():
     with pytest.raises(ValueError):
         WarnErrorOptions.from_yaml('{"exclude": ["A"], "warn": ["B"]}')
 
-
-# --------------------------------------------------------- sqlcheck.py
-def test_sqlcheck_dispatch_is_whitespace_robust():
-    """'MERGE\\nINTO' previously bypassed the validator entirely (the
-    dispatch matched the literal 'merge into')."""
-    from sparkt.sqlcheck import MalformedStatement, check_table_format_sql
-
-    bad = "MERGE\nINTO t USING s ON t.id = s.id"  # no WHEN clause
-    with pytest.raises(MalformedStatement):
-        check_table_format_sql(bad)
-    good = (
-        "MERGE\n  INTO `t` AS tgt USING `s` AS src ON tgt.`id` = src.`id` "
-        "WHEN MATCHED THEN UPDATE SET `v` = src.`v`"
-    )
-    assert check_table_format_sql(good) == good

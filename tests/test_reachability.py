@@ -1,11 +1,18 @@
 """Guard against regrowth of code that only tests call.
 
-Every top-level function or class in ``sparkt/functions`` must be
-reachable from a non-test root: another ``sparkt/`` module (the
-registry gates live in ``sparkt/queries``), ``scripts/``,
-``perfbench/``, the driver entry point, or a module-level statement
-of ``sparkt/functions`` itself. Reachability follows names
-transitively through the bodies of reachable definitions.
+Every top-level function or class in ``sparkt/`` must be reachable
+from a non-test root:
+
+- a module-level statement of any ``sparkt/`` module (imports aside);
+- a top-level def with a registering decorator (the ``@register``
+  materializations, the click commands); a decorator that only wraps,
+  such as ``@dataclass``, does not make a root;
+- a name in a non-Python file under ``sparkt/``;
+- ``scripts/``, ``perfbench/`` and ``__spark_entry__.py``.
+
+Reachability follows names transitively through the bodies of
+reachable definitions. Names inside string constants are not roots,
+so a docstring that mentions a definition does not keep it alive.
 
 The scan is by name, not by import binding, so a name that appears in
 any root counts as a use. That over-approximates reachability, which
@@ -17,6 +24,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -26,7 +34,16 @@ ALLOWED = {
              "the codegen expression against",
     "_jaro_winkler": "pure-Python reference the Jaro-Winkler join tests "
                      "compare the codegen expression against",
+    "sparktRunner": "public programmatic invocation API, the dbtRunner "
+                    "analogue",
+    "sparktRunnerResult": "result type of the public sparktRunner API",
+    "register_plugin": "public decorator that registers an in-process "
+                       "plugin",
+    "clear_plugins": "public reset of the in-process plugin registry",
 }
+
+# decorators that wrap a definition without registering it anywhere
+_WRAPPERS = {"dataclass", "contextmanager", "lru_cache"}
 
 
 def _names(node: ast.AST) -> set[str]:
@@ -53,25 +70,38 @@ def _parse(path: str) -> ast.Module:
         return ast.parse(f.read(), filename=path)
 
 
+def _registers(stmt: ast.AST) -> bool:
+    heads = {
+        ast.unparse(d).split("(", 1)[0].rsplit(".", 1)[-1]
+        for d in stmt.decorator_list
+    }
+    return bool(heads - _WRAPPERS)
+
+
 def unreachable_defs(repo: str = REPO) -> list[str]:
-    """``module.name`` of every top-level def in sparkt/functions
-    that no non-test root reaches."""
-    functions = os.path.join(repo, "sparkt", "functions")
+    """``module.name`` of every top-level def in sparkt/ that no
+    non-test root reaches."""
+    package = os.path.join(repo, "sparkt")
     defs: dict[str, list[tuple[str, ast.AST]]] = {}
     roots: set[str] = set()
-    for path in sorted(_py_files(functions)):
-        module = os.path.splitext(os.path.basename(path))[0]
+    for path in sorted(_py_files(package)):
+        module = os.path.relpath(path, package)[:-3].replace(os.sep, ".")
         for stmt in _parse(path).body:
             if isinstance(
                 stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ):
                 defs.setdefault(stmt.name, []).append((module, stmt))
+                if _registers(stmt):
+                    roots.add(stmt.name)
             elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
                 roots |= _names(stmt)
-    root_files = [
-        p for p in _py_files(os.path.join(repo, "sparkt"))
-        if not p.startswith(functions + os.sep)
-    ]
+    for dirpath, dirs, files in os.walk(package):
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
+        for f in files:
+            if not f.endswith(".py"):
+                with open(os.path.join(dirpath, f), errors="ignore") as fh:
+                    roots |= set(re.findall(r"\w+", fh.read()))
+    root_files = []
     for d in ("scripts", "perfbench"):
         root_files += list(_py_files(os.path.join(repo, d)))
     entry = os.path.join(repo, "__spark_entry__.py")
@@ -103,7 +133,7 @@ def test_functions_reachable_outside_tests():
         if d.rsplit(".", 1)[-1] not in ALLOWED
     ]
     assert not dead, (
-        "reachable only from tests — wire into a gate or delete: "
+        "reachable only from tests — wire into a caller or delete: "
         + ", ".join(dead)
     )
 
