@@ -8,15 +8,21 @@ Storage model (no Delta/Hive available in this build, and by design the
 layer is pluggable):
 
 - Sources and seeds/tables are **external parquet tables** in Spark's
-  session catalog; every (re)write lands in a fresh versioned directory
-  ``<warehouse>/<schema>/<identifier>/v<N>`` and the catalog entry is
-  swapped via tmp-table + DROP + RENAME. This gives atomic
+  session catalog; every (re)write is one ``CREATE TABLE ... LOCATION
+  ... AS SELECT`` into a fresh versioned directory
+  ``<warehouse>/<schema>/<identifier>/v<N>`` (a DataFrame is selected
+  from a temp view), and the catalog entry is swapped via tmp-table +
+  DROP + RENAME. This gives atomic
   replace-while-reading semantics without table formats — the analogue
   of the reference's transactional CTAS (SURVEY.md §7 "Mutation without
   transactions"). On a production cluster the same interface binds to
   Delta/Iceberg (`CREATE OR REPLACE TABLE`, `MERGE INTO`) — the
   materializations only talk to this façade.
 - Views are catalog views (`CREATE OR REPLACE VIEW`).
+- ``catalog.json`` records every relation, so a new process re-creates
+  the session catalog. A partitioned or bucketed table keeps its column
+  list there and is re-created with it, so partition columns keep their
+  declared types instead of being re-inferred from directory names.
 
 Thread-safety: many scheduler threads share the session (Spark is
 thread-safe). ``_ddl_lock`` guards only the adapter's catalog
@@ -61,6 +67,10 @@ def _sql_str(spark: SparkSession, v) -> str:
     if str(raw).lower() != "true":
         s = s.replace("\\", "\\\\")
     return s.replace("'", "''")
+
+
+def _col_list(names) -> str:
+    return ", ".join(map(quote_identifier, names))
 
 
 def _is_pure_query(sql: str) -> bool:
@@ -143,6 +153,13 @@ class SparkAdapter:
         # creation raced when two workers hit their first node
         # simultaneously (loser's comment landed on a discarded object)
         self._query_header = threading.local()
+        # per-schema {identifier: "table"|"view"} (_cached_relation_type)
+        self._listing: dict[str, dict[str, str]] = {}
+        self._schemas_ensured: set[str] = set()
+        self._defer_saves = False
+        self._catalog_dirty = False
+        self._py_src_stash: dict = {}
+        self.events = None  # the runner's EventManager, once attached
         self._restore_catalog()
 
     # ----------------------------------------------- persistent catalog
@@ -155,7 +172,7 @@ class SparkAdapter:
 
         if self._restoring:
             return
-        if getattr(self, "_defer_saves", False):
+        if self._defer_saves:
             self._catalog_dirty = True
             return
         self._catalog_dirty = False
@@ -177,7 +194,7 @@ class SparkAdapter:
             yield
         finally:
             self._defer_saves = False
-            if getattr(self, "_catalog_dirty", False):
+            if self._catalog_dirty:
                 self._save_catalog()
 
     def _record(self, relation: Relation, obj_type: str | None = None,
@@ -191,18 +208,17 @@ class SparkAdapter:
         # in sync with the real object type: views record "view",
         # everything else is a table unless the caller says otherwise
         # (external sources may be a repair VIEW)
-        listing = getattr(self, "_listing", {}).get(relation.schema)
+        listing = self._listing.get(relation.schema)
         if listing is not None:
             t = obj_type or ("view" if entry.get("kind") == "view" else "table")
             listing[relation.identifier] = t
 
     def _fire_cache(self, action: str, ref_key: str,
                     ref_key_2: str = "") -> None:
-        events = getattr(self, "events", None)
-        if events is not None:
+        if self.events is not None:
             from sparkt.events import CacheAction
 
-            events.fire(CacheAction(
+            self.events.fire(CacheAction(
                 action=action, ref_key=ref_key, ref_key_2=ref_key_2,
             ))
 
@@ -212,7 +228,7 @@ class SparkAdapter:
         self._fire_cache(
             "drop_relation", f"{relation.schema}.{relation.identifier}"
         )
-        listing = getattr(self, "_listing", {}).get(relation.schema)
+        listing = self._listing.get(relation.schema)
         if listing is not None:
             listing.pop(relation.identifier, None)
 
@@ -224,8 +240,6 @@ class SparkAdapter:
         ``_record``/``_unrecord``/``rename_relation``/``drop_schema``;
         external catalog mutations made outside this adapter are
         invisible to it (same assumption as dbt's relation cache)."""
-        if not hasattr(self, "_listing"):
-            self._listing = {}
         listing = self._listing.get(schema)
         if listing is None:
             listing = {r.identifier: r.type for r in self.list_relations(schema)}
@@ -269,17 +283,23 @@ class SparkAdapter:
                             )
                         elif entry["kind"] == "table":
                             self.create_schema(schema)
+                            # with a recorded column list the table keeps
+                            # its declared types; an entry without one
+                            # infers them from the files
+                            cols = (
+                                f" ({entry['schema_ddl']})"
+                                if entry.get("schema_ddl") else ""
+                            )
+                            part = self._partition_clause(
+                                entry.get("partition_by")
+                            )
                             buck = self._bucket_clause(
                                 entry.get("bucket_by"), entry.get("buckets"),
                                 entry.get("sort_by"),
                             )
-                            cols = (
-                                f" ({entry['schema_ddl']})"
-                                if buck and entry.get("schema_ddl") else ""
-                            )
                             self.spark.sql(
                                 f"CREATE TABLE {rel.render()}{cols} USING "
-                                f"parquet{buck} "
+                                f"parquet{part}{buck} "
                                 f"LOCATION "
                                 f"'{_sql_str(self.spark, entry['location'])}'"
                             )
@@ -380,8 +400,8 @@ class SparkAdapter:
             pass
 
     def _commented(self, sql: str) -> str:
-        state = getattr(self, "_query_header", None)
-        comment = getattr(state, "comment", None) if state else None
+        state = self._query_header
+        comment = getattr(state, "comment", None)
         if not comment:
             return sql
         block = "/* {} */".format(comment.replace("*/", "* /"))
@@ -391,7 +411,7 @@ class SparkAdapter:
 
     def execute(self, sql: str, fetch: bool = False) -> tuple[str, ExecuteResult]:
         """Run one SQL statement; optionally fetch rows to the driver."""
-        events = getattr(self, "events", None)
+        events = self.events
         if events is not None:
             from sparkt.events import SQLQuery
 
@@ -447,19 +467,16 @@ class SparkAdapter:
         # memoized: every materialization ensures its schema, which at
         # 200 nodes was 200 serialized CREATE DATABASE IF NOT EXISTS
         # JVM roundtrips under the DDL lock (~12 ms each, r4 profile)
-        ensured = getattr(self, "_schemas_ensured", None)
-        if ensured is None:
-            ensured = self._schemas_ensured = set()
-        if schema in ensured:
+        if schema in self._schemas_ensured:
             return
         with self._ddl_lock:
             self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {self.quote(schema)}")
-            ensured.add(schema)
+            self._schemas_ensured.add(schema)
 
     def drop_schema(self, schema: str) -> None:
         with self._ddl_lock:
-            getattr(self, "_schemas_ensured", set()).discard(schema)
-            getattr(self, "_listing", {}).pop(schema, None)
+            self._schemas_ensured.discard(schema)
+            self._listing.pop(schema, None)
             self.spark.sql(
                 f"DROP DATABASE IF EXISTS {self.quote(schema)} CASCADE"
             )
@@ -467,9 +484,6 @@ class SparkAdapter:
             for key in [k for k in self._catalog if k.startswith(schema + ".")]:
                 self._catalog.pop(key, None)
             self._save_catalog()
-
-    def list_schemas(self) -> list[str]:
-        return [d.name for d in self.spark.catalog.listDatabases()]
 
     # --------------------------------------------- durable relation meta
     def set_relation_meta(self, relation: Relation, **meta) -> None:
@@ -682,15 +696,21 @@ class SparkAdapter:
             self._record(relation, kind="view", sql=select_sql)
 
     @staticmethod
+    def _partition_clause(partition_by: list[str] | None) -> str:
+        if not partition_by:
+            return ""
+        return f" PARTITIONED BY ({_col_list(partition_by)})"
+
+    @staticmethod
     def _bucket_clause(
         bucket_by: list[str] | None, buckets: int | None,
         sort_by: list[str] | None,
     ) -> str:
         if not bucket_by:
             return ""
-        sort = f" SORTED BY ({', '.join(sort_by)})" if sort_by else ""
+        sort = f" SORTED BY ({_col_list(sort_by)})" if sort_by else ""
         return (
-            f" CLUSTERED BY ({', '.join(bucket_by)}){sort} "
+            f" CLUSTERED BY ({_col_list(bucket_by)}){sort} "
             f"INTO {int(buckets or 8)} BUCKETS"
         )
 
@@ -700,7 +720,9 @@ class SparkAdapter:
         ``df`` fits in one AQE advisory partition (so AQE would coalesce
         the write into one task that writes every partition file in
         turn), and ``df`` promises no row order (a repartition would
-        drop an ORDER BY that the writer's own sort keeps). Any other
+        drop an ORDER BY that the writer's own sort keeps). ``df`` is the
+        select of the one write statement, for SQL and DataFrame input
+        alike (a DataFrame arrives through its temp view). Any other
         write keeps Spark's shape: a large write needs no extra shuffle,
         and a hash shuffle would put each partition value in one task
         however large it is."""
@@ -734,7 +756,7 @@ class SparkAdapter:
         except AnalysisException:  # the statement itself reports it
             return select_sql
         n = self.spark.sparkContext.defaultParallelism
-        cols = ", ".join(quote_identifier(c) for c in partition_by)
+        cols = _col_list(partition_by)
         return (
             f"SELECT /*+ REPARTITION({n}, {cols}) */ * FROM "
             f"({_statement_body(select_sql)}) __sparkt_parts"
@@ -751,6 +773,12 @@ class SparkAdapter:
         sort_by: list[str] | None = None,
     ) -> None:
         """Atomic CTAS-replace: write new version dir, swap catalog entry.
+
+        One write statement for either input: ``CREATE TABLE ... USING
+        parquet [PARTITIONED BY] [CLUSTERED BY ... SORTED BY ... INTO n
+        BUCKETS] LOCATION ... AS SELECT``. A ``df`` is selected from a
+        uniquely named temp view that lives only for the statement, so
+        its column types are written as the DataFrame declares them.
 
         Safe even when ``select_sql`` reads from ``relation`` itself (the
         old files are only dropped after the new ones are fully written),
@@ -779,53 +807,35 @@ class SparkAdapter:
         assert (select_sql is None) != (df is None)
         self.create_schema(relation.schema)
         loc = self._new_location(relation)
-        part = (
-            f" PARTITIONED BY ({', '.join(partition_by)})" if partition_by else ""
-        )
-        buck = self._bucket_clause(bucket_by, buckets, sort_by)
         tmp = relation.incorporate(
             identifier=f"{relation.identifier}__sparkt_tmp_{uuid.uuid4().hex[:6]}"
         )
-        if partition_by and df is None:
-            select_sql = self._one_writer_per_partition(select_sql, partition_by)
-        elif partition_by and self._fans_out(df):
-            df = df.repartition(
-                self.spark.sparkContext.defaultParallelism, *partition_by
-            )
-        if df is None:
+        view = None
+        if df is not None:
+            view = f"__sparkt_df_{uuid.uuid4().hex}"
+            df.createTempView(view)
+            select_sql = f"SELECT * FROM {view}"
+        try:
+            if partition_by:
+                select_sql = self._one_writer_per_partition(
+                    select_sql, partition_by
+                )
             self.spark.sql(
-                f"CREATE TABLE {tmp.render()} USING parquet{part}{buck} "
+                f"CREATE TABLE {tmp.render()} USING parquet"
+                f"{self._partition_clause(partition_by)}"
+                f"{self._bucket_clause(bucket_by, buckets, sort_by)} "
                 f"LOCATION '{_sql_str(self.spark, loc)}' AS {select_sql}"
             )
-        elif bucket_by:
-            # saveAsTable: the bucket spec lives in the catalog
-            writer = (
-                df.write.mode("overwrite").format("parquet")
-                .option("path", loc)
-                .bucketBy(int(buckets or 8), *bucket_by)
-            )
-            if sort_by:
-                writer = writer.sortBy(*sort_by)
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.saveAsTable(tmp.render())
-        else:
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(loc)
-            self.spark.sql(
-                f"CREATE TABLE {tmp.render()} USING parquet "
-                f"LOCATION '{_sql_str(self.spark, loc)}'"
-            )
-            if partition_by:
-                # in-memory catalog doesn't auto-track partitions of a
-                # location-registered table (scan would see 0 rows)
-                self.spark.sql(f"ALTER TABLE {tmp.render()} RECOVER PARTITIONS")
-        # replaying a bucketed table needs an explicit column list
-        # (Spark refuses CLUSTERED BY on schema-inferred CREATE)
+        finally:
+            if view is not None:
+                self.spark.catalog.dropTempView(view)
+        # the restore re-creates the table from this column list, so
+        # partition columns keep their declared types (directory names
+        # alone would re-infer '02139' as int) and the bucket spec is
+        # accepted (Spark refuses CLUSTERED BY on schema-inferred CREATE)
         schema_ddl = (
-            self.spark.table(tmp.render()).schema.toDDL() if bucket_by else None
+            self.spark.table(tmp.render()).schema.toDDL()
+            if partition_by or bucket_by else None
         )
         with self._ddl_lock:
             existing = self.get_relation(relation.schema, relation.identifier)
@@ -837,6 +847,7 @@ class SparkAdapter:
                 kind="table",
                 location=loc,
                 partitioned=bool(partition_by),
+                partition_by=partition_by or None,
                 bucket_by=bucket_by or None,
                 buckets=int(buckets or 8) if bucket_by else None,
                 sort_by=sort_by or None,
@@ -891,8 +902,6 @@ class SparkAdapter:
         """Per-INSTANCE stash feeding python_model_source: set via this
         un-recorded call so the recorded call's KEY is the uid alone —
         replay reproduces the key without knowing the schema."""
-        if "_py_src_stash" not in self.__dict__:
-            self._py_src_stash: dict = {}
         self._py_src_stash[unique_id] = columns
 
     def python_model_source(self, unique_id: str) -> dict:
@@ -901,7 +910,7 @@ class SparkAdapter:
         drive on_schema_change/strategy SQL generation identically,
         with no session and no user-code re-run (sparkt/record.py)."""
         return {
-            "columns": getattr(self, "_py_src_stash", {}).get(unique_id)
+            "columns": self._py_src_stash.get(unique_id)
         }
 
     def python_model_result(self, relation_name: str) -> dict:
@@ -1184,20 +1193,12 @@ class SparkAdapter:
                 f"{from_rel.schema}.{from_rel.identifier}",
                 f"{to_rel.schema}.{to_rel.identifier}",
             )
-            listings = getattr(self, "_listing", {})
-            src = listings.get(from_rel.schema)
+            src = self._listing.get(from_rel.schema)
             if src is not None:
                 src.pop(from_rel.identifier, None)
-            dst = listings.get(to_rel.schema)
+            dst = self._listing.get(to_rel.schema)
             if dst is not None:
                 dst[to_rel.identifier] = "table"
-
-    def alter_table_add_columns(
-        self, relation: Relation, columns: list[tuple[str, str]]
-    ) -> None:
-        cols = ", ".join(f"{self.quote(n)} {t}" for n, t in columns)
-        with self._ddl_lock:
-            self.spark.sql(f"ALTER TABLE {relation.render()} ADD COLUMNS ({cols})")
 
     # -------------------------------------------------------------- grants
     @staticmethod
@@ -1233,62 +1234,7 @@ class SparkAdapter:
         )
         return dict((entry or {}).get("grants") or {})
 
-    # ----------------------------------------------------- macros / jobs
-    def execute_macro(self, macro_name: str, context: dict, **kwargs):
-        """Invoke a rendered macro by name against a prepared runtime
-        context (reference ``adapter.execute_macro``, consumed by
-        run-operation and materialization internals; the manifest-bound
-        context is built by the engine and passed in, since the adapter
-        itself is manifest-agnostic)."""
-        fn = context.get(macro_name)
-        if fn is None:
-            raise KeyError(f"execute_macro: no macro named '{macro_name}'")
-        return fn(**kwargs)
-
-    def submit_python_job(self, ctx, node):
-        """Run a python model (reference ``adapter.submit_python_job``,
-        ``core/dbt/context/providers.py:1441``). On warehouse adapters
-        this ships code to a remote cluster; here the engine IS the
-        Spark cluster, so it executes in-process."""
-        from sparkt.materializations.python_model import run_python_model
-
-        return run_python_model(ctx, node)
-
-    # ------------------------------------------------------ catalog docs
-    def get_filtered_catalog(
-        self, relations: list[Relation]
-    ) -> list[dict]:
-        """Column-level catalog rows for the given relations only
-        (``core/dbt/task/docs/generate.py:215-366``: catalog queried
-        once, filtered to manifest relations)."""
-        out = []
-        for rel in relations:
-            if not self.relation_exists(rel):
-                continue
-            out.append(
-                {
-                    "schema": rel.schema,
-                    "name": rel.identifier,
-                    "type": rel.type,
-                    "columns": self.get_columns_in_relation(rel),
-                }
-            )
-        return out
-
     # ----------------------------------------------------------- freshness
-    def calculate_freshness(
-        self, relation: Relation, loaded_at_field: str, filter_sql: str | None
-    ) -> float | None:
-        """Seconds since max(loaded_at_field); reference
-        ``core/dbt/task/freshness.py:107-145``."""
-        where = f" WHERE {filter_sql}" if filter_sql else ""
-        row = self.spark.sql(
-            f"SELECT unix_timestamp(current_timestamp()) - "
-            f"unix_timestamp(max({loaded_at_field})) AS age "
-            f"FROM {relation.render()}{where}"
-        ).first()
-        return None if row is None or row["age"] is None else float(row["age"])
-
     def calculate_freshness_from_metadata(
         self, relation: Relation
     ) -> float | None:

@@ -55,7 +55,6 @@ RECORDED_METHODS = (
     "execute",
     "create_schema",
     "drop_schema",
-    "list_schemas",
     "relation_exists",
     "get_relation",
     "list_relations",
@@ -67,12 +66,10 @@ RECORDED_METHODS = (
     "insert_overwrite",
     "drop_relation",
     "rename_relation",
-    "alter_table_add_columns",
     "register_external_table",
     "apply_grants",
     "get_grants",
     "optimize_table",
-    "calculate_freshness",
     "calculate_freshness_from_metadata",
     "calculate_freshness_from_metadata_batch",
     "metadata_max_loaded_at",

@@ -1,8 +1,8 @@
 """Adapter contract surface (SURVEY.md §2.4): model hooks, relation
-listing, batch freshness and filtered catalog the reference's core
-calls (``core/dbt/task/run.py:258-296``,
-``core/dbt/task/freshness.py:107-145``,
-``core/dbt/task/docs/generate.py:215-366``)."""
+listing and batch freshness the reference's core calls
+(``core/dbt/task/run.py:258-296``,
+``core/dbt/task/freshness.py:107-145``), and the table write and
+catalog restore behind them."""
 
 from __future__ import annotations
 
@@ -50,12 +50,9 @@ def test_relations_cache_and_listing(make_project, spark):
     assert {"base", "conf_model"} <= names
 
 
-def test_execute_macro_and_python_job(make_project, spark):
+def test_python_model_runs_in_process(make_project, spark):
     files = {
-        "dbt_project.yml": "name: surf\nmodel-paths: [models]\nmacro-paths: [macros]\n",
-        "macros/answer.sql": (
-            "{% macro answer(n) %}{{ return(n * 2) }}{% endmacro %}"
-        ),
+        "dbt_project.yml": "name: surf\nmodel-paths: [models]\n",
         "models/base.sql": "select 1 as id",
         "models/py_model.py": (
             "def model(dbt, session):\n"
@@ -64,19 +61,10 @@ def test_execute_macro_and_python_job(make_project, spark):
     }
     runner = make_project(files, schema="t_surf4")
     assert runner.run().ok
-    # execute_macro via a prepared runtime context
-    from sparkt.manifest import ParsedNode
-
-    dummy = ParsedNode(
-        unique_id="operation.surf.answer", name="answer",
-        package_name="surf", resource_type="operation", raw_code="",
-    )
-    ctx = runner.compiler.runtime_context(dummy, extra_ctes=[])
-    assert runner.adapter.execute_macro("answer", ctx, n=21) == 42
     assert spark.table("t_surf4.py_model").first()["id"] == 10
 
 
-def test_batch_metadata_freshness_and_catalog(make_project, spark):
+def test_batch_metadata_freshness(make_project, spark):
     runner = _runner(make_project, "t_surf5")
     assert runner.run().ok
     a = runner.adapter
@@ -88,10 +76,6 @@ def test_batch_metadata_freshness_and_catalog(make_project, spark):
     ages = a.calculate_freshness_from_metadata_batch(rels)
     assert ages["t_surf5.base"] is not None and ages["t_surf5.base"] < 3600
     assert ages["t_surf5.ghost"] is None
-    cat = a.get_filtered_catalog(rels)
-    assert {c["name"] for c in cat} == {"base", "conf_model"}
-    base = next(c for c in cat if c["name"] == "base")
-    assert ("id", "int") in base["columns"]
 
 
 def test_csv_json_external_sources(make_project, spark, tmp_path):
@@ -282,15 +266,28 @@ def test_optimize_table_cluster_by_enables_skipping(make_project, spark):
 
 
 def test_optimize_table_partitioned_keeps_layout(make_project, spark):
+    """A zero-padded string partition column stays a string with its
+    padding, after the DataFrame build and after optimize_table."""
     runner = _runner(make_project, "t_opt3")
     a = runner.adapter
     rel = Relation(schema="t_opt3", identifier="part")
-    df = spark.range(0, 5000).withColumn("day", (F.col("id") % 3).cast("string"))
+    df = spark.range(0, 5000).withColumn(
+        "day", F.format_string("%02d", F.col("id") % 3)
+    )
+
+    def check():
+        out = spark.table(rel.render())
+        assert dict(out.dtypes)["day"] == "string"
+        assert sorted(
+            r.day for r in out.select("day").distinct().collect()
+        ) == ["00", "01", "02"]
+        assert out.count() == 5000
+
     a.create_table_as(rel, df=df.repartition(8), partition_by=["day"])
+    check()
     stats = a.optimize_table(rel, target_file_mb=64)
+    check()
     assert stats["files_after"] <= stats["files_before"]
-    out = spark.table(rel.render())
-    assert out.count() == 5000
     assert a.partition_columns(rel) == ["day"]
     import os as _os
 
@@ -319,6 +316,131 @@ def test_partition_columns_from_describe(make_project, spark):
         Relation(schema="t_partcols", identifier="missing")
     ) == []
     assert spark.table(two.render()).count() == 12
+
+
+def _restart(spark, adapter, *rels):
+    """Drop ``rels`` from the session catalog, as a new process would
+    not have them, and restore them with a fresh adapter."""
+    from sparkt.adapter import SparkAdapter
+
+    for rel in rels:
+        spark.sql(f"DROP TABLE {rel.render()}")
+    return SparkAdapter(spark, adapter.warehouse_dir)
+
+
+def _rows(spark, rel):
+    df = spark.table(rel.render())
+    return df.dtypes, sorted(df.collect())
+
+
+def test_restore_keeps_declared_partition_types(make_project, spark):
+    """A restarted process re-creates a partitioned table with its
+    declared column types: a digit-string partition column keeps its
+    leading zero and a boolean one stays boolean. A catalog.json entry
+    without a recorded column list (an older catalog) still restores,
+    its types inferred from the files."""
+    import json
+    import os
+
+    runner = _runner(make_project, "t_restore")
+    a = runner.adapter
+    rel = Relation(schema="t_restore", identifier="zips")
+    a.create_table_as(
+        rel,
+        select_sql="select id, lpad(cast(id % 3 as string), 5, '0') as zip, "
+        "id % 2 = 0 as flag from range(12)",
+        partition_by=["zip", "flag"],
+    )
+    legacy_loc = os.path.join(a.warehouse_dir, "legacy_parquet")
+    spark.range(6).selectExpr("id", "id % 2 as p").write.partitionBy(
+        "p").parquet(legacy_loc)
+    legacy = Relation(schema="t_restore", identifier="legacy")
+    with open(os.path.join(a.warehouse_dir, "catalog.json")) as f:
+        catalog = json.load(f)
+    catalog["t_restore.legacy"] = {
+        "kind": "table", "location": legacy_loc, "partitioned": True,
+        "bucket_by": None, "buckets": None, "sort_by": None,
+        "schema_ddl": None,
+    }
+    with open(os.path.join(a.warehouse_dir, "catalog.json"), "w") as f:
+        json.dump(catalog, f)
+    before = _rows(spark, rel)
+    assert dict(before[0]) == {"id": "bigint", "zip": "string",
+                               "flag": "boolean"}
+    assert {r.zip for r in before[1]} == {"00000", "00001", "00002"}
+
+    _restart(spark, a, rel)
+    assert _rows(spark, rel) == before
+    assert a.partition_columns(rel) == ["zip", "flag"]
+    assert sorted(spark.table(legacy.render()).collect()) == sorted(
+        spark.read.parquet(legacy_loc).collect())
+    assert a.partition_columns(legacy) == ["p"]
+
+
+def test_partition_names_that_need_quoting(make_project, spark):
+    """Partition columns named ``sp ace`` and ``order`` (reserved) work
+    from SQL and from a DataFrame, and after a restore. A DataFrame
+    write leaves no temp view behind, also when it fails."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    runner = _runner(make_project, "t_quote")
+    a = runner.adapter
+    src = "select id, id % 2 as `sp ace`, id % 3 as `order` from range(12)"
+    by_sql = Relation(schema="t_quote", identifier="by_sql")
+    by_df = Relation(schema="t_quote", identifier="by_df")
+    a.create_table_as(by_sql, select_sql=src, partition_by=["sp ace", "order"])
+    a.create_table_as(by_df, df=spark.sql(src), partition_by=["sp ace", "order"])
+    with pytest.raises(AnalysisException):
+        a.create_table_as(
+            Relation(schema="t_quote", identifier="bad"),
+            df=spark.sql(src), partition_by=["missing"],
+        )
+    assert not [
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith("__sparkt_df_")
+    ]
+    before = [_rows(spark, rel) for rel in (by_sql, by_df)]
+    assert before[0] == before[1]
+    assert len(before[0][1]) == 12
+    _restart(spark, a, by_sql, by_df)
+    for rel, rows in zip((by_sql, by_df), before):
+        assert _rows(spark, rel) == rows
+        assert a.partition_columns(rel) == ["sp ace", "order"]
+
+
+def _bucket_spec(spark, rel) -> dict:
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {rel.render()}").collect()
+    keys = ("Num Buckets", "Bucket Columns", "Sort Columns")
+    return {r.col_name: r.data_type for r in rows if r.col_name in keys}
+
+
+def test_bucketed_partitioned_dataframe_write_keeps_bucket_spec(
+    make_project, spark
+):
+    """A DataFrame written with bucket_by, sort_by and partition_by keeps
+    its bucket spec and partition column, after the write and after a
+    restore."""
+    runner = _runner(make_project, "t_bucket")
+    a = runner.adapter
+    rel = Relation(schema="t_bucket", identifier="b")
+    df = spark.range(40).selectExpr(
+        "id", "id % 5 as k", "cast(id % 2 as string) as p"
+    )
+    a.create_table_as(
+        rel, df=df, partition_by=["p"], bucket_by=["k"], buckets=4,
+        sort_by=["id"],
+    )
+    spec = {"Num Buckets": "4", "Bucket Columns": "[`k`]",
+            "Sort Columns": "[`id`]"}
+    assert _bucket_spec(spark, rel) == spec
+    assert a.partition_columns(rel) == ["p"]
+    before = _rows(spark, rel)
+    assert len(before[1]) == 40
+    _restart(spark, a, rel)
+    assert _bucket_spec(spark, rel) == spec
+    assert a.partition_columns(rel) == ["p"]
+    assert _rows(spark, rel) == before
 
 
 def test_partitioned_ctas_keeps_statement_endings(make_project, spark):

@@ -352,8 +352,9 @@ def test_insert_overwrite_schema_change_replaces_partitions(make_project, spark)
 
 
 def test_partitioned_python_model_table_scan(make_project, spark):
-    """DataFrame-path create_table_as with partition_by must RECOVER
-    PARTITIONS (in-memory catalog would otherwise scan 0 rows)."""
+    """DataFrame-path create_table_as with partition_by leaves a table
+    whose partitions the in-memory catalog knows (else it scans 0
+    rows)."""
     files = dict(BASE)
     files["models/py_part.py"] = (
         "def model(dbt, session):\n"

@@ -18,6 +18,15 @@ The scan is by name, not by import binding, so a name that appears in
 any root counts as a use. That over-approximates reachability, which
 is the safe direction for a guard: it can miss dead code, never flag
 live code. Pure AST, no Spark session.
+
+A reached class keeps all its methods alive in that scan, so the
+adapter gets a per-method scan of its own: every ``SparkAdapter``
+method must be referenced from ``sparkt/`` code outside the class, as
+an attribute (``x.method``) or a ``getattr(x, "method")`` string, or
+from a method so reached. The Jinja ``adapter`` object,
+``RuntimeAdapterFacade``, reaches the adapter through such attribute
+calls. A name listed only in ``record.RECORDED_METHODS`` is a string
+and does not count.
 """
 
 from __future__ import annotations
@@ -40,6 +49,15 @@ ALLOWED = {
     "register_plugin": "public decorator that registers an in-process "
                        "plugin",
     "clear_plugins": "public reset of the in-process plugin registry",
+}
+
+# SparkAdapter methods kept on purpose although no sparkt/ code calls them
+ADAPTER_ALLOWED = {
+    "sql_df": "public ad-hoc query API; record/replay serve its result "
+              "set in support bundles",
+    "drop_schema": "public teardown of a schema, its tables and its "
+                   "warehouse directory",
+    "get_grants": "public read side of apply_grants",
 }
 
 # decorators that wrap a definition without registering it anywhere
@@ -143,3 +161,62 @@ def test_allowlist_is_current():
     # the list, so the list never hides new dead code under an old name
     dead = {d.rsplit(".", 1)[-1] for d in unreachable_defs()}
     assert set(ALLOWED) <= dead, sorted(set(ALLOWED) - dead)
+
+
+def _attr_refs(node: ast.AST) -> set[str]:
+    """Attribute names and ``getattr`` string names used under ``node``."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif (
+            isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+            and n.func.id == "getattr" and len(n.args) >= 2
+            and isinstance(n.args[1], ast.Constant)
+            and isinstance(n.args[1].value, str)
+        ):
+            out.add(n.args[1].value)
+    return out
+
+
+def unreached_adapter_methods(repo: str = REPO) -> list[str]:
+    """Non-dunder ``SparkAdapter`` methods that no ``sparkt/`` code
+    outside the class reaches, directly or through reached methods
+    (dunders, which Python calls implicitly, are roots)."""
+    methods: dict[str, ast.AST] = {}
+    roots: set[str] = set()
+    for path in sorted(_py_files(os.path.join(repo, "sparkt"))):
+        for stmt in _parse(path).body:
+            if isinstance(stmt, ast.ClassDef) and stmt.name == "SparkAdapter":
+                for m in stmt.body:
+                    if isinstance(
+                        m, (ast.FunctionDef, ast.AsyncFunctionDef)
+                    ) and not m.name.startswith("__"):
+                        methods[m.name] = m
+                    else:  # dunders run implicitly, class statements on import
+                        roots |= _attr_refs(m)
+            else:
+                roots |= _attr_refs(stmt)
+    reached: set[str] = set()
+    todo = [n for n in roots if n in methods]
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo += [n for n in _attr_refs(methods[name]) if n in methods]
+    return sorted(set(methods) - reached)
+
+
+def test_adapter_methods_reachable_outside_tests():
+    dead = [m for m in unreached_adapter_methods() if m not in ADAPTER_ALLOWED]
+    assert not dead, (
+        "SparkAdapter methods no sparkt/ code calls — wire into a caller "
+        "or delete: " + ", ".join(dead)
+    )
+
+
+def test_adapter_allowlist_is_current():
+    unreached = set(unreached_adapter_methods())
+    assert set(ADAPTER_ALLOWED) <= unreached, sorted(
+        set(ADAPTER_ALLOWED) - unreached
+    )
