@@ -4,7 +4,7 @@
 # single scale factor hides).
 #
 #   make verify      - everything below (the pre-round-end gate)
-#   make test        - pytest suite
+#   make test        - pytest suite (the tier-1 command)
 #   make oracles     - full registry vs DuckDB under driver conf,
 #                      sf0.01 and sf0.1, PLUS an sf0.001 drift sweep
 #                      (no budgets — that SF has no recorded times;
@@ -30,8 +30,10 @@ rotation:
 
 verify: test oracles plan-lint
 
+# the tier-1 command of ROADMAP.md, so `make test` and the gate agree
 test:
-	$(PY) -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 oracles:
 	$(PY) scripts/check_oracles.py --driver-conf /root/testdata/sf0.01

@@ -306,11 +306,23 @@ class SparkAdapter:
                             # A partitioned location needs explicit
                             # partition recovery in the in-memory catalog,
                             # else the restored table scans 0 rows.
+                            # If the recovery fails, drop the table this
+                            # attempt created (its files stay: the table
+                            # is external): left registered, it would
+                            # count as restored next round and scan 0
+                            # rows instead of being retried.
                             if entry.get("partitioned"):
-                                self.spark.sql(
-                                    f"ALTER TABLE {rel.render()} "
-                                    "RECOVER PARTITIONS"
-                                )
+                                try:
+                                    self.spark.sql(
+                                        f"ALTER TABLE {rel.render()} "
+                                        "RECOVER PARTITIONS"
+                                    )
+                                except Exception:
+                                    self.spark.sql(
+                                        f"DROP TABLE IF EXISTS "
+                                        f"{rel.render()}"
+                                    )
+                                    raise
                         elif entry["kind"] == "view":
                             self.create_view_as(rel, entry["sql"])
                         elif entry["kind"] == "clone":
@@ -490,9 +502,10 @@ class SparkAdapter:
         """Annotate the DURABLE catalog entry (catalog.json) for a
         relation — survives process restarts, unlike TBLPROPERTIES on
         the in-memory Spark catalog, which _restore_catalog's CREATE
-        TABLE does not re-apply (second-opinion review #2: the MV
-        on_configuration_change hash must persist across CLI
-        invocations)."""
+        TABLE does not re-apply. Holds the materialized-view definition
+        hash and the microbatch run state. A table rewrite through
+        ``create_table_as`` starts a fresh entry without meta; a
+        missing entry makes this a no-op."""
         key = f"{relation.schema}.{relation.identifier}"
         with self._ddl_lock:
             entry = self._catalog.get(key)

@@ -13,6 +13,11 @@ Strategies (SURVEY.md §2.1):
                           (same final state as merge here)
 - ``insert_overwrite``  → dynamic partition overwrite
                           (``partitionOverwriteMode=dynamic``)
+- ``microbatch``        → one write loop over event-time batch groups,
+                          each replacing its windows idempotently; the
+                          run state (completion flag, unhealed failed
+                          windows) lives in the relation's durable
+                          catalog entry (``_materialize_microbatch``)
 
 Without a transactional table format the merge paths compile to a
 single set-oriented SQL statement — new rows UNION ALL the surviving
@@ -28,6 +33,9 @@ sync_all_columns} (``artifacts/resources/v1/config.py:136-145``).
 
 from __future__ import annotations
 
+import time
+
+from sparkt import events as EV
 from sparkt.exceptions import ExecutionError, SchemaChangeError
 from sparkt.materializations import (
     MatContext,
@@ -37,7 +45,10 @@ from sparkt.materializations import (
     register,
     unique_key_list,
 )
-from sparkt.materializations.python_model import run_python_model
+from sparkt.materializations.python_model import (
+    run_python_model,
+    write_python_model,
+)
 from sparkt.materializations.table import _partition_by
 
 
@@ -152,99 +163,17 @@ def _batch_shift(dt, size, n):
     return dt.replace(year=y, day=day)
 
 
-# table property marking a microbatch target whose last run completed
-# with zero failed batches; absence on an existing table signals a
-# crash/partial run and triggers backfill-gap recovery
-_MB_COMPLETE_PROP = "sparkt.microbatch.complete"
-
-
-def _microbatch_complete(ctx, rel) -> bool:
-    try:
-        _, rows = ctx.adapter.execute(
-            f"SHOW TBLPROPERTIES {rel.render()}", fetch=True
-        )
-        return any(
-            r["key"] == _MB_COMPLETE_PROP and str(r["value"]) == "true"
-            for r in rows
-        )
-    except Exception:
-        # catalogs without property support can't detect partial runs;
-        # assume complete (recovery is best-effort, retry still heals)
-        return True
-
-
-def _set_microbatch_complete(ctx, rel) -> None:
-    try:
-        ctx.adapter.execute(
-            f"ALTER TABLE {rel.render()} SET TBLPROPERTIES "
-            f"('{_MB_COMPLETE_PROP}' = 'true')"
-        )
-    except Exception:
-        pass
-
-
-# table property persisting the UNHEALED failed batch windows of prior
-# partial-success runs (JSON list of [start, end] pairs). run_results is
-# overwritten by every command, so a plain ``run`` after a partial
-# success would otherwise make interior holes permanently undetectable
-# (the crash scan only extends to max(event_time), not interior gaps).
-# Every later incremental run re-attempts these windows until healed;
-# the completion marker is only set once none remain.
-_MB_FAILED_PROP = "sparkt.microbatch.failed"
-
-
-def _get_failed_windows(ctx, rel):
-    import json
-
-    try:
-        _, rows = ctx.adapter.execute(
-            f"SHOW TBLPROPERTIES {rel.render()}", fetch=True
-        )
-        for r in rows:
-            if r["key"] == _MB_FAILED_PROP:
-                return [
-                    (_parse_ts(s), _parse_ts(e))
-                    for s, e in json.loads(str(r["value"]))
-                ]
-    except Exception:
-        pass
-    return []
-
-
-def _set_failed_windows(ctx, rel, windows) -> None:
-    """windows: list of [start_str, end_str] pairs (empty → unset)."""
-    import json
-
-    try:
-        if windows:
-            # JSON uses double quotes and ISO timestamps contain no
-            # single quotes, so the literal embeds safely
-            ctx.adapter.execute(
-                f"ALTER TABLE {rel.render()} SET TBLPROPERTIES "
-                f"('{_MB_FAILED_PROP}' = '{json.dumps(windows)}')"
-            )
-        else:
-            ctx.adapter.execute(
-                f"ALTER TABLE {rel.render()} UNSET TBLPROPERTIES "
-                f"IF EXISTS ('{_MB_FAILED_PROP}')"
-            )
-    except Exception:
-        pass
-
-
-def _clear_microbatch_complete(ctx, rel) -> None:
-    """Drop the completion marker BEFORE the first batch write of a
-    run: on parquet the CTAS swap would drop it incidentally, but on
-    delta/iceberg ``REPLACE WHERE``/``MERGE`` preserve TBLPROPERTIES —
-    without the explicit clear, a crash mid-run would leave last run's
-    'true' marker and crash detection would never fire."""
-    try:
-        ctx.adapter.execute(
-            f"ALTER TABLE {rel.render()} UNSET TBLPROPERTIES IF EXISTS "
-            f"('{_MB_COMPLETE_PROP}')"
-        )
-    except Exception:
-        pass
+# durable run state of a microbatch target, kept in its catalog.json
+# entry (``SparkAdapter.set_relation_meta``) so it outlives the process:
+# the completion flag is true only after a run with zero failed batches
+# (false or absent on an existing table means a crash or partial run and
+# triggers the backfill-gap recovery); the failed list holds the
+# UNHEALED batch windows of prior partial-success runs as [start, end]
+# pairs. run_results is overwritten by every command, so without the
+# list a plain ``run`` after a partial success would leave interior
+# holes undetectable (the crash scan only reaches max(event_time)).
+_MB_COMPLETE = "sparkt.microbatch.complete"
+_MB_FAILED = "sparkt.microbatch.failed"
 
 
 def _target_max_event_time(ctx, rel, et):
@@ -268,26 +197,30 @@ def _materialize_microbatch(ctx, node, rel, exists, full_refresh,
     starts at ``begin``. ``--event-time-start/--event-time-end``
     override the window for backfills.
 
-    100 TB shape: each batch scans only its input slice (partition-
-    pruned when inputs are partitioned on an event_time-derived
-    column); the initial backfill APPENDS batch-by-batch (windows tile
-    disjointly); on delta/iceberg the incremental window replace
-    dispatches to ``INSERT INTO ... REPLACE WHERE`` (file-level
-    replace, no table rewrite); the parquet fallback is the documented
-    atomic-swap rewrite. Rows whose event_time is NULL belong to no
-    batch: they are never inserted by microbatch and always survive
-    the window replace.
+    One write loop over batch groups. By default each batch is its own
+    group. ``concurrent_batches`` groups a first build as ``[first]``,
+    ``[rest]`` (one create, one unioned append) and a parquet
+    incremental run on an existing table as one group (one unioned
+    rewrite); Spark runs a union's branches in parallel inside one job,
+    so no two writers share a committer directory. Per group, the
+    missing table is created (after ``check_contract``); a first build
+    appends (windows tile disjointly); delta/iceberg replace the window
+    with ``INSERT INTO ... REPLACE WHERE`` (file-level, per batch);
+    parquet rewrites through the atomic swap, keeping every target row
+    outside the group's windows. Rows whose event_time is NULL belong
+    to no batch: never inserted, always kept.
 
     Batch-level results (dbt 1.9 semantics): each batch records its own
-    success/failure; a failed batch does NOT abort the node — remaining
-    batches still run, the node finishes as ``partial success`` with a
-    ``batch_results`` entry in run_results, and ``retry`` re-runs ONLY
-    the failed batch windows (idempotent window replace heals the
-    holes). A hard crash mid-backfill is detected on the next run via
-    the ``sparkt.microbatch.complete`` table property (set only after a
-    fully-successful run): recovery extends the incremental window back
-    to the last batch actually present in the target (one
-    ``max(event_time)`` scan — column-stats cheap on parquet).
+    success/failure (a group shares one fate); a failed batch does NOT
+    abort the node — later groups still run, the node finishes as
+    ``partial success`` with a ``batch_results`` entry in run_results,
+    and ``retry`` re-runs ONLY the failed batch windows. The run state
+    (completion flag, unhealed failed windows) lives in catalog.json
+    through the relation meta, read once before any write: a later
+    plain run re-attempts the unhealed windows, and a crash mid-run
+    (flag cleared before the first write) is recovered on the next run
+    by extending the window back to the newest batch present in the
+    target (one ``max(event_time)`` scan).
     """
     cfg = node.config
     et = cfg.get("event_time")
@@ -302,12 +235,13 @@ def _materialize_microbatch(ctx, node, rel, exists, full_refresh,
         )
     lookback = int(cfg.get("lookback", 1))
     first_build = not exists or full_refresh
-    # unhealed failed windows persisted by prior partial-success runs:
-    # read BEFORE any marker churn; re-attempted below until healed
-    prior_failed = (
-        _get_failed_windows(ctx, rel)
-        if exists and not full_refresh else []
+    meta = (
+        ctx.adapter.get_relation_meta(rel)
+        if exists and not full_refresh else {}
     )
+    prior_failed = [
+        (_parse_ts(s), _parse_ts(e)) for s, e in meta.get(_MB_FAILED) or []
+    ]
 
     # ---- compute and VALIDATE the whole window BEFORE any destructive
     # step: a bad 'begin' / unparseable --event-time bound must fail the
@@ -341,7 +275,7 @@ def _materialize_microbatch(ctx, node, rel, exists, full_refresh,
         start = _parse_ts(begin)
     else:
         start = _batch_shift(_batch_floor(end, size), size, -lookback)
-        if not _microbatch_complete(ctx, rel):
+        if not meta.get(_MB_COMPLETE):
             # prior run crashed / left failed batches: resume from the
             # newest batch actually present instead of silently leaving
             # the crash-to-lookback gap unprocessed forever
@@ -403,379 +337,192 @@ def _materialize_microbatch(ctx, node, rel, exists, full_refresh,
     batches.sort()
 
     file_format = str(cfg.get("file_format") or "parquet").lower()
-    compiler = ctx.compiler
-    events = ctx.extras.get("events")
+    label, groups = "", [[b] for b in batches]
+    if cfg.get("concurrent_batches") and len(batches) > 1:
+        if first_build:
+            label = "concurrent backfill: 1 create + 1 unioned append, "
+            groups = [batches[:1], batches[1:]]
+        elif exists and file_format not in ("delta", "iceberg"):
+            label = "concurrent window replace: 1 unioned rewrite, "
+            groups = [batches]
 
-    def _batch_sql(bs, be):
-        """Compile this node for one batch WITHOUT mutating the shared
-        node (concurrent batches would clobber node.compiled_code);
-        batch bounds ride the compiler's thread-local slot."""
+    compiler = ctx.compiler
+
+    def _ts(t):
+        return t.isoformat(sep=" ")
+
+    def _window(bs, be):
+        return (
+            f"{bt(et)} >= TIMESTAMP '{_ts(bs)}' AND "
+            f"{bt(et)} < TIMESTAMP '{_ts(be)}'"
+        )
+
+    def _batch_sql(bs, be, is_incremental):
+        """This node's SQL for one batch, without mutating the shared
+        node; the batch bounds ride the compiler's thread-local slot."""
         from sparkt.compilation import inject_ctes_into_sql
 
-        compiler.event_time_bounds = (bs.isoformat(sep=" "),
-                                      be.isoformat(sep=" "))
+        compiler.event_time_bounds = (_ts(bs), _ts(be))
         try:
             extra: list = []
             compiled = compiler.render(
-                node, extra, None, is_incremental=not first_build
+                node, extra, None, is_incremental=is_incremental
             )
-            sql = inject_ctes_into_sql(compiled, extra)
+            return inject_ctes_into_sql(compiled, extra)
         finally:
             compiler.event_time_bounds = None
-        window = (
-            f"{bt(et)} >= TIMESTAMP '{bs.isoformat(sep=' ')}' AND "
-            f"{bt(et)} < TIMESTAMP '{be.isoformat(sep=' ')}'"
-        )
-        return f"SELECT * FROM ({sql}) __sparkt_mb WHERE {window}"
 
-    # mark the run in-flight: a crash between here and the final
-    # marker re-set must be detectable on the next run even on table
-    # formats whose writes preserve properties
-    if ctx.adapter.relation_exists(rel):
-        _clear_microbatch_complete(ctx, rel)
-
-    def _win(bs, be):
-        return [bs.isoformat(sep=" "), be.isoformat(sep=" ")]
-
-    def _result(succeeded, failed, message):
-        """run-results v6 batch_results shape; status follows dbt 1.9:
-        all green → success, mixed → 'partial success' (downstream
-        nodes still run against the partially-populated table), all
-        red → error. ``retry`` re-runs only ``failed``. Prior-run
-        unhealed windows this run did not heal carry forward (they are
-        injected into ``batches`` above, so normally each already sits
-        in succeeded or failed — this is the defensive net)."""
-        carried = [
-            w for w in prior_failed
-            if not any(bs <= w[0] and be >= w[1] for bs, be in succeeded)
-            and not any(b == w for b, _ in failed)
+    def _write(group):
+        present = ctx.adapter.relation_exists(rel)
+        # a retry against a table whose create batch failed has no
+        # relation yet: compile non-incrementally so is_incremental()
+        # blocks (which reference {{ this }}) don't resolve a missing
+        # table
+        sqls = [
+            _batch_sql(bs, be, not first_build and present)
+            for bs, be in group
         ]
-        failed = failed + [
-            (w, "unhealed window carried from a prior run")
-            for w in carried
-        ]
-        out = {
-            "status": (
-                "success" if not failed
-                else "partial success" if succeeded
-                else "error"
-            ),
-            "message": message,
-            "batch_results": {
-                "successful": [_win(*b) for b in succeeded],
-                "failed": [_win(*b) for b, _ in failed],
-            },
-        }
-        if failed:
-            out["failures"] = len(failed)
-            out["message"] += "; failed batches: " + "; ".join(
-                f"[{_win(*b)[0]} → {_win(*b)[1]}]: {err}"
-                for b, err in failed
-            )
-        if ctx.adapter.relation_exists(rel):
-            # persist the remaining holes (or clear when healed); the
-            # completion marker is set ONLY when no hole remains, so a
-            # later plain run can never mask an interior gap
-            _set_failed_windows(
-                ctx, rel, [_win(*b) for b, _ in failed]
-            )
-            if not failed:
-                _set_microbatch_complete(ctx, rel)
-        node.relation = (
-            rel if ctx.adapter.relation_exists(rel) else None
-        )
-        if node.relation is not None:
-            # reference behavior: persist_docs on every invocation
-            persist_docs(ctx, node, rel)
-        return out
-
-    # concurrent_batches (dbt 1.9): the initial backfill's batches are
-    # provably disjoint (tiling property), so they execute CONCURRENTLY
-    # as branches of ONE unioned insert — Spark schedules the union's
-    # subtrees in parallel within a single job, and unlike N parallel
-    # INSERT INTO statements there is no shared _temporary committer
-    # directory to corrupt (parquet tables do not support concurrent
-    # appends to one path). Incremental window replaces stay serial.
-    concurrent = bool(cfg.get("concurrent_batches")) and first_build
-    if concurrent and len(batches) > 1:
-        import time as _time
-
-        from sparkt import events as EV
-
-        _t0 = _time.time()
-        if events is not None:
-            for bi, (bs, be) in enumerate(batches, start=1):
-                events.fire(EV.MicrobatchExecutionStarted(
-                    unique_id=node.unique_id,
-                    batch_start=bs.isoformat(sep=" "),
-                    batch_end=be.isoformat(sep=" "),
-                    index=bi, total=len(batches),
-                ))
-        first_bs, first_be = batches[0]
-        # contract check runs UNCONDITIONALLY (same as the serial
-        # path's create branch — an existing table from a crashed
-        # backfill must not bypass enforcement)
-        compiler.event_time_bounds = (
-            first_bs.isoformat(sep=" "), first_be.isoformat(sep=" ")
-        )
-        try:
-            compiler.compile_node(node, is_incremental=False)
-        finally:
-            compiler.event_time_bounds = None
-        check_contract(ctx, node)
-        succeeded, failed = [], []
-        try:
-            if not ctx.adapter.relation_exists(rel):
-                ctx.adapter.create_table_as(
-                    rel, select_sql=_batch_sql(first_bs, first_be),
-                    partition_by=partition_by,
-                )
-            succeeded.append(batches[0])
-        except Exception as e:  # noqa: BLE001 — recorded per batch
-            failed.append((batches[0], f"{type(e).__name__}: {e}"))
-        if succeeded:
-            try:
-                cols = ", ".join(
-                    bt(c)
-                    for c, _ in ctx.adapter.get_columns_in_relation(rel)
-                )
-                union_sql = " UNION ALL ".join(
-                    f"SELECT {cols} FROM ({_batch_sql(bs, be)}) __b{i}"
-                    for i, (bs, be) in enumerate(batches[1:])
-                )
-                ctx.adapter.insert_into(rel, f"({cols}) {union_sql}")
-                succeeded.extend(batches[1:])
-            except Exception as e:  # noqa: BLE001
-                # one job = one fate for every unioned batch
-                err = f"{type(e).__name__}: {e}"
-                failed.extend((b, err) for b in batches[1:])
-        else:
-            failed.extend(
-                (b, "skipped: create batch failed") for b in batches[1:]
-            )
-        if events is not None:
-            # batches ran as branches of one Spark job: per-batch wall
-            # time does not exist, each Q044 carries the shared wall
-            elapsed = _time.time() - _t0
-            for bi, (bs, be) in enumerate(batches, start=1):
-                events.fire(EV.MicrobatchExecutionCompleted(
-                    unique_id=node.unique_id,
-                    batch_start=bs.isoformat(sep=" "),
-                    index=bi, total=len(batches),
-                    execution_time=elapsed,
-                    status=(
-                        "success" if (bs, be) in succeeded else "error"
-                    ),
-                ))
-        return _result(
-            succeeded, failed,
-            f"MICROBATCH ({len(batches)} {size} batches, concurrent "
-            f"backfill: 1 create + 1 unioned append, "
-            f"{batches[0][0].isoformat(sep=' ')} → "
-            f"{batches[-1][1].isoformat(sep=' ')})",
-        )
-
-    # concurrent_batches, incremental run (r16, guide §2.6/§1.2): the
-    # serial parquet window replace rewrites the WHOLE table once per
-    # batch (O(n_batches × table size) written); one invocation's
-    # windows are disjoint (tiling property), so a single rewrite whose
-    # source unions every batch-filtered compile and whose keep side
-    # excludes ALL windows is row-identical (pytest-pinned against the
-    # serial path) and writes the table once. Spark schedules the
-    # union's subtrees concurrently inside ONE job — no parallel
-    # INSERTs, so there is no shared _temporary committer directory to
-    # race (the same no-race-by-construction argument as the backfill
-    # branch above). delta/iceberg keep the serial per-window REPLACE
-    # WHERE (file-level replace — no rewrite to collapse; per-batch
-    # results stay finer-grained there). Trade-off mirroring the
-    # backfill branch: one job = one fate for every batch (a failure
-    # marks all batches failed; retry re-runs them all).
-    concurrent_replace = (
-        bool(cfg.get("concurrent_batches"))
-        and not first_build
-        and len(batches) > 1
-        and file_format not in ("delta", "iceberg")
-        and ctx.adapter.relation_exists(rel)
-    )
-    if concurrent_replace:
-        import time as _time
-
-        from sparkt import events as EV
-
-        _t0 = _time.time()
-        if events is not None:
-            for bi, (bs, be) in enumerate(batches, start=1):
-                events.fire(EV.MicrobatchExecutionStarted(
-                    unique_id=node.unique_id,
-                    batch_start=bs.isoformat(sep=" "),
-                    batch_end=be.isoformat(sep=" "),
-                    index=bi, total=len(batches),
-                ))
-        succeeded, failed = [], []
-        try:
+        # the artifact shows the last batch compiled; the contract
+        # check below reads it too
+        node.compiled_code = sqls[-1]
+        cols = "*"
+        if present:
             cols = ", ".join(
-                bt(c)
-                for c, _ in ctx.adapter.get_columns_in_relation(rel)
+                bt(c) for c, _ in ctx.adapter.get_columns_in_relation(rel)
             )
-            union_sql = " UNION ALL ".join(
-                f"SELECT {cols} FROM ({_batch_sql(bs, be)}) __b{i}"
-                for i, (bs, be) in enumerate(batches)
-            )
-            windows = " OR ".join(
-                f"({bt(et)} >= TIMESTAMP '{bs.isoformat(sep=' ')}' AND "
-                f"{bt(et)} < TIMESTAMP '{be.isoformat(sep=' ')}')"
-                for bs, be in batches
-            )
-            # NULL event_time rows live in NO window: keep explicitly
-            # (same contract as the serial path)
-            merged = (
-                f"SELECT {cols} FROM ({union_sql}) __sparkt_src "
-                f"UNION ALL SELECT {cols} FROM {rel.render()} "
-                f"WHERE {bt(et)} IS NULL OR NOT ({windows})"
-            )
-            ctx.adapter.create_table_as(
-                rel, select_sql=merged, partition_by=partition_by
-            )
-            succeeded.extend(batches)
-        except Exception as e:  # noqa: BLE001 — one job, one fate
-            err = f"{type(e).__name__}: {e}"
-            failed.extend((b, err) for b in batches)
-        if events is not None:
-            elapsed = _time.time() - _t0
-            for bi, (bs, be) in enumerate(batches, start=1):
-                events.fire(EV.MicrobatchExecutionCompleted(
-                    unique_id=node.unique_id,
-                    batch_start=bs.isoformat(sep=" "),
-                    index=bi, total=len(batches),
-                    execution_time=elapsed,
-                    status=(
-                        "success" if (bs, be) in succeeded else "error"
-                    ),
-                ))
-        return _result(
-            succeeded, failed,
-            f"MICROBATCH ({len(batches)} {size} batches, concurrent "
-            f"window replace: 1 unioned rewrite, "
-            f"{batches[0][0].isoformat(sep=' ')} → "
-            f"{batches[-1][1].isoformat(sep=' ')})",
+        # The model OUTPUT is constrained to the batch window too —
+        # input-side event_time filters are the efficiency path, but an
+        # input WITHOUT an event_time config would otherwise re-emit its
+        # whole history every batch, duplicating rows on every rerun
+        src = " UNION ALL ".join(
+            f"SELECT {cols} FROM (SELECT * FROM ({sql}) __sparkt_mb "
+            f"WHERE {_window(*b)}) __b{i}"
+            for i, (sql, b) in enumerate(zip(sqls, group))
         )
+        # AND binds tighter than OR: the disjunction of the windows
+        windows = " OR ".join(_window(*b) for b in group)
+        if not present:
+            check_contract(ctx, node)
+            ctx.adapter.create_table_as(
+                rel, select_sql=src, partition_by=partition_by
+            )
+        elif first_build:
+            # initial backfill: windows tile disjointly (pinned by the
+            # tiling property test) and the target holds only prior
+            # batches, so a plain APPEND is exact — a rewrite here would
+            # rewrite the whole table once per group
+            ctx.adapter.insert_into(rel, f"({cols}) {src}")
+        elif file_format in ("delta", "iceberg"):
+            # file-level window replace, no table rewrite
+            ctx.adapter.execute(
+                f"INSERT INTO {rel.render()} REPLACE WHERE {windows} {src}"
+            )
+        else:
+            # NULL event_time rows live in NO window: the keep side
+            # retains them explicitly (NOT(window) is NULL for them,
+            # which a bare WHERE would silently drop — and would diverge
+            # from REPLACE WHERE, which keeps them)
+            ctx.adapter.create_table_as(
+                rel,
+                select_sql=(
+                    f"SELECT {cols} FROM ({src}) __sparkt_src "
+                    f"UNION ALL SELECT {cols} FROM {rel.render()} "
+                    f"WHERE {bt(et)} IS NULL OR NOT ({windows})"
+                ),
+                partition_by=partition_by,
+            )
 
+    # mark the run in-flight BEFORE the first write: a crash before the
+    # end of the run re-sets the flag must be detectable on the next run
+    # (the CTAS swap drops the meta incidentally, but an append or a
+    # REPLACE WHERE keeps it)
+    if exists and not full_refresh:
+        ctx.adapter.set_relation_meta(rel, **{_MB_COMPLETE: False})
+
+    events = ctx.extras.get("events")
     succeeded, failed = [], []
-    try:
-        for bi, (bs, be) in enumerate(batches, start=1):
-            import time as _time
-
-            _t0 = _time.time()
-            if events is not None:
-                from sparkt import events as EV
-
+    index = 0
+    for group in groups:
+        t0 = time.time()
+        if events is not None:
+            for i, (bs, be) in enumerate(group, start=index + 1):
                 events.fire(EV.MicrobatchExecutionStarted(
-                    unique_id=node.unique_id,
-                    batch_start=bs.isoformat(sep=" "),
-                    batch_end=be.isoformat(sep=" "),
-                    index=bi, total=len(batches),
+                    unique_id=node.unique_id, batch_start=_ts(bs),
+                    batch_end=_ts(be), index=i, total=len(batches),
                 ))
-            try:
-                compiler.event_time_bounds = (bs.isoformat(sep=" "),
-                                              be.isoformat(sep=" "))
-                # a retry against a table whose create batch failed has
-                # no relation yet: compile non-incrementally so
-                # is_incremental() blocks (which reference {{ this }})
-                # don't resolve a missing table
-                compiler.compile_node(
-                    node,
-                    is_incremental=(
-                        not first_build
-                        and ctx.adapter.relation_exists(rel)
-                    ),
-                )
-                window = (
-                    f"{bt(et)} >= TIMESTAMP '{bs.isoformat(sep=' ')}' "
-                    f"AND {bt(et)} < TIMESTAMP '{be.isoformat(sep=' ')}'"
-                )
-                # The model OUTPUT is constrained to the batch window
-                # too — input-side event_time filters are the
-                # efficiency path, but an input WITHOUT an event_time
-                # config would otherwise re-emit its whole history
-                # every batch, duplicating rows on every rerun (window
-                # replace removes only in-window rows).
-                src_sql = (
-                    f"SELECT * FROM ({node.compiled_code}) __sparkt_mb "
-                    f"WHERE {window}"
-                )
-                if not ctx.adapter.relation_exists(rel):
-                    check_contract(ctx, node)
-                    ctx.adapter.create_table_as(
-                        rel, select_sql=src_sql,
-                        partition_by=partition_by,
-                    )
-                elif first_build:
-                    # initial backfill: windows tile disjointly (pinned
-                    # by the tiling property test) and the target holds
-                    # only prior batches, so a plain APPEND is exact —
-                    # the union-rewrite here would rewrite the whole
-                    # table once per batch (O(n_batches²) data written)
-                    cols = ", ".join(
-                        bt(c) for c, _ in
-                        ctx.adapter.get_columns_in_relation(rel)
-                    )
-                    ctx.adapter.insert_into(
-                        rel,
-                        f"({cols}) SELECT {cols} "
-                        f"FROM ({src_sql}) __mb_ins",
-                    )
-                elif file_format in ("delta", "iceberg"):
-                    # file-level window replace, no table rewrite
-                    ctx.adapter.execute(
-                        f"INSERT INTO {rel.render()} "
-                        f"REPLACE WHERE {window} {src_sql}"
-                    )
-                else:
-                    cols = ", ".join(
-                        bt(c) for c, _ in
-                        ctx.adapter.get_columns_in_relation(rel)
-                    )
-                    # NULL event_time rows live in NO window: the keep
-                    # side must retain them explicitly (NOT(window) is
-                    # NULL for them, which a bare WHERE would silently
-                    # drop — and would diverge from the REPLACE WHERE
-                    # path, which keeps them)
-                    merged = (
-                        f"WITH __sparkt_src AS ({src_sql}) "
-                        f"SELECT {cols} FROM __sparkt_src UNION ALL "
-                        f"SELECT {cols} FROM {rel.render()} "
-                        f"WHERE {bt(et)} IS NULL OR NOT ({window})"
-                    )
-                    ctx.adapter.create_table_as(
-                        rel, select_sql=merged, partition_by=partition_by
-                    )
-                succeeded.append((bs, be))
-                status = "success"
-            except Exception as e:  # noqa: BLE001 — dbt 1.9: a failed
-                # batch is recorded and the run CONTINUES (later
-                # batches are independent windows; retry heals this one
-                # via the idempotent window replace). The append path
-                # stays exact for the survivors: a batch whose insert
-                # failed contributed no rows to its window.
-                failed.append(((bs, be), f"{type(e).__name__}: {e}"))
-                status = "error"
-            if events is not None:
+        try:
+            _write(group)
+            succeeded.extend(group)
+            status = "success"
+        except Exception as e:  # noqa: BLE001 — dbt 1.9: a failed
+            # batch is recorded and the run CONTINUES (later batches
+            # are independent windows; retry heals this one via the
+            # idempotent window replace). The append path stays exact
+            # for the survivors: a group whose write failed contributed
+            # no rows to its windows.
+            err = f"{type(e).__name__}: {e}"
+            failed.extend((b, err) for b in group)
+            status = "error"
+        if events is not None:
+            # a group's batches run as branches of one Spark job: each
+            # Q044 carries the group's wall time
+            for i, (bs, _) in enumerate(group, start=index + 1):
                 events.fire(EV.MicrobatchExecutionCompleted(
-                    unique_id=node.unique_id,
-                    batch_start=bs.isoformat(sep=" "),
-                    index=bi, total=len(batches),
-                    execution_time=_time.time() - _t0,
-                    status=status,
+                    unique_id=node.unique_id, batch_start=_ts(bs),
+                    index=i, total=len(batches),
+                    execution_time=time.time() - t0, status=status,
                 ))
-    finally:
-        compiler.event_time_bounds = None
-    return _result(
-        succeeded, failed,
-        f"MICROBATCH ({len(batches)} {size} batch"
-        f"{'es' if len(batches) != 1 else ''}, "
-        f"{batches[0][0].isoformat(sep=' ')} → "
-        f"{batches[-1][1].isoformat(sep=' ')})",
-    )
+        index += len(group)
+
+    # run-results v6 batch_results shape; status follows dbt 1.9: all
+    # green → success, mixed → 'partial success' (downstream nodes still
+    # run against the partially-populated table), all red → error.
+    # Prior-run unhealed windows are injected into ``batches`` above, so
+    # each normally sits in succeeded or failed already; any that this
+    # run did not heal carries forward (the defensive net).
+    failed += [
+        (w, "unhealed window carried from a prior run")
+        for w in prior_failed
+        if not any(bs <= w[0] and be >= w[1] for bs, be in succeeded)
+        and not any(b == w for b, _ in failed)
+    ]
+
+    def _win(b):
+        return [_ts(b[0]), _ts(b[1])]
+
+    out = {
+        "status": (
+            "success" if not failed
+            else "partial success" if succeeded
+            else "error"
+        ),
+        "message": (
+            f"MICROBATCH ({len(batches)} {size} batch"
+            f"{'es' if len(batches) != 1 else ''}, {label}"
+            f"{_ts(batches[0][0])} → {_ts(batches[-1][1])})"
+        ),
+        "batch_results": {
+            "successful": [_win(b) for b in succeeded],
+            "failed": [_win(b) for b, _ in failed],
+        },
+    }
+    if failed:
+        out["failures"] = len(failed)
+        out["message"] += "; failed batches: " + "; ".join(
+            f"[{_ts(b[0])} → {_ts(b[1])}]: {err}" for b, err in failed
+        )
+    node.relation = rel if ctx.adapter.relation_exists(rel) else None
+    if node.relation is not None:
+        # persist the remaining holes (or clear them when healed); the
+        # flag is set ONLY when no hole remains, so a later plain run
+        # can never mask an interior gap
+        ctx.adapter.set_relation_meta(rel, **{
+            _MB_COMPLETE: not failed,
+            _MB_FAILED: [_win(b) for b, _ in failed],
+        })
+        # reference behavior: persist_docs on every invocation
+        persist_docs(ctx, node, rel)
+    return out
 
 
 @register("incremental")
@@ -792,26 +539,10 @@ def materialize_incremental(ctx: MatContext, node):
 
     if not exists or full_refresh:
         ctx.compiler.compile_node(node, is_incremental=False)
-        if node.language != "python":
-            check_contract(ctx, node)
         if node.language == "python":
-            if getattr(ctx.adapter, "is_replay", False):
-                # replay (sparkt/record.py): the stand-in reproduces
-                # the recorded CTAS key; no user code, no session
-                from sparkt.record import dataframe_standin
-
-                ctx.adapter.create_table_as(
-                    rel, df=dataframe_standin(), partition_by=partition_by
-                )
-                ctx.adapter.python_model_result(rel.render())
-            else:
-                df = run_python_model(ctx, node)
-                ctx.adapter.create_table_as(
-                    rel, df=df, partition_by=partition_by
-                )
-                if getattr(ctx.adapter, "is_recording", False):
-                    ctx.adapter.python_model_result(rel.render())
+            write_python_model(ctx, node, rel, partition_by=partition_by)
         else:
+            check_contract(ctx, node)
             ctx.adapter.create_table_as(
                 rel, select_sql=node.compiled_code, partition_by=partition_by
             )

@@ -6,12 +6,12 @@ refresh query; ``on_configuration_change ∈ {apply, continue, fail}``
 (``artifacts/resources/v1/config.py:107-109``) is honored by comparing
 the stored definition against the compiled one.
 
-The stored definition lives in TBLPROPERTIES (an md5 of the compiled
-SQL — change detection needs equality only), NOT in process memory:
-CLI invocations are separate processes, and an in-process dict meant
-the fail/continue policies were silently skipped on every run after
-the first (r12 core review #6). Same persistence idiom as the
-microbatch completion markers (``incremental.py``).
+The stored definition (an md5 of the compiled SQL — change detection
+needs equality only) lives in the relation's durable catalog entry
+(``SparkAdapter.set_relation_meta``, catalog.json), NOT in process
+memory or TBLPROPERTIES: CLI invocations are separate processes, and
+the catalog restore re-creates tables without their properties. The
+microbatch run state (``incremental.py``) is kept the same way.
 """
 
 from __future__ import annotations
@@ -24,28 +24,6 @@ from sparkt.materializations import MatContext, register
 _MV_DEF_PROP = "sparkt.mv.definition_md5"
 
 
-def _stored_md5(ctx, rel) -> str | None:
-    # the DURABLE catalog annotation first (catalog.json — survives
-    # process restarts; second-opinion review #2: TBLPROPERTIES on the
-    # in-memory catalog die with the process and the restore does not
-    # re-apply them), then TBLPROPERTIES for real metastores
-    get_meta = getattr(ctx.adapter, "get_relation_meta", None)
-    if get_meta is not None:
-        v = get_meta(rel).get(_MV_DEF_PROP)
-        if v:
-            return str(v)
-    try:
-        _, rows = ctx.adapter.execute(
-            f"SHOW TBLPROPERTIES {rel.render()}", fetch=True
-        )
-        for r in rows:
-            if r["key"] == _MV_DEF_PROP:
-                return str(r["value"])
-    except Exception:
-        pass
-    return None
-
-
 @register("materialized_view")
 def materialize_mv(ctx: MatContext, node):
     ctx.compiler.compile_node(node)
@@ -53,7 +31,7 @@ def materialize_mv(ctx: MatContext, node):
     policy = node.config.get("on_configuration_change", "apply")
     new_md5 = hashlib.md5(node.compiled_code.encode()).hexdigest()
     if ctx.adapter.relation_exists(rel):
-        existing = _stored_md5(ctx, rel)
+        existing = ctx.adapter.get_relation_meta(rel).get(_MV_DEF_PROP)
         if existing is not None and existing != new_md5:
             if policy == "fail":
                 raise ExecutionError(
@@ -63,16 +41,5 @@ def materialize_mv(ctx: MatContext, node):
             if policy == "continue":
                 return "MV UNCHANGED (configuration change ignored)"
     ctx.adapter.create_table_as(rel, select_sql=node.compiled_code)
-    set_meta = getattr(ctx.adapter, "set_relation_meta", None)
-    if set_meta is not None:
-        set_meta(rel, **{_MV_DEF_PROP: new_md5})
-    try:
-        ctx.adapter.execute(
-            f"ALTER TABLE {rel.render()} SET TBLPROPERTIES "
-            f"('{_MV_DEF_PROP}' = '{new_md5}')"
-        )
-    except Exception:
-        # catalogs without property support degrade to apply-always —
-        # the pre-r12 behavior, never worse
-        pass
+    ctx.adapter.set_relation_meta(rel, **{_MV_DEF_PROP: new_md5})
     return "CREATE MATERIALIZED VIEW (table + recorded refresh query)"

@@ -87,3 +87,25 @@ def run_python_model(ctx, node, is_incremental: bool = False) -> Any:
     except ImportError:
         pass
     return result
+
+
+def write_python_model(ctx, node, rel, **write_kwargs) -> dict | None:
+    """CTAS a python model's DataFrame into ``rel``; ``write_kwargs``
+    go to ``create_table_as``. Under replay (sparkt/record.py) no user
+    code runs: a DataFrame stand-in reproduces the recorded CTAS key,
+    and the recorded ``python_model_result`` (output schema + row
+    count) is returned. Otherwise returns None; record mode captures
+    that result for the replay."""
+    if getattr(ctx.adapter, "is_replay", False):
+        from sparkt.record import dataframe_standin
+
+        ctx.adapter.create_table_as(
+            rel, df=dataframe_standin(), **write_kwargs
+        )
+        return ctx.adapter.python_model_result(rel.render())
+    ctx.adapter.create_table_as(
+        rel, df=run_python_model(ctx, node), **write_kwargs
+    )
+    if getattr(ctx.adapter, "is_recording", False):
+        ctx.adapter.python_model_result(rel.render())
+    return None

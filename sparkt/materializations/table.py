@@ -15,7 +15,7 @@ from sparkt.materializations import (
     persist_docs,
     register,
 )
-from sparkt.materializations.python_model import run_python_model
+from sparkt.materializations.python_model import write_python_model
 
 
 def _partition_by(node) -> list[str] | None:
@@ -44,39 +44,16 @@ def _bucket_kwargs(node) -> dict:
 @register("table")
 def materialize_table(ctx: MatContext, node):
     ctx.compiler.compile_node(node)
-    if node.language != "python":
-        check_contract(ctx, node)
+    write = dict(partition_by=_partition_by(node), **_bucket_kwargs(node))
+    replayed = None
     if node.language == "python":
-        if getattr(ctx.adapter, "is_replay", False):
-            # replay (sparkt/record.py): don't re-run user code — the
-            # stand-in reproduces the recorded CTAS key, and the
-            # recorded python_model_result serves the output shape
-            from sparkt.record import dataframe_standin
-
-            ctx.adapter.create_table_as(
-                node.relation, df=dataframe_standin(),
-                partition_by=_partition_by(node), **_bucket_kwargs(node),
-            )
-            info = ctx.adapter.python_model_result(node.relation.render())
-            persist_docs(ctx, node)
-            return (
-                f"CREATE TABLE AS (python, replayed: "
-                f"{info['count']} rows)"
-            )
-        df = run_python_model(ctx, node)
-        ctx.adapter.create_table_as(
-            node.relation, df=df, partition_by=_partition_by(node),
-            **_bucket_kwargs(node),
-        )
-        if getattr(ctx.adapter, "is_recording", False):
-            # capture the materialized output shape for replay
-            ctx.adapter.python_model_result(node.relation.render())
+        replayed = write_python_model(ctx, node, node.relation, **write)
     else:
+        check_contract(ctx, node)
         ctx.adapter.create_table_as(
-            node.relation,
-            select_sql=node.compiled_code,
-            partition_by=_partition_by(node),
-            **_bucket_kwargs(node),
+            node.relation, select_sql=node.compiled_code, **write
         )
     persist_docs(ctx, node)
+    if replayed is not None:
+        return f"CREATE TABLE AS (python, replayed: {replayed['count']} rows)"
     return "CREATE TABLE AS"

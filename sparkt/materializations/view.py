@@ -13,6 +13,7 @@ from sparkt.materializations import (
     persist_docs,
     register,
 )
+from sparkt.materializations.python_model import write_python_model
 
 
 @register("view")
@@ -40,25 +41,13 @@ def _materialize_python_view(ctx: MatContext, node):
     key and the recorded ``python_model_result`` serves the output
     shape, so a bundle replays warehouse-free (sparkt/record.py).
     """
-    if getattr(ctx.adapter, "is_replay", False):
-        from sparkt.record import dataframe_standin
-
-        ctx.adapter.create_table_as(
-            node.relation, df=dataframe_standin()
-        )
-        info = ctx.adapter.python_model_result(node.relation.render())
-        persist_docs(ctx, node)
+    replayed = write_python_model(ctx, node, node.relation)
+    persist_docs(ctx, node)
+    if replayed is not None:
         return (
             f"CREATE VIEW (python, table-backed, replayed: "
-            f"{info['count']} rows)"
+            f"{replayed['count']} rows)"
         )
-    from sparkt.materializations.python_model import run_python_model
-
-    df = run_python_model(ctx, node)
-    ctx.adapter.create_table_as(node.relation, df=df)
-    if getattr(ctx.adapter, "is_recording", False):
-        ctx.adapter.python_model_result(node.relation.render())
-    persist_docs(ctx, node)
     return "CREATE VIEW (python, table-backed)"
 
 

@@ -37,7 +37,10 @@ transformations are not replayable (the bundle holds rows, not a
 plan) and raise ``ReplayMismatch`` naming the limitation.
 View-materialized python models record/replay exactly like the table
 path (they are table-backed by necessity — Spark permanent views
-require SQL text; see ``materializations/view.py``).
+require SQL text; see ``materializations/view.py``). Microbatch and
+materialized-view models replay their run state through the recorded
+``get_relation_meta``/``set_relation_meta`` calls; bundles captured
+before those calls were recorded do not replay those two models.
 """
 
 from __future__ import annotations
@@ -83,6 +86,10 @@ RECORDED_METHODS = (
     # result set (schema + rows) into the bundle; replay serves a
     # session-free ReplayDataFrame over the recorded rows
     "sql_df",
+    # durable catalog annotations: the microbatch run state and the
+    # materialized-view definition hash
+    "get_relation_meta",
+    "set_relation_meta",
 )
 
 

@@ -641,6 +641,55 @@ def test_catalog_replay_out_of_order_views(spark, tmp_path):
     assert "t_replay.stale_v" not in adapter._catalog
 
 
+def test_catalog_replay_retries_table_whose_partition_recovery_fails(
+    spark, tmp_path
+):
+    """A restored partitioned table whose RECOVER PARTITIONS step raises
+    must not stay registered: left in place it counts as restored on
+    the next fixpoint round and scans 0 rows. The entry is retried and
+    finally dropped as stale; the table's files stay on disk."""
+    import os
+
+    from sparkt.adapter import SparkAdapter
+    from sparkt.relation import Relation
+
+    wh = str(tmp_path / "wh")
+    spark.sql("DROP DATABASE IF EXISTS t_recover CASCADE")
+    adapter = SparkAdapter(spark, wh)
+    part = Relation(schema="t_recover", identifier="part_t")
+    flat = Relation(schema="t_recover", identifier="flat_t")
+    adapter.create_table_as(
+        part, select_sql="select 1 as id, 'a' as k union all "
+        "select 2, 'b'", partition_by=["k"],
+    )
+    adapter.create_table_as(flat, select_sql="select 1 as id")
+    location = adapter._catalog["t_recover.part_t"]["location"]
+    spark.sql("DROP TABLE t_recover.part_t")
+    spark.sql("DROP TABLE t_recover.flat_t")
+
+    class NoRecover:
+        """Session whose partition recovery always fails."""
+
+        def __init__(self, inner):
+            self._inner = inner
+
+        def sql(self, text, *args, **kwargs):
+            if "RECOVER PARTITIONS" in text:
+                raise RuntimeError("recover failed")
+            return self._inner.sql(text, *args, **kwargs)
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+    restored = SparkAdapter(NoRecover(spark), wh)
+    assert not restored.relation_exists(part)
+    assert "t_recover.part_t" not in restored._catalog
+    # the unpartitioned entry restored normally
+    assert restored.relation_exists(flat)
+    assert spark.table("t_recover.flat_t").count() == 1
+    assert os.listdir(location)
+
+
 def test_reserved_word_relation_roundtrip(make_project, spark):
     """A model named 'order' (reserved word) creates, is FOUND by the
     quoted catalog probe, and rebuilds on the second run (r12 adapter

@@ -997,28 +997,31 @@ def test_microbatch_continue_on_failure_and_batch_retry(
     assert fixed.retry().results == []
 
 
+def _mb_meta(runner, schema):
+    from sparkt.relation import Relation
+
+    return runner.adapter.get_relation_meta(
+        Relation(schema=schema, identifier="mb_daily")
+    )
+
+
 def test_microbatch_plain_run_heals_persisted_failed_windows(
     make_project, spark
 ):
     """ADVICE r6 (medium): a partial success persists its failed
-    windows on the table (sparkt.microbatch.failed); a later PLAIN run
-    (which overwrites run_results) re-attempts those windows and only
-    sets the completion marker once no hole remains — the interior gap
-    can never become undetectable."""
+    windows in the relation meta (sparkt.microbatch.failed); a later
+    PLAIN run (which overwrites run_results) re-attempts those windows
+    and only sets the completion flag once no hole remains — the
+    interior gap can never become undetectable."""
     runner = make_project(dict(_MB_BREAK_FILES), schema="t_mb_heal")
     assert runner.seed().ok
     res = runner.run(event_time_end="2024-01-05 00:00:00")
     assert not res.ok
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(
-            "show tblproperties t_mb_heal.mb_daily"
-        ).collect()
-    }
-    assert "2024-01-02 00:00:00" in props.get(
-        "sparkt.microbatch.failed", ""
-    )
-    assert props.get("sparkt.microbatch.complete") != "true"
+    meta = _mb_meta(runner, "t_mb_heal")
+    assert meta["sparkt.microbatch.failed"] == [
+        ["2024-01-02 00:00:00", "2024-01-03 00:00:00"]
+    ]
+    assert meta["sparkt.microbatch.complete"] is False
 
     # plain run (NOT retry) whose lookback window [01-04, 01-06) does
     # not cover the day-2 hole; the persisted window must heal anyway
@@ -1033,14 +1036,41 @@ def test_microbatch_plain_run_heals_persisted_failed_windows(
     assert res2.ok, [r.message for r in res2.results]
     ids = {r["id"] for r in spark.table("t_mb_heal.mb_daily").collect()}
     assert ids == {1, 2, 3, 4}
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(
-            "show tblproperties t_mb_heal.mb_daily"
-        ).collect()
-    }
-    assert "sparkt.microbatch.failed" not in props
-    assert props.get("sparkt.microbatch.complete") == "true"
+    meta = _mb_meta(fixed, "t_mb_heal")
+    assert meta["sparkt.microbatch.failed"] == []
+    assert meta["sparkt.microbatch.complete"] is True
+
+
+def test_microbatch_failed_windows_survive_catalog_restore(
+    make_project, spark
+):
+    """The unhealed failed windows outlive the process: after a partial
+    success, every relation of the schema is dropped from the in-memory
+    catalog (a new CLI invocation starts with none), a fresh Runner
+    restores them from catalog.json, and a plain run to 01-06 — whose
+    lookback window does not cover day 2 — still heals the day-2 hole
+    and completes."""
+    runner = make_project(dict(_MB_BREAK_FILES), schema="t_mb_rst")
+    assert runner.seed().ok
+    assert not runner.run(event_time_end="2024-01-05 00:00:00").ok
+
+    for t in spark.catalog.listTables("t_mb_rst"):
+        if not t.isTemporary:
+            spark.sql(f"DROP TABLE t_mb_rst.{t.name}")
+    from sparkt.runner import Runner
+
+    fixed = Runner(
+        runner.project.project_root, spark=spark,
+        cli_vars={"break_day2": False},
+        project_overrides={"schema": "t_mb_rst"},
+    )
+    res = fixed.run(event_time_end="2024-01-06 00:00:00")
+    assert res.ok, [r.message for r in res.results]
+    ids = {r["id"] for r in spark.table("t_mb_rst.mb_daily").collect()}
+    assert ids == {1, 2, 3, 4}
+    meta = _mb_meta(fixed, "t_mb_rst")
+    assert meta["sparkt.microbatch.complete"] is True
+    assert meta["sparkt.microbatch.failed"] == []
 
 
 def test_microbatch_full_refresh_validates_before_drop(
@@ -1096,16 +1126,18 @@ def test_microbatch_empty_window_first_build_creates_table(
 
 def test_microbatch_crash_recovery_resumes_backfill(make_project, spark):
     """ADVICE r5: a crash mid-initial-backfill leaves a partial table;
-    the next incremental run detects the missing completion marker and
+    the next incremental run detects the cleared completion flag and
     extends its window back to the newest batch present instead of
     silently skipping the crash-to-lookback gap."""
     runner = make_project(dict(_MB_FILES), schema="t_mb_crash")
     assert runner.seed().ok
-    # backfill only day 1, then simulate a crash by clearing the marker
+    # backfill only day 1, then simulate a crash by clearing the flag
     assert runner.run(event_time_end="2024-01-02 00:00:00").ok
-    spark.sql(
-        "alter table t_mb_crash.mb_daily unset tblproperties "
-        "('sparkt.microbatch.complete')"
+    from sparkt.relation import Relation
+
+    runner.adapter.set_relation_meta(
+        Relation(schema="t_mb_crash", identifier="mb_daily"),
+        **{"sparkt.microbatch.complete": False},
     )
     # lookback=1 would normally reprocess only [01-04, 01-06); recovery
     # pulls start back to the newest present batch (01-01) so days 2-3
@@ -1114,14 +1146,8 @@ def test_microbatch_crash_recovery_resumes_backfill(make_project, spark):
     assert res.ok, [r.message for r in res.results]
     ids = {r["id"] for r in spark.table("t_mb_crash.mb_daily").collect()}
     assert ids == {1, 2, 3, 4}
-    # marker restored after the fully-green run
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(
-            "show tblproperties t_mb_crash.mb_daily"
-        ).collect()
-    }
-    assert props.get("sparkt.microbatch.complete") == "true"
+    # flag restored after the fully-green run
+    assert _mb_meta(runner, "t_mb_crash")["sparkt.microbatch.complete"]
 
 
 def test_microbatch_concurrent_backfill_fires_batch_events(
@@ -1213,48 +1239,44 @@ def test_microbatch_replace_where_emission_on_delta(
 def test_microbatch_marker_cleared_before_first_write(
     make_project, spark, monkeypatch
 ):
-    """Crash detection on table formats whose writes PRESERVE
-    TBLPROPERTIES (delta/iceberg REPLACE WHERE): the completion marker
-    from the previous green run must be UNSET before the first batch
-    write, or a mid-run crash would leave it standing and recovery
-    would never fire."""
+    """Crash detection on writes that KEEP the catalog entry's meta (an
+    append, delta/iceberg REPLACE WHERE): the completion flag from the
+    previous green run must be cleared before the first batch write, or
+    a mid-run crash would leave it standing and recovery would never
+    fire."""
     runner = make_project(dict(_MB_FILES), schema="t_mb_unset")
     assert runner.seed().ok
     assert runner.run(event_time_end="2024-01-03 00:00:00").ok
-    props = {
-        r["key"]
-        for r in spark.sql(
-            "show tblproperties t_mb_unset.mb_daily"
-        ).collect()
-    }
-    assert "sparkt.microbatch.complete" in props
+    assert _mb_meta(runner, "t_mb_unset")["sparkt.microbatch.complete"]
 
-    stmts = []
-    real = runner.adapter.execute
+    calls = []
+    adapter = runner.adapter
+    real_meta = adapter.set_relation_meta
 
-    def spy(sql, fetch=False):
-        stmts.append(sql)
-        return real(sql, fetch)
+    def meta_spy(rel, **meta):
+        calls.append(("meta", meta))
+        return real_meta(rel, **meta)
 
-    monkeypatch.setattr(runner.adapter, "execute", spy)
+    monkeypatch.setattr(adapter, "set_relation_meta", meta_spy)
+    # every way a batch writes the target: the CTAS swap, an append,
+    # and the REPLACE WHERE statement
+    for name in ("create_table_as", "insert_into", "execute"):
+        def write_spy(target, *args, _real=getattr(adapter, name),
+                      **kwargs):
+            text = target if isinstance(target, str) else target.render()
+            if "mb_daily" in text and not text.startswith("SELECT"):
+                calls.append(("write", text))
+            return _real(target, *args, **kwargs)
+
+        monkeypatch.setattr(adapter, name, write_spy)
     assert runner.run(event_time_end="2024-01-05 00:00:00").ok
-    unset_idx = next(
-        i for i, s in enumerate(stmts) if "UNSET TBLPROPERTIES" in s
+    clear_idx = calls.index(
+        ("meta", {"sparkt.microbatch.complete": False})
     )
-    write_idx = next(
-        (i for i, s in enumerate(stmts)
-         if s.lstrip().upper().startswith(("INSERT", "CREATE"))),
-        len(stmts),
-    )
-    assert unset_idx < write_idx
-    # ...and the marker is back after the fully-green run
-    props = {
-        r["key"]
-        for r in spark.sql(
-            "show tblproperties t_mb_unset.mb_daily"
-        ).collect()
-    }
-    assert "sparkt.microbatch.complete" in props
+    write_idx = next(i for i, c in enumerate(calls) if c[0] == "write")
+    assert clear_idx < write_idx
+    # ...and the flag is back after the fully-green run
+    assert _mb_meta(runner, "t_mb_unset")["sparkt.microbatch.complete"]
 
 
 def test_python_is_incremental_does_not_leak(make_project, spark):

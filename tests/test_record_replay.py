@@ -663,3 +663,52 @@ models:
     )
     res2 = replaying.run()
     assert res2.ok, [str(r.message) for r in res2.results]
+
+
+def test_replay_covers_materialized_view(make_project, spark, tmp_path):
+    """A materialized view records and replays warehouse-free: its
+    stored definition hash is read and written through the recorded
+    relation-meta calls, so replay reproduces both a refresh and the
+    on_configuration_change='fail' error after the definition drifts."""
+    from sparkt.runner import Runner
+
+    def mv_sql(expr):
+        return (
+            "{{ config(materialized='materialized_view', "
+            "on_configuration_change='fail') }}\n"
+            f"select {expr} as n from {{{{ ref('a') }}}}"
+        )
+
+    files = dict(FILES)
+    files["models/mv.sql"] = mv_sql("count(*)")
+    runner = make_project(files, schema="t_rr_mv")
+    assert runner.seed().ok
+    assert runner.run().ok
+
+    def record_then_replay(rec):
+        recording = Runner(
+            runner.project.project_root, spark=spark,
+            project_overrides={"schema": "t_rr_mv"}, record=rec,
+        )
+        res = recording.run(select="mv")
+        replaying = Runner(
+            runner.project.project_root, spark=None,
+            project_overrides={"schema": "t_rr_mv"}, replay=rec,
+        )
+        res2 = replaying.run(select="mv")
+        assert replaying.adapter.remaining() == 0
+        return res.results[0], res2.results[0]
+
+    # unchanged definition: the stored hash matches and the MV refreshes
+    rec, rep = record_then_replay(str(tmp_path / "refresh.jsonl"))
+    assert rec.status == rep.status == "success", rep.message
+    assert rep.message == rec.message
+
+    # drifted definition under 'fail': the replay raises the same error
+    with open(os.path.join(runner.project.project_root,
+                           "models/mv.sql"), "w") as f:
+        f.write(mv_sql("count(*) + 1"))
+    rec, rep = record_then_replay(str(tmp_path / "drift.jsonl"))
+    assert rec.status == rep.status == "error"
+    assert "on_configuration_change" in str(rep.message)
+    assert spark.table("t_rr_mv.mv").first()["n"] == 2

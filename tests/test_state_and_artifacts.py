@@ -780,8 +780,8 @@ models:
 def test_materialized_view_policy_survives_process_restart(
     make_project, spark
 ):
-    """on_configuration_change is honored via a TBLPROPERTIES-stored
-    definition hash, so a FRESH Runner (new process in real use)
+    """on_configuration_change is honored via a definition hash stored
+    in the durable catalog entry, so a FRESH Runner (new process in real use)
     still detects the drift (r12 core review #6 — the old in-process
     dict forgot the definition at exit, silently rebuilding under
     'fail')."""
@@ -800,7 +800,7 @@ def test_materialized_view_policy_survives_process_restart(
     assert runner.run().ok
 
     # change the definition, then run from a brand-new Runner (module
-    # state plays no part — the hash comes from the table itself)
+    # state plays no part — the hash comes from catalog.json)
     with open(os.path.join(runner.project.project_root,
                            "models/mvp.sql"), "w") as f:
         f.write(
