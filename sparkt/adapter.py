@@ -4,20 +4,18 @@ Implements the ~25-method adapter contract the reference's core consumes
 (SURVEY.md §2.4; call sites ``core/dbt/task/run.py:258-296``,
 ``core/dbt/task/runnable.py:345-360``) over one ``SparkSession``.
 
-Storage model (no Delta/Hive available in this build, and by design the
-layer is pluggable):
+Storage model: one table format, parquet.
 
-- Sources and seeds/tables are **external parquet tables** in Spark's
-  session catalog; every (re)write is one ``CREATE TABLE ... LOCATION
-  ... AS SELECT`` into a fresh versioned directory
+- Seeds, tables, incrementals and snapshots are **external parquet
+  tables** in Spark's session catalog, whatever ``file_format`` a model
+  sets; every (re)write is one ``CREATE TABLE ... LOCATION ... AS
+  SELECT`` into a fresh versioned directory
   ``<warehouse>/<schema>/<identifier>/v<N>`` (a DataFrame is selected
   from a temp view), and the catalog entry is swapped via tmp-table +
-  DROP + RENAME. This gives atomic
-  replace-while-reading semantics without table formats — the analogue
-  of the reference's transactional CTAS (SURVEY.md §7 "Mutation without
-  transactions"). On a production cluster the same interface binds to
-  Delta/Iceberg (`CREATE OR REPLACE TABLE`, `MERGE INTO`) — the
-  materializations only talk to this façade.
+  DROP + RENAME. This gives atomic replace-while-reading semantics
+  without a table format — the analogue of the reference's
+  transactional CTAS (SURVEY.md §7 "Mutation without transactions").
+  Sources read csv, json or parquet (``register_external_table``).
 - Views are catalog views (`CREATE OR REPLACE VIEW`).
 - ``catalog.json`` records every relation, so a new process re-creates
   the session catalog. A partitioned or bucketed table keeps its column
@@ -253,6 +251,16 @@ class SparkAdapter:
             return
         with open(self._catalog_path) as f:
             self._catalog = json.load(f)
+        # only these kinds are recorded; an entry of any other kind (an
+        # older version's delta clone) has no replay and is stale
+        stale = [
+            k for k, e in self._catalog.items()
+            if e.get("kind") not in ("external", "table", "view")
+        ]
+        if stale:
+            for key in stale:
+                del self._catalog[key]
+            self._save_catalog()
         self._restoring = True
         try:
             # FIXPOINT replay: catalog.json's insertion order is NOT a
@@ -325,17 +333,6 @@ class SparkAdapter:
                                     raise
                         elif entry["kind"] == "view":
                             self.create_view_as(rel, entry["sql"])
-                        elif entry["kind"] == "clone":
-                            # re-emit the zero-copy clone (delta-only,
-                            # like the original statement; on a
-                            # non-delta session this fails and the
-                            # entry is dropped as stale, explicitly)
-                            self.create_schema(schema)
-                            self.execute(
-                                f"CREATE OR REPLACE TABLE "
-                                f"{rel.render()} SHALLOW CLONE "
-                                f"{entry['cloned_from']}"
-                            )
                     except Exception:  # noqa: BLE001 — retry next round
                         failed.append((key, entry))
                 if len(failed) == len(pending):  # no progress: stale
@@ -504,8 +501,9 @@ class SparkAdapter:
         the in-memory Spark catalog, which _restore_catalog's CREATE
         TABLE does not re-apply. Holds the materialized-view definition
         hash and the microbatch run state. A table rewrite through
-        ``create_table_as`` starts a fresh entry without meta; a
-        missing entry makes this a no-op."""
+        ``create_table_as`` carries the meta into its new entry;
+        ``drop_relation`` clears it. A missing entry makes this a
+        no-op."""
         key = f"{relation.schema}.{relation.identifier}"
         with self._ddl_lock:
             entry = self._catalog.get(key)
@@ -851,6 +849,12 @@ class SparkAdapter:
             if partition_by or bucket_by else None
         )
         with self._ddl_lock:
+            # the replaced entry's meta (a microbatch's run state, an
+            # MV's definition hash) outlives the rewrite; drop_relation
+            # alone clears it
+            meta = self._catalog.get(
+                f"{relation.schema}.{relation.identifier}", {}
+            ).get("meta")
             existing = self.get_relation(relation.schema, relation.identifier)
             if existing is not None:
                 self.drop_relation(existing)
@@ -865,6 +869,7 @@ class SparkAdapter:
                 buckets=int(buckets or 8) if bucket_by else None,
                 sort_by=sort_by or None,
                 schema_ddl=schema_ddl,
+                **({"meta": meta} if meta else {}),
             )
         self._gc_old_versions(relation, keep=loc)
 
@@ -938,117 +943,6 @@ class SparkAdapter:
                         for f in df.schema.fields],
             "sample": [r.asDict() for r in df.limit(10).collect()],
         }
-
-    def shallow_clone(self, target: Relation, source_name: str) -> None:
-        """Delta zero-copy clone (reference ``core/dbt/task/clone.py:18-126``
-        + public dbt-spark ``spark__can_clone_table``: delta only):
-        ``CREATE OR REPLACE TABLE ... SHALLOW CLONE`` copies table
-        metadata, not data files — the right clone at 100 TB. This
-        sandbox has no delta runtime, so execution is cluster-only; the
-        emitted statement is pinned by a golden test and plain-parquet
-        clones fall back to CTAS in ``Runner.clone``."""
-        self.execute(
-            f"CREATE OR REPLACE TABLE {target.render()} "
-            f"SHALLOW CLONE {source_name}"
-        )
-        # kind='clone', not 'table' (r12 adapter review #7): a clone
-        # has no parquet LOCATION of its own, and the 'table' restore
-        # branch KeyError'd on entry['location'] — the fixpoint loop
-        # then silently dropped the clone (and its grants) from the
-        # catalog on every restart
-        with self._ddl_lock:
-            self._record(target, kind="clone", cloned_from=source_name)
-
-    @staticmethod
-    def merge_into_sql(
-        target: Relation,
-        source_sql: str,
-        unique_key: list[str],
-        columns: list[str],
-        predicates: list[str] | None = None,
-        update_columns: list[str] | None = None,
-        exclude_columns: list[str] | None = None,
-    ) -> str:
-        """The ACID-table-format merge statement: ``MERGE INTO`` as
-        Delta Lake / Apache Iceberg execute it, mirroring the public
-        dbt-spark ``spark__get_merge_sql`` macro surface —
-        ``DBT_INTERNAL_DEST``/``DBT_INTERNAL_SOURCE`` aliases, ON over
-        the unique key plus optional ``incremental_predicates``,
-        ``UPDATE SET *`` (or the ``merge_update_columns`` /
-        ``merge_exclude_columns`` explicit list), ``INSERT *``.
-
-        Dispatched by the incremental 'merge' strategy when
-        ``file_format`` is delta/iceberg (this sandbox has neither
-        runtime, so the statement is emitted but a real cluster is
-        where it executes; the versioned-path rewrite in
-        ``materialize_incremental`` is the plain-parquet substitute —
-        see adapter.py:7-17). At 100 TB MERGE is the right path: the
-        table format prunes by file stats and rewrites only matched
-        files instead of the whole relation. ``execute`` hands the
-        statement to ``spark.sql``, whose parser rejects a malformed
-        one before anything is planned or written.
-        """
-        on = " AND ".join(
-            f"DBT_INTERNAL_DEST.`{k}` = DBT_INTERNAL_SOURCE.`{k}`"
-            for k in unique_key
-        )
-        # the newline ends a trailing ``--`` comment inside ``p`` before
-        # the closing paren
-        for p in predicates or []:
-            on = f"({on}) AND ({p}\n)"
-        if update_columns:
-            upd_cols = list(update_columns)
-        elif exclude_columns:
-            upd_cols = [c for c in columns if c not in set(exclude_columns)]
-        else:
-            upd_cols = None
-        update_set = (
-            "*"
-            if upd_cols is None
-            else ", ".join(
-                f"DBT_INTERNAL_DEST.`{c}` = DBT_INTERNAL_SOURCE.`{c}`"
-                for c in upd_cols
-            )
-        )
-        return (
-            f"MERGE INTO {target.render()} AS DBT_INTERNAL_DEST\n"
-            f"USING ({source_sql}) AS DBT_INTERNAL_SOURCE\n"
-            f"ON {on}\n"
-            f"WHEN MATCHED THEN UPDATE SET {update_set}\n"
-            f"WHEN NOT MATCHED THEN INSERT *"
-        )
-
-    @staticmethod
-    def snapshot_merge_sql(
-        target: Relation, staging_sql: str, insert_cols: list[str]
-    ) -> str:
-        """SCD-2 snapshot merge for ACID table formats, mirroring the
-        reference's ``default__snapshot_merge_sql`` (public
-        dbt-adapters project; driver at ``core/dbt/task/snapshot.py``):
-        the staging select tags each row with ``dbt_change_type`` ∈
-        {insert, update, delete}; matched update/delete rows close the
-        current version (``dbt_valid_to``), unmatched insert rows add
-        the new version. Dispatched when ``file_format`` is
-        delta/iceberg — only changed files rewrite, vs the whole-
-        relation versioned-path rewrite used on plain parquet."""
-        cols = ", ".join(f"`{c}`" for c in insert_cols)
-        vals = ", ".join(
-            f"DBT_INTERNAL_SOURCE.`{c}`" for c in insert_cols
-        )
-        return (
-            f"MERGE INTO {target.render()} AS DBT_INTERNAL_DEST\n"
-            f"USING ({staging_sql}) AS DBT_INTERNAL_SOURCE\n"
-            "ON DBT_INTERNAL_SOURCE.dbt_scd_id = "
-            "DBT_INTERNAL_DEST.dbt_scd_id\n"
-            "WHEN MATCHED AND DBT_INTERNAL_DEST.dbt_valid_to IS NULL\n"
-            " AND DBT_INTERNAL_SOURCE.dbt_change_type IN "
-            "('update', 'delete')\n"
-            "  THEN UPDATE SET dbt_valid_to = "
-            "DBT_INTERNAL_SOURCE.dbt_valid_to\n"
-            "WHEN NOT MATCHED AND DBT_INTERNAL_SOURCE.dbt_change_type = "
-            "'insert'\n"
-            f"  THEN INSERT ({cols}) VALUES ({vals})"
-        )
 
     def _location_stats(self, location: str) -> tuple[int, int]:
         n_files = total = 0

@@ -19,13 +19,13 @@ Strategies (SURVEY.md §2.1):
                           windows) lives in the relation's durable
                           catalog entry (``_materialize_microbatch``)
 
-Without a transactional table format the merge paths compile to a
-single set-oriented SQL statement — new rows UNION ALL the surviving
-target rows via LEFT ANTI JOIN — materialized through the adapter's
-atomic CTAS swap. On Delta/Iceberg the same strategy dispatch emits
-``MERGE INTO``; at 100 TB the anti-join shuffles on the unique key and
-AQE handles skew, while ``insert_overwrite`` + ``partition_by`` is the
-recommended no-rewrite path.
+Every target is a parquet table (a model's ``file_format`` is not
+read), so the merge paths compile to a single set-oriented SQL
+statement — new rows UNION ALL the surviving target rows via LEFT ANTI
+JOIN — materialized through the adapter's atomic CTAS swap. At 100 TB
+the anti-join shuffles on the unique key and AQE handles skew, while
+``insert_overwrite`` + ``partition_by`` is the recommended no-rewrite
+path.
 
 ``on_schema_change`` ∈ {ignore, fail, append_new_columns,
 sync_all_columns} (``artifacts/resources/v1/config.py:136-145``).
@@ -199,16 +199,14 @@ def _materialize_microbatch(ctx, node, rel, exists, full_refresh,
 
     One write loop over batch groups. By default each batch is its own
     group. ``concurrent_batches`` groups a first build as ``[first]``,
-    ``[rest]`` (one create, one unioned append) and a parquet
-    incremental run on an existing table as one group (one unioned
-    rewrite); Spark runs a union's branches in parallel inside one job,
-    so no two writers share a committer directory. Per group, the
-    missing table is created (after ``check_contract``); a first build
-    appends (windows tile disjointly); delta/iceberg replace the window
-    with ``INSERT INTO ... REPLACE WHERE`` (file-level, per batch);
-    parquet rewrites through the atomic swap, keeping every target row
-    outside the group's windows. Rows whose event_time is NULL belong
-    to no batch: never inserted, always kept.
+    ``[rest]`` (one create, one unioned append) and an incremental run
+    on an existing table as one group (one unioned rewrite); Spark runs
+    a union's branches in parallel inside one job, so no two writers
+    share a committer directory. Per group, the missing table is
+    created (after ``check_contract``); a first build appends (windows
+    tile disjointly); a later run rewrites through the atomic swap,
+    keeping every target row outside the group's windows. Rows whose
+    event_time is NULL belong to no batch: never inserted, always kept.
 
     Batch-level results (dbt 1.9 semantics): each batch records its own
     success/failure (a group shares one fate); a failed batch does NOT
@@ -336,13 +334,12 @@ def _materialize_microbatch(ctx, node, rel, exists, full_refresh,
             batches.append((fs, fe))
     batches.sort()
 
-    file_format = str(cfg.get("file_format") or "parquet").lower()
     label, groups = "", [[b] for b in batches]
     if cfg.get("concurrent_batches") and len(batches) > 1:
         if first_build:
             label = "concurrent backfill: 1 create + 1 unioned append, "
             groups = [batches[:1], batches[1:]]
-        elif exists and file_format not in ("delta", "iceberg"):
+        elif exists:
             label = "concurrent window replace: 1 unioned rewrite, "
             groups = [batches]
 
@@ -412,16 +409,10 @@ def _materialize_microbatch(ctx, node, rel, exists, full_refresh,
             # batches, so a plain APPEND is exact — a rewrite here would
             # rewrite the whole table once per group
             ctx.adapter.insert_into(rel, f"({cols}) {src}")
-        elif file_format in ("delta", "iceberg"):
-            # file-level window replace, no table rewrite
-            ctx.adapter.execute(
-                f"INSERT INTO {rel.render()} REPLACE WHERE {windows} {src}"
-            )
         else:
             # NULL event_time rows live in NO window: the keep side
             # retains them explicitly (NOT(window) is NULL for them,
-            # which a bare WHERE would silently drop — and would diverge
-            # from REPLACE WHERE, which keeps them)
+            # which a bare WHERE would silently drop)
             ctx.adapter.create_table_as(
                 rel,
                 select_sql=(
@@ -434,8 +425,8 @@ def _materialize_microbatch(ctx, node, rel, exists, full_refresh,
 
     # mark the run in-flight BEFORE the first write: a crash before the
     # end of the run re-sets the flag must be detectable on the next run
-    # (the CTAS swap drops the meta incidentally, but an append or a
-    # REPLACE WHERE keeps it)
+    # (every write keeps the meta: an append leaves the catalog entry
+    # alone and the CTAS swap carries it into the new entry)
     if exists and not full_refresh:
         ctx.adapter.set_relation_meta(rel, **{_MB_COMPLETE: False})
 
@@ -620,31 +611,6 @@ def materialize_incremental(ctx: MatContext, node):
     if strategy in ("merge", "delete+insert") and not uk:
         raise ExecutionError(f"{node.unique_id}: {strategy} requires unique_key")
 
-    # ACID-format dispatch: on delta/iceberg the merge strategy submits
-    # a real MERGE INTO (file-stat-pruned, rewrites only matched files)
-    # instead of the whole-relation versioned-path rewrite below
-    file_format = str(node.config.get("file_format") or "parquet").lower()
-    if (
-        strategy == "merge"
-        and file_format in ("delta", "iceberg")
-        and not schema_rewrite
-    ):
-        preds = node.config.get("incremental_predicates") or []
-        if isinstance(preds, str):
-            preds = [preds]
-        merge_sql = ctx.adapter.merge_into_sql(
-            rel,
-            src_sql,
-            uk,
-            [name for name, _, _ in final_cols],
-            predicates=preds,
-            update_columns=node.config.get("merge_update_columns"),
-            exclude_columns=node.config.get("merge_exclude_columns"),
-        )
-        ctx.adapter.execute(merge_sql)
-        persist_docs(ctx, node, rel)
-        return f"MERGE INTO ({file_format})"
-
     # rewrite path: one set-oriented statement through the atomic swap.
     # The source is MATERIALIZED ONCE into a staging table first (the
     # reference's __dbt_tmp contract — dbt's default incremental
@@ -727,12 +693,9 @@ def _incremental_rewrite(
         # merge_update_columns / merge_exclude_columns (reference
         # tests/functional/adapter/incremental/test_incremental_
         # merge_exclude_columns.py): matched rows update ONLY the
-        # configured columns, keeping target values elsewhere. The
-        # delta MERGE path already honors these; the rewrite path
-        # silently ignored them (r15 review) — matched rows were
-        # fully replaced. Three-branch rewrite: unmatched source
-        # inserts, matched rows mix s/t per column, unmatched target
-        # keeps.
+        # configured columns, keeping target values elsewhere.
+        # Three-branch rewrite: unmatched source inserts, matched rows
+        # mix s/t per column, unmatched target keeps.
         upd_cfg = node.config.get("merge_update_columns")
         exc_cfg = node.config.get("merge_exclude_columns")
         if strategy == "merge" and (upd_cfg or exc_cfg):

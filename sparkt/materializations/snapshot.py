@@ -14,11 +14,12 @@ validity-interval checks):
 - one batch timestamp per run, captured at runner start, not per-row
   (SURVEY.md §7 "Snapshot timestamp semantics").
 
-The Delta form of this is a MERGE (SURVEY.md §2.1); without a
-transactional format it compiles to one set-oriented statement —
-close out changed current rows + append new versions — through the
-adapter's atomic CTAS swap. At scale the joins shuffle on the unique
-key; snapshot tables should be partitioned on a stable key prefix.
+Every snapshot table is parquet (a ``file_format`` config is not
+read), so a run compiles to one set-oriented statement — close out
+changed current rows + append new versions — through the adapter's
+atomic CTAS swap (SURVEY.md §2.1 names a MERGE as the Delta form). At
+scale the joins shuffle on the unique key; snapshot tables should be
+partitioned on a stable key prefix.
 """
 
 from __future__ import annotations
@@ -65,7 +66,6 @@ def materialize_snapshot(ctx: MatContext, node):
         meta["dbt_valid_from"], meta["dbt_valid_to"],
         meta["dbt_is_deleted"],
     )
-    custom_meta = any(k != v for k, v in meta.items())
     # dbt_valid_to_current (dbt 1.9): a sentinel "current row" value
     # (e.g. date'9999-12-31') instead of NULL — legacy warehouse
     # conventions and BETWEEN-friendly range joins
@@ -226,76 +226,6 @@ __deleted AS (
         if invalidate
         else ""
     )
-    # ACID-format dispatch: delta/iceberg snapshots run the reference's
-    # change-type-tagged staging select + MERGE on dbt_scd_id
-    # (adapter.snapshot_merge_sql) instead of the whole-table rewrite
-    file_format = str(cfg.get("file_format") or "parquet").lower()
-    if file_format in ("delta", "iceberg") and (custom_meta or vt_cur):
-        raise ExecutionError(
-            f"{node.unique_id}: snapshot_meta_column_names / "
-            "dbt_valid_to_current are not yet wired into the "
-            "delta/iceberg MERGE dispatch — use the default "
-            "file_format or default meta settings"
-        )
-    if file_format in ("delta", "iceberg") and new_record:
-        raise ExecutionError(
-            f"{node.unique_id}: hard_deletes='new_record' is not yet "
-            "wired into the delta/iceberg MERGE dispatch — use the "
-            "default file_format or hard_deletes='invalidate'"
-        )
-    if file_format in ("delta", "iceberg") and (
-        set(src_types) != set(tgt_types)
-    ):
-        raise ExecutionError(
-            f"{node.unique_id}: the snapshot source schema changed "
-            f"(added {sorted(set(src_types) - set(tgt_types))}, "
-            f"removed {sorted(set(tgt_types) - set(src_types))}) — "
-            "schema evolution is not wired into the delta/iceberg "
-            "MERGE dispatch; ALTER the target first or use the "
-            "default file_format (whose rewrite evolves the schema)"
-        )
-    if file_format in ("delta", "iceberg"):
-        uk_eq_chc = " AND ".join(f"ch.{bt(k)} <=> c.{bt(k)}" for k in uk)
-        ch_data = ", ".join(f"ch.{bt(c)}" for c in data_cols)
-        c_data = ", ".join(f"c.{bt(c)}" for c in data_cols)
-        deletes_branch = (
-            f"""
-UNION ALL
-SELECT {c_data},
-       c.dbt_scd_id, c.dbt_updated_at, c.dbt_valid_from,
-       {ts_literal} AS dbt_valid_to, 'delete' AS dbt_change_type
-FROM __cur c LEFT ANTI JOIN __src s ON {uk_eq_sc}"""
-            if invalidate
-            else ""
-        )
-        staging = f"""WITH __src AS ({src_sql}),
-__cur AS (SELECT * FROM {rel.render()} WHERE dbt_valid_to IS NULL),
-__changed AS (
-    SELECT {s_cols}, {upd('s')} AS __new_ts
-    FROM __src s JOIN __cur c ON {uk_eq_sc}
-    WHERE {changed}
-),
-__new_keys AS (
-    SELECT {s_cols}, {upd('s')} AS __new_ts
-    FROM __src s LEFT ANTI JOIN __cur c ON {uk_eq_sc}
-)
-SELECT {s_cols},
-       {_scd_id_expr(uk, 's.__new_ts', 's')} AS dbt_scd_id,
-       s.__new_ts AS dbt_updated_at,
-       s.__new_ts AS dbt_valid_from,
-       CAST(NULL AS timestamp) AS dbt_valid_to,
-       'insert' AS dbt_change_type
-FROM (SELECT * FROM __changed UNION ALL SELECT * FROM __new_keys) s
-UNION ALL
-SELECT {ch_data}, c.dbt_scd_id, c.dbt_updated_at, c.dbt_valid_from,
-       ch.__new_ts AS dbt_valid_to, 'update' AS dbt_change_type
-FROM __changed ch JOIN __cur c ON {uk_eq_chc}{deletes_branch}"""
-        merge_sql = ctx.adapter.snapshot_merge_sql(
-            rel, staging, data_cols + META_COLS
-        )
-        ctx.adapter.execute(merge_sql)
-        return f"SNAPSHOT (MERGE {file_format})"
-
     if new_record:
         # __cur is target-shaped: columns new in the source take NULL
         c_data = ", ".join(

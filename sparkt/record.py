@@ -461,28 +461,6 @@ class ReplayAdapter:
 
         return quote_identifier(identifier)
 
-    # pure SQL-string builders (no warehouse access) delegate to the
-    # real adapter's staticmethods — a bundle recorded on a delta/
-    # iceberg warehouse replays its MERGE INTO paths through these
-    @staticmethod
-    def merge_into_sql(*args, **kwargs) -> str:
-        from sparkt.adapter import SparkAdapter
-
-        return SparkAdapter.merge_into_sql(*args, **kwargs)
-
-    @staticmethod
-    def snapshot_merge_sql(*args, **kwargs) -> str:
-        from sparkt.adapter import SparkAdapter
-
-        return SparkAdapter.snapshot_merge_sql(*args, **kwargs)
-
-    def shallow_clone(self, target, source_name: str) -> None:
-        # the emitted statement is a recorded execute; no catalog here
-        self.execute(
-            f"CREATE OR REPLACE TABLE {target.render()} "
-            f"SHALLOW CLONE {source_name}"
-        )
-
     def set_query_header(self, comment, append: bool = False) -> None:
         pass
 

@@ -912,8 +912,8 @@ class Runner:
 
     def clone(self, state: str, select: str | None = None) -> list[str]:
         """Copy relations recorded in a --state manifest into this
-        target schema (``core/dbt/task/clone.py:18-126``; CTAS instead
-        of Delta SHALLOW CLONE on plain parquet)."""
+        target schema (``core/dbt/task/clone.py:18-126``): a CTAS copy,
+        since every managed table is parquet (no zero-copy clone)."""
         from sparkt.state import StateManifest
 
         sm = StateManifest(state)
@@ -930,17 +930,9 @@ class Runner:
             target_rel = self.compiler.relation_for(node)
             if src_name == target_rel.render():
                 continue
-            file_format = str(
-                (node.config or {}).get("file_format") or "parquet"
-            ).lower()
-            if file_format == "delta":
-                # zero-copy metadata clone (dbt-spark can_clone_table:
-                # delta only; iceberg/parquet take the CTAS path)
-                self.adapter.shallow_clone(target_rel, src_name)
-            else:
-                self.adapter.create_table_as(
-                    target_rel, select_sql=f"SELECT * FROM {src_name}"
-                )
+            self.adapter.create_table_as(
+                target_rel, select_sql=f"SELECT * FROM {src_name}"
+            )
             cloned.append(target_rel.render())
         return cloned
 

@@ -104,7 +104,7 @@ def stream_upsert(
     and the replayed micro-batch simply re-merges (the merge is
     idempotent). Read the state with :func:`upsert_current_path`.
     Stale version dirs are swept on the next batch. On Delta this
-    foreachBatch body becomes one ``MERGE INTO``; at scale the windows
+    foreachBatch body would be one merge statement; at scale the windows
     shuffle on the unique key exactly like the batch merge's anti-join,
     and the checkpoint makes ingestion exactly-once."""
     import shutil

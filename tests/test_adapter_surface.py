@@ -641,6 +641,31 @@ def test_catalog_replay_out_of_order_views(spark, tmp_path):
     assert "t_replay.stale_v" not in adapter._catalog
 
 
+def test_catalog_replay_drops_entries_of_unknown_kind(spark, tmp_path):
+    """An entry of a kind the restore cannot replay (a delta clone
+    recorded by an older version) is stale: it leaves the in-memory
+    catalog and catalog.json, and the entries around it restore."""
+    import json
+    import os
+
+    from sparkt.adapter import SparkAdapter
+
+    wh = str(tmp_path / "wh")
+    os.makedirs(wh)
+    spark.sql("DROP DATABASE IF EXISTS t_kinds CASCADE")
+    path = os.path.join(wh, "catalog.json")
+    with open(path, "w") as f:
+        json.dump({
+            "t_kinds.cloned": {"kind": "clone", "cloned_from": "prod.t"},
+            "t_kinds.v": {"kind": "view", "sql": "select 1 as id"},
+        }, f)
+    adapter = SparkAdapter(spark, wh)
+    assert list(adapter._catalog) == ["t_kinds.v"]
+    with open(path) as f:
+        assert list(json.load(f)) == ["t_kinds.v"]
+    assert spark.table("t_kinds.v").count() == 1
+
+
 def test_catalog_replay_retries_table_whose_partition_recovery_fails(
     spark, tmp_path
 ):

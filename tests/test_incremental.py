@@ -444,74 +444,6 @@ def test_incremental_predicates_dest_alias_merge(make_project, spark):
         assert rows == {(1, "a"), (1, "A"), (2, "B")}, name
 
 
-def test_merge_into_sql_emission(spark):
-    """ACID-format merge statement generation (delta/iceberg dispatch):
-    aliases, key conjunction, predicates, update-column variants match
-    the public dbt-spark spark__get_merge_sql surface."""
-    from sparkt.adapter import SparkAdapter
-    from sparkt.relation import Relation
-
-    rel = Relation(schema="s", identifier="t")
-    sql = SparkAdapter.merge_into_sql(
-        rel, "select * from src", ["id"], ["id", "v", "u"]
-    )
-    assert sql == (
-        "MERGE INTO s.t AS DBT_INTERNAL_DEST\n"
-        "USING (select * from src) AS DBT_INTERNAL_SOURCE\n"
-        "ON DBT_INTERNAL_DEST.`id` = DBT_INTERNAL_SOURCE.`id`\n"
-        "WHEN MATCHED THEN UPDATE SET *\n"
-        "WHEN NOT MATCHED THEN INSERT *"
-    )
-    sql = SparkAdapter.merge_into_sql(
-        rel, "s", ["id", "ds"], ["id", "ds", "v", "u"],
-        predicates=["DBT_INTERNAL_DEST.ds > current_date() - 7"],
-        exclude_columns=["u"],
-    )
-    assert ("ON (DBT_INTERNAL_DEST.`id` = DBT_INTERNAL_SOURCE.`id` AND "
-            "DBT_INTERNAL_DEST.`ds` = DBT_INTERNAL_SOURCE.`ds`) AND "
-            "(DBT_INTERNAL_DEST.ds > current_date() - 7\n)") in sql
-    assert ("UPDATE SET DBT_INTERNAL_DEST.`id` = DBT_INTERNAL_SOURCE.`id`, "
-            "DBT_INTERNAL_DEST.`ds` = DBT_INTERNAL_SOURCE.`ds`, "
-            "DBT_INTERNAL_DEST.`v` = DBT_INTERNAL_SOURCE.`v`") in sql
-    assert "`u` = " not in sql
-    sql = SparkAdapter.merge_into_sql(
-        rel, "s", ["id"], ["id", "v"], update_columns=["v"]
-    )
-    assert "UPDATE SET DBT_INTERNAL_DEST.`v` = DBT_INTERNAL_SOURCE.`v`\n" in sql
-
-
-def test_merge_strategy_dispatches_merge_into_on_delta(make_project, spark, monkeypatch):
-    """file_format: delta routes the second incremental run through
-    adapter.execute(MERGE INTO ...) instead of the parquet rewrite."""
-    files = {
-        "dbt_project.yml": "name: dl\nmodel-paths: [models]\nseed-paths: [seeds]\n",
-        "seeds/raw.csv": "id,v\n1,10\n2,20\n",
-        "models/inc.sql": (
-            "{{ config(materialized='incremental', unique_key='id', "
-            "incremental_strategy='merge', file_format='delta') }}\n"
-            "select id, v from {{ ref('raw') }}\n"
-            "{% if is_incremental() %} where id > 1 {% endif %}"
-        ),
-    }
-    runner = make_project(files, schema="t_delta")
-    assert runner.seed().ok
-    assert runner.run().ok  # first run = CTAS regardless of format
-    captured = {}
-    real_execute = runner.adapter.execute
-
-    def spy(sql, fetch=False):
-        if sql.startswith("MERGE INTO"):
-            captured["sql"] = sql
-            return "OK", None
-        return real_execute(sql, fetch=fetch)
-
-    monkeypatch.setattr(runner.adapter, "execute", spy)
-    res = runner.run(select="inc")
-    assert res.ok, [r.message for r in res.results]
-    assert captured["sql"].startswith("MERGE INTO t_delta.inc")
-    assert "WHEN NOT MATCHED THEN INSERT *" in captured["sql"]
-
-
 # ---------------------------------------------------------- microbatch
 _MB_FILES = {
     "dbt_project.yml": "name: mb\nmodel-paths: [models]\nseed-paths: [seeds]\n",
@@ -1073,6 +1005,49 @@ def test_microbatch_failed_windows_survive_catalog_restore(
     assert meta["sparkt.microbatch.failed"] == []
 
 
+def test_microbatch_run_state_survives_table_rewrite(
+    make_project, spark, monkeypatch
+):
+    """The run state read at the start of a run stays in the catalog
+    entry across the run's own rewrites: right after the first rewrite
+    of the healing run, the meta still holds the unhealed day-2 window
+    and the cleared completion flag, so a crash at that point loses
+    neither."""
+    runner = make_project(dict(_MB_BREAK_FILES), schema="t_mb_keep")
+    assert runner.seed().ok
+    assert not runner.run(event_time_end="2024-01-05 00:00:00").ok
+
+    from sparkt.runner import Runner
+
+    fixed = Runner(
+        runner.project.project_root, spark=spark,
+        cli_vars={"break_day2": False},
+        project_overrides={"schema": "t_mb_keep"},
+    )
+    adapter = fixed.adapter
+    real = adapter.create_table_as
+    seen = []
+
+    def spy(rel, *args, **kwargs):
+        real(rel, *args, **kwargs)
+        if rel.identifier == "mb_daily" and not seen:
+            seen.append(adapter.get_relation_meta(rel))
+
+    monkeypatch.setattr(adapter, "create_table_as", spy)
+    res = fixed.run(event_time_end="2024-01-06 00:00:00")
+    assert res.ok, [r.message for r in res.results]
+    assert seen == [{
+        "sparkt.microbatch.complete": False,
+        "sparkt.microbatch.failed": [
+            ["2024-01-02 00:00:00", "2024-01-03 00:00:00"]
+        ],
+    }]
+    assert _mb_meta(fixed, "t_mb_keep") == {
+        "sparkt.microbatch.complete": True,
+        "sparkt.microbatch.failed": [],
+    }
+
+
 def test_microbatch_full_refresh_validates_before_drop(
     make_project, spark
 ):
@@ -1196,54 +1171,94 @@ def test_microbatch_concurrent_backfill_fires_batch_events(
     assert all(d["data"]["status"] == "success" for d in done)
 
 
-def test_microbatch_replace_where_emission_on_delta(
-    make_project, spark, monkeypatch
-):
-    """file_format: delta routes the incremental window replace through
-    INSERT INTO ... REPLACE WHERE (file-level replace). No delta runtime
-    exists in this sandbox, so the golden statement pins the dispatch
-    layer unexecuted (VERDICT r5 ask #3)."""
-    files = dict(_MB_FILES)
-    files["models/mb_daily.sql"] = files["models/mb_daily.sql"].replace(
-        "lookback=1)", "lookback=1, file_format='delta')"
-    )
-    runner = make_project(files, schema="t_mb_delta")
-    assert runner.seed().ok
-    # first build appends batch-by-batch — no REPLACE WHERE yet
-    assert runner.run(event_time_end="2024-01-05 00:00:00").ok
+_FMT_SEED = (
+    "id,v,updated_at,ts\n"
+    "1,10,2024-01-01,2024-01-01 10:00:00\n"
+    "2,20,2024-01-01,2024-01-02 12:00:00\n"
+    "3,30,2024-01-01,2024-01-03 08:00:00\n"
+)
 
-    from sparkt.adapter import ExecuteResult
 
-    captured = []
-    real = runner.adapter.execute
+def _fmt_files(fmt):
+    ff = f", file_format='{fmt}'" if fmt else ""
+    return {
+        "dbt_project.yml": (
+            "name: fmt\nmodel-paths: [models]\nseed-paths: [seeds]\n"
+            "snapshot-paths: [snapshots]\n"
+        ),
+        "seeds/raw.csv": _FMT_SEED,
+        "models/inc.sql": (
+            "{{ config(materialized='incremental', unique_key='id', "
+            f"incremental_strategy='merge'{ff}) }}}}\n"
+            "select id, v from {{ ref('raw') }}"
+        ),
+        "models/stg.sql": (
+            "{{ config(materialized='table', event_time='ts') }}\n"
+            "select id, v, cast(ts as timestamp) as ts from {{ ref('raw') }}"
+        ),
+        "models/mb.sql": (
+            "{{ config(materialized='incremental', "
+            "incremental_strategy='microbatch', event_time='ts', "
+            f"batch_size='day', begin='2024-01-01', lookback=1{ff}) }}}}\n"
+            "select id, v, ts from {{ ref('stg') }}"
+        ),
+        "snapshots/snap.sql": (
+            "{% snapshot snap %}\n"
+            "{{ config(strategy='timestamp', unique_key='id', "
+            f"updated_at='updated_at'{ff}) }}}}\n"
+            "select id, v, updated_at from {{ ref('raw') }}\n"
+            "{% endsnapshot %}\n"
+        ),
+    }
 
-    def spy(sql, fetch=False):
-        if "REPLACE WHERE" in sql:
-            captured.append(sql)
-            return "OK", ExecuteResult()
-        return real(sql, fetch)
 
-    monkeypatch.setattr(runner.adapter, "execute", spy)
-    assert runner.run(event_time_end="2024-01-05 00:00:00").ok
-    # lookback=1 from end 01-05 → one batch [01-04, 01-05), replacing
-    # exactly its window
-    assert len(captured) == 1
-    assert captured[0].startswith(
-        "INSERT INTO t_mb_delta.mb_daily REPLACE WHERE "
-        "`ts` >= TIMESTAMP '2024-01-04 00:00:00' "
-        "AND `ts` < TIMESTAMP '2024-01-05 00:00:00' "
-    )
-    assert "SELECT * FROM (" in captured[0]
+def test_file_format_models_rebuild_through_parquet(make_project, spark):
+    """Every managed table is parquet, so a model's file_format is not
+    read: delta-configured merge, microbatch and snapshot models build
+    twice, and the second build (a rewrite of the parquet table) leaves
+    the same rows as the same models without file_format."""
+    import os
+
+    tables = {}
+    for fmt in (None, "delta"):
+        schema = f"t_fmt_{fmt or 'default'}"
+        runner = make_project(_fmt_files(fmt), schema=schema)
+        assert runner.seed().ok
+        assert runner.run(event_time_end="2024-01-04 00:00:00").ok
+        assert runner.snapshot().ok
+        with open(os.path.join(
+            runner.project.project_root, "seeds/raw.csv"
+        ), "w") as f:
+            f.write(
+                _FMT_SEED.replace(
+                    "2,20,2024-01-01", "2,25,2024-01-02"
+                ) + "4,40,2024-01-02,2024-01-04 09:00:00\n"
+            )
+        assert runner.seed().ok
+        res = runner.run(event_time_end="2024-01-05 00:00:00")
+        assert res.ok, [r.message for r in res.results]
+        res = runner.snapshot()
+        assert res.ok, [r.message for r in res.results]
+        tables[fmt] = {
+            t: sorted(map(tuple, spark.table(f"{schema}.{t}").collect()))
+            for t in ("inc", "mb", "snap")
+        }
+    assert tables["delta"] == tables[None]
+    # non-vacuous: the merge updated id 2, the microbatch window
+    # [01-04, 01-05) added id 4, the snapshot closed id 2's version
+    assert (2, 25) in tables[None]["inc"]
+    assert {r[0] for r in tables[None]["mb"]} == {1, 2, 3, 4}
+    assert len(tables[None]["snap"]) == 5
 
 
 def test_microbatch_marker_cleared_before_first_write(
     make_project, spark, monkeypatch
 ):
-    """Crash detection on writes that KEEP the catalog entry's meta (an
-    append, delta/iceberg REPLACE WHERE): the completion flag from the
-    previous green run must be cleared before the first batch write, or
-    a mid-run crash would leave it standing and recovery would never
-    fire."""
+    """Crash detection: every batch write keeps the catalog entry's
+    meta (an append leaves the entry alone, the CTAS swap carries the
+    meta over), so the completion flag from the previous green run must
+    be cleared before the first batch write, or a mid-run crash would
+    leave it standing and recovery would never fire."""
     runner = make_project(dict(_MB_FILES), schema="t_mb_unset")
     assert runner.seed().ok
     assert runner.run(event_time_end="2024-01-03 00:00:00").ok
@@ -1258,15 +1273,12 @@ def test_microbatch_marker_cleared_before_first_write(
         return real_meta(rel, **meta)
 
     monkeypatch.setattr(adapter, "set_relation_meta", meta_spy)
-    # every way a batch writes the target: the CTAS swap, an append,
-    # and the REPLACE WHERE statement
-    for name in ("create_table_as", "insert_into", "execute"):
-        def write_spy(target, *args, _real=getattr(adapter, name),
-                      **kwargs):
-            text = target if isinstance(target, str) else target.render()
-            if "mb_daily" in text and not text.startswith("SELECT"):
-                calls.append(("write", text))
-            return _real(target, *args, **kwargs)
+    # every way a batch writes the target: the CTAS swap and an append
+    for name in ("create_table_as", "insert_into"):
+        def write_spy(rel, *args, _real=getattr(adapter, name), **kwargs):
+            if rel.identifier == "mb_daily":
+                calls.append(("write", rel.render()))
+            return _real(rel, *args, **kwargs)
 
         monkeypatch.setattr(adapter, name, write_spy)
     assert runner.run(event_time_end="2024-01-05 00:00:00").ok

@@ -27,6 +27,11 @@ from a method so reached. The Jinja ``adapter`` object,
 ``RuntimeAdapterFacade``, reaches the adapter through such attribute
 calls. A name listed only in ``record.RECORDED_METHODS`` is a string
 and does not count.
+
+A last check keeps ``sparkt/record.py`` in step with the adapter: every
+name in ``RECORDED_METHODS`` and every public ``ReplayAdapter`` method
+(its own ``next_meta``/``remaining`` aside) must be a ``SparkAdapter``
+method, so a replay twin cannot outlive the method it serves.
 """
 
 from __future__ import annotations
@@ -220,3 +225,36 @@ def test_adapter_allowlist_is_current():
     assert set(ADAPTER_ALLOWED) <= unreached, sorted(
         set(ADAPTER_ALLOWED) - unreached
     )
+
+
+def _class_methods(tree: ast.Module, name: str) -> set[str]:
+    cls = next(
+        s for s in tree.body
+        if isinstance(s, ast.ClassDef) and s.name == name
+    )
+    return {
+        m.name for m in cls.body
+        if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+
+
+def test_replay_twins_have_adapter_methods():
+    """Every recorded method and every public ``ReplayAdapter`` method
+    stands in for a ``SparkAdapter`` method, so a replay twin cannot
+    outlive the adapter method it serves."""
+    adapter = _class_methods(
+        _parse(os.path.join(REPO, "sparkt", "adapter.py")), "SparkAdapter"
+    )
+    record = _parse(os.path.join(REPO, "sparkt", "record.py"))
+    recorded = next(
+        ast.literal_eval(s.value) for s in record.body
+        if isinstance(s, ast.Assign)
+        and [t.id for t in s.targets if isinstance(t, ast.Name)]
+        == ["RECORDED_METHODS"]
+    )
+    twins = {
+        m for m in _class_methods(record, "ReplayAdapter")
+        if not m.startswith("_")
+    } - {"next_meta", "remaining"}
+    assert sorted(set(recorded) - adapter) == []
+    assert sorted(twins - adapter) == []

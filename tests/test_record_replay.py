@@ -271,8 +271,8 @@ def test_replay_covers_tests_and_snapshots(make_project, spark, tmp_path):
 def test_replay_serves_sql_builders_and_relation_types(
     make_project, spark, tmp_path
 ):
-    """A bundle recorded on a delta-configured incremental merge run
-    replays: the pure MERGE-SQL builders are served locally and
+    """A bundle recorded on an incremental merge run replays: the
+    parquet rewrite's statements are served from the recording and
     relation types round-trip (review-found gaps)."""
     rec = str(tmp_path / "recording.jsonl")
     files = {
@@ -281,7 +281,7 @@ def test_replay_serves_sql_builders_and_relation_types(
         "models/a.sql": "select * from {{ ref('raw') }}",
         "models/m.sql": (
             "{{ config(materialized='incremental', unique_key='id', "
-            "incremental_strategy='merge', file_format='delta') }}\n"
+            "incremental_strategy='merge') }}\n"
             "select id, v from {{ ref('a') }}"
         ),
     }
@@ -289,32 +289,16 @@ def test_replay_serves_sql_builders_and_relation_types(
     assert runner.seed().ok
     assert runner.run().ok  # first build (CTAS)
 
-    from sparkt.adapter import ExecuteResult
     from sparkt.runner import Runner
 
     recording = Runner(
         runner.project.project_root, spark=spark,
         project_overrides={"schema": "t_rr_merge"}, record=rec,
     )
-    # the delta MERGE INTO statement can't execute on parquet: stub it
-    # at the INNER adapter so the recording captures the stubbed
-    # response (as a real delta warehouse would return success)
-    inner = recording.adapter._inner
-    real = inner.execute
-
-    def spy(sql, fetch=False):
-        if sql.startswith("MERGE INTO"):
-            return "OK", ExecuteResult()
-        return real(sql, fetch)
-
-    inner.execute = spy
-    try:
-        res = recording.run()
-    finally:
-        inner.execute = real
+    res = recording.run()
     assert res.ok, [r.message for r in res.results]
     m = next(r for r in res.results if r.unique_id == "model.rr.m")
-    assert "MERGE INTO" in m.message
+    assert "rewrite" in m.message
 
     replaying = Runner(
         runner.project.project_root, spark=None,
@@ -323,7 +307,7 @@ def test_replay_serves_sql_builders_and_relation_types(
     res2 = replaying.run()
     assert res2.ok, [r.message for r in res2.results]
     m2 = next(r for r in res2.results if r.unique_id == "model.rr.m")
-    assert "MERGE INTO" in m2.message
+    assert m2.message == m.message
     assert replaying.adapter.remaining() == 0
 
 

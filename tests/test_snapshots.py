@@ -167,52 +167,6 @@ def test_snapshot_without_flag_keeps_deleted_current(make_project, spark):
     assert current == {1, 2, 3}
 
 
-def test_snapshot_merge_dispatch_on_delta(make_project, spark, monkeypatch):
-    """file_format: delta routes the second snapshot run through the
-    reference-shaped change-type MERGE (adapter.snapshot_merge_sql)
-    instead of the whole-table rewrite; the staging select carries
-    insert/update tags and the merge keys on dbt_scd_id."""
-    files = {
-        "dbt_project.yml": (
-            "name: snapd\nmodel-paths: [models]\nseed-paths: [seeds]\n"
-            "snapshot-paths: [snapshots]\n"
-        ),
-        "seeds/people.csv": "id,name,updated_at\n1,ada,2024-01-01\n2,bob,2024-01-01\n",
-        "snapshots/people_snap.sql": """
-{% snapshot people_snap %}
-{{ config(strategy='timestamp', unique_key='id', updated_at='updated_at',
-          file_format='delta') }}
-select * from {{ ref('people') }}
-{% endsnapshot %}
-""",
-    }
-    runner = make_project(files, schema="t_snapd")
-    assert runner.seed().ok
-    assert runner.snapshot().ok  # first run = plain CTAS
-    captured = {}
-    real_execute = runner.adapter.execute
-
-    def spy(sql, fetch=False):
-        if sql.startswith("MERGE INTO"):
-            captured["sql"] = sql
-            return "OK", None
-        return real_execute(sql, fetch=fetch)
-
-    monkeypatch.setattr(runner.adapter, "execute", spy)
-    assert runner.snapshot().ok
-    sql = captured["sql"]
-    assert sql.startswith("MERGE INTO t_snapd.people_snap")
-    assert "ON DBT_INTERNAL_SOURCE.dbt_scd_id = DBT_INTERNAL_DEST.dbt_scd_id" in sql
-    assert "'insert' AS dbt_change_type" in sql
-    assert "'update' AS dbt_change_type" in sql
-    assert "'delete' AS dbt_change_type" not in sql  # hard-deletes off
-    assert "THEN UPDATE SET dbt_valid_to = DBT_INTERNAL_SOURCE.dbt_valid_to" in sql
-    assert "THEN INSERT (`id`, `name`, `updated_at`, `dbt_scd_id`" in sql
-    # the staging select must itself be valid Spark SQL (parse+analyze)
-    staging = sql.split("USING (", 1)[1].rsplit(") AS DBT_INTERNAL_SOURCE", 1)[0]
-    spark.sql(staging).schema  # raises if invalid
-
-
 def test_hard_deletes_new_record(make_project, spark):
     """hard_deletes: new_record (dbt 1.9): a vanished key closes its
     current row AND inserts a dbt_is_deleted=TRUE marker version;

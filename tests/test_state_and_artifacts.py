@@ -183,13 +183,12 @@ def test_clone(make_project, spark, tmp_path):
     assert spark.table("t_clone_dst.b").first()["s"] == 30
 
 
-def test_clone_emits_shallow_clone_on_delta(
-    make_project, spark, tmp_path, monkeypatch
+def test_clone_of_delta_configured_model_copies_with_ctas(
+    make_project, spark, tmp_path
 ):
-    """file_format: delta clones via CREATE OR REPLACE TABLE ...
-    SHALLOW CLONE (zero-copy, dbt-spark can_clone_table) instead of
-    CTAS. No delta runtime in this sandbox — the golden statement pins
-    the dispatch unexecuted (VERDICT r5 ask #3)."""
+    """A model's file_format is not read: a delta-configured table
+    clones through the same CTAS copy as any other, and the copy is a
+    plain table entry that the catalog restore can re-create."""
     files = dict(FILES)
     files["models/b.sql"] = (
         "{{ config(materialized='table', file_format='delta') }}\n"
@@ -206,29 +205,16 @@ def test_clone_emits_shallow_clone_on_delta(
         os.path.join(runner.project.target_dir, "manifest.json"),
         os.path.join(state_dir, "manifest.json"),
     )
-    from sparkt.adapter import ExecuteResult
     from sparkt.runner import Runner
 
     runner2 = Runner(
         runner.project.project_root, spark=spark,
         project_overrides={"schema": "t_clone_ddst"},
     )
-    captured = []
-    real = runner2.adapter.execute
-
-    def spy(sql, fetch=False):
-        if "SHALLOW CLONE" in sql:
-            captured.append(sql)
-            return "OK", ExecuteResult()
-        return real(sql, fetch)
-
-    monkeypatch.setattr(runner2.adapter, "execute", spy)
     cloned = runner2.clone(state=state_dir, select="b")
     assert cloned == ["t_clone_ddst.b"]
-    assert captured == [
-        "CREATE OR REPLACE TABLE t_clone_ddst.b "
-        "SHALLOW CLONE t_clone_dsrc.b"
-    ]
+    assert spark.table("t_clone_ddst.b").first()["s"] == 30
+    assert runner2.adapter._catalog["t_clone_ddst.b"]["kind"] == "table"
 
 
 def test_retry(make_project, spark):
