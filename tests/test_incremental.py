@@ -1179,14 +1179,9 @@ _FMT_SEED = (
 )
 
 
-def _fmt_files(fmt):
+def _fmt_files(fmt, models):
     ff = f", file_format='{fmt}'" if fmt else ""
-    return {
-        "dbt_project.yml": (
-            "name: fmt\nmodel-paths: [models]\nseed-paths: [seeds]\n"
-            "snapshot-paths: [snapshots]\n"
-        ),
-        "seeds/raw.csv": _FMT_SEED,
+    sql = {
         "models/inc.sql": (
             "{{ config(materialized='incremental', unique_key='id', "
             f"incremental_strategy='merge'{ff}) }}}}\n"
@@ -1202,30 +1197,27 @@ def _fmt_files(fmt):
             f"batch_size='day', begin='2024-01-01', lookback=1{ff}) }}}}\n"
             "select id, v, ts from {{ ref('stg') }}"
         ),
-        "snapshots/snap.sql": (
-            "{% snapshot snap %}\n"
-            "{{ config(strategy='timestamp', unique_key='id', "
-            f"updated_at='updated_at'{ff}) }}}}\n"
-            "select id, v, updated_at from {{ ref('raw') }}\n"
-            "{% endsnapshot %}\n"
-        ),
+    }
+    return {
+        "dbt_project.yml": "name: fmt\nmodel-paths: [models]\nseed-paths: [seeds]\n",
+        "seeds/raw.csv": _FMT_SEED,
+        **{path: sql[path] for path in models},
     }
 
 
-def test_file_format_models_rebuild_through_parquet(make_project, spark):
-    """Every managed table is parquet, so a model's file_format is not
-    read: delta-configured merge, microbatch and snapshot models build
-    twice, and the second build (a rewrite of the parquet table) leaves
-    the same rows as the same models without file_format."""
+def _rebuild_in_both_formats(make_project, spark, models, table):
+    """Build `models` with and without file_format='delta', change the
+    seed (id 2 updated, id 4 added), build again (a rewrite of the
+    parquet table) and return the rows of `table`, which must be the
+    same in both formats: a model's file_format is not read."""
     import os
 
-    tables = {}
+    rows = {}
     for fmt in (None, "delta"):
-        schema = f"t_fmt_{fmt or 'default'}"
-        runner = make_project(_fmt_files(fmt), schema=schema)
+        schema = f"t_fmt_{table}_{fmt or 'default'}"
+        runner = make_project(_fmt_files(fmt, models), schema=schema)
         assert runner.seed().ok
         assert runner.run(event_time_end="2024-01-04 00:00:00").ok
-        assert runner.snapshot().ok
         with open(os.path.join(
             runner.project.project_root, "seeds/raw.csv"
         ), "w") as f:
@@ -1237,18 +1229,37 @@ def test_file_format_models_rebuild_through_parquet(make_project, spark):
         assert runner.seed().ok
         res = runner.run(event_time_end="2024-01-05 00:00:00")
         assert res.ok, [r.message for r in res.results]
-        res = runner.snapshot()
-        assert res.ok, [r.message for r in res.results]
-        tables[fmt] = {
-            t: sorted(map(tuple, spark.table(f"{schema}.{t}").collect()))
-            for t in ("inc", "mb", "snap")
-        }
-    assert tables["delta"] == tables[None]
-    # non-vacuous: the merge updated id 2, the microbatch window
-    # [01-04, 01-05) added id 4, the snapshot closed id 2's version
-    assert (2, 25) in tables[None]["inc"]
-    assert {r[0] for r in tables[None]["mb"]} == {1, 2, 3, 4}
-    assert len(tables[None]["snap"]) == 5
+        rows[fmt] = sorted(
+            map(tuple, spark.table(f"{schema}.{table}").collect())
+        )
+    assert rows["delta"] == rows[None]
+    return rows[None]
+
+
+def test_delta_configured_merge_model_rebuilds_through_parquet(
+    make_project, spark
+):
+    """Every managed table is parquet, so a delta-configured merge
+    model's second run rewrites the table instead of issuing MERGE INTO
+    (which Spark rejects on a parquet table)."""
+    rows = _rebuild_in_both_formats(
+        make_project, spark, ["models/inc.sql"], "inc"
+    )
+    # non-vacuous: the merge updated id 2 and added id 4
+    assert rows == [(1, 10), (2, 25), (3, 30), (4, 40)]
+
+
+def test_delta_configured_microbatch_model_rebuilds_through_parquet(
+    make_project, spark
+):
+    """A delta-configured microbatch model's incremental run rewrites
+    the parquet table instead of issuing INSERT INTO ... REPLACE WHERE
+    (which Spark rejects on a v1 table)."""
+    rows = _rebuild_in_both_formats(
+        make_project, spark, ["models/stg.sql", "models/mb.sql"], "mb"
+    )
+    # non-vacuous: the window [01-04, 01-05) added id 4
+    assert {r[0] for r in rows} == {1, 2, 3, 4}
 
 
 def test_microbatch_marker_cleared_before_first_write(

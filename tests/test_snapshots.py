@@ -167,6 +167,58 @@ def test_snapshot_without_flag_keeps_deleted_current(make_project, spark):
     assert current == {1, 2, 3}
 
 
+def test_delta_configured_snapshot_rebuilds_through_parquet(
+    make_project, spark
+):
+    """Every managed table is parquet, so a delta-configured snapshot's
+    second run rewrites the table instead of issuing the change-type
+    MERGE (which Spark rejects on a parquet table), and leaves the same
+    rows as the same snapshot without file_format."""
+    seed = "id,name,updated_at\n1,ada,2024-01-01\n2,bob,2024-01-01\n"
+    rows = {}
+    for fmt in (None, "delta"):
+        ff = f", file_format='{fmt}'" if fmt else ""
+        files = {
+            "dbt_project.yml": (
+                "name: snapd\nseed-paths: [seeds]\n"
+                "snapshot-paths: [snapshots]\n"
+            ),
+            "seeds/people.csv": seed,
+            "snapshots/people_snap.sql": (
+                "{% snapshot people_snap %}\n"
+                "{{ config(strategy='timestamp', unique_key='id', "
+                f"updated_at='updated_at'{ff}) }}}}\n"
+                "select * from {{ ref('people') }}\n"
+                "{% endsnapshot %}\n"
+            ),
+        }
+        schema = f"t_snapd_{fmt or 'default'}"
+        runner = make_project(files, schema=schema)
+        assert runner.seed().ok
+        assert runner.snapshot().ok
+        with open(os.path.join(
+            runner.project.project_root, "seeds/people.csv"
+        ), "w") as f:
+            f.write(
+                seed.replace("2,bob,2024-01-01", "2,bea,2024-01-02")
+                + "3,cy,2024-01-02\n"
+            )
+        assert runner.seed().ok
+        res = runner.snapshot()
+        assert res.ok, [r.message for r in res.results]
+        rows[fmt] = sorted(
+            (r["id"], r["name"], r["dbt_valid_to"] is None)
+            for r in spark.table(f"{schema}.people_snap").collect()
+        )
+    assert rows["delta"] == rows[None]
+    # non-vacuous: id 2's old version is closed, its new one and id 3
+    # are current
+    assert rows[None] == [
+        (1, "ada", True), (2, "bea", True), (2, "bob", False),
+        (3, "cy", True),
+    ]
+
+
 def test_hard_deletes_new_record(make_project, spark):
     """hard_deletes: new_record (dbt 1.9): a vanished key closes its
     current row AND inserts a dbt_is_deleted=TRUE marker version;
